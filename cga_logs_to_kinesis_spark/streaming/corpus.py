@@ -115,10 +115,22 @@ def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def incremental_dedup_sink(store_dir: str, out_dir: str,
-                           fail_after_output_for: tuple[int, ...] = (),
-                           fail_after_all_writes_for:
-                           tuple[int, ...] = ()):
+def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as partition ``batch_id`` of the store at ``path``,
+    replacing that partition only (dynamic partition overwrite).
+
+    Every store write in this module goes through here, and it is
+    what makes the sinks exactly-once under foreachBatch's
+    at-least-once replay: a replayed batch overwrites its own
+    partition instead of appending a duplicate, and a compactor
+    rewrites its base partition without touching the others."""
+    (df.withColumn("batch_id", F.lit(batch_id))
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("batch_id").parquet(path))
+
+
+def incremental_dedup_sink(store_dir: str, out_dir: str):
     """foreachBatch twin of ``operators/dedup.py::dedup_incremental``:
     each arriving micro-batch is digested, anti-joined against the
     PERSISTED digest store (a parquet table that outlives the query —
@@ -144,20 +156,15 @@ def incremental_dedup_sink(store_dir: str, out_dir: str,
     test_incremental_dedup_crash_between_writes_is_exactly_once and
     ..._crash_after_last_write_is_exactly_once.
 
-    ``fail_after_output_for`` / ``fail_after_all_writes_for`` are the
-    fault-injection hooks for those tests (same philosophy as
-    streaming/faults.py): the listed batch ids raise
-    FatalDeliveryError at that point, once each.
+    Those tests inject the crash with ``streaming/faults.py::
+    crash_after``, which raises after the sink returns; the
+    between-writes case then deletes the batch's store partition,
+    which leaves the on-disk state of a crash before the store merge.
     """
     from cga_logs_to_kinesis_spark.operators.dedup import (
         incremental_dedup,
         normalized_text,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -178,32 +185,14 @@ def incremental_dedup_sink(store_dir: str, out_dir: str,
         # store merge); without the cut the second write would
         # recompute the anti-join.
         survivors = incremental_dedup(seen, digests).localCheckpoint()
-        writer_conf = {"partitionOverwriteMode": "dynamic"}
-        (survivors.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**writer_conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        if (batch_id in fail_after_output_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash between writes, batch {batch_id}")
-        (survivors.select("text_digest")
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**writer_conf)
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(survivors, out_dir, batch_id)
+        _write_batch(survivors.select("text_digest"), store_dir, batch_id)
 
     return process
 
 
 def minhash_incremental_sink(index_dir: str, shingle_dir: str,
-                             out_dir: str,
-                             fail_after_all_writes_for:
-                             tuple[int, ...] = ()):
+                             out_dir: str):
     """foreachBatch twin of ``dedup_minhash_incremental``: each crawl
     drop is shingled ONCE, scored against the PERSISTED band-bucket
     index (never re-banding the seen corpus — the property that makes
@@ -230,11 +219,6 @@ def minhash_incremental_sink(index_dir: str, shingle_dir: str,
         minhash_incremental_from_index,
         shingle_docs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -256,28 +240,14 @@ def minhash_incremental_sink(index_dir: str, shingle_dir: str,
                        .select("doc_id", "shingles"))
         report = minhash_incremental_from_index(idx, seen_sh, sh) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (banded_buckets(sh).withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(index_dir))
-        (sh.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(shingle_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(report, out_dir, batch_id)
+        _write_batch(banded_buckets(sh), index_dir, batch_id)
+        _write_batch(sh, shingle_dir, batch_id)
 
     return process
 
 
-def setjoin_index_sink(index_dir: str, sets_dir: str, out_dir: str,
-                       fail_after_all_writes_for:
-                       tuple[int, ...] = ()):
+def setjoin_index_sink(index_dir: str, sets_dir: str, out_dir: str):
     """foreachBatch twin of ``setjoin_incremental``: each crawl drop
     is fingerprinted ONCE, exact-joined against the PERSISTED prefix
     index (never re-shingling the seen corpus), then merged into the
@@ -300,11 +270,6 @@ def setjoin_index_sink(index_dir: str, sets_dir: str, out_dir: str,
         setjoin_incremental_from_index,
         shingle_fp_sets,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -331,21 +296,9 @@ def setjoin_index_sink(index_dir: str, sets_dir: str, out_dir: str,
                          .select("doc_id", "fps"))
         report = setjoin_incremental_from_index(idx, seen_sets, sets) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (prefix_entries(sets).withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(index_dir))
-        (sets.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(sets_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(report, out_dir, batch_id)
+        _write_batch(prefix_entries(sets), index_dir, batch_id)
+        _write_batch(sets, sets_dir, batch_id)
 
     return process
 
@@ -674,8 +627,7 @@ def stream_embeddings(spark: SparkSession, src_dir: str) -> DataFrame:
         "vec_id long, embedding array<float>, label int").parquet(src_dir)
 
 
-def ann_index_sink(index_dir: str, vector_dir: str, out_dir: str,
-                   fail_after_all_writes_for: tuple[int, ...] = ()):
+def ann_index_sink(index_dir: str, vector_dir: str, out_dir: str):
     """foreachBatch twin of ``ann_incremental``: each arriving vector
     batch is bucketed ONCE, its top neighbors scored against the
     PERSISTED LSH bucket index + vector store (never re-bucketing the
@@ -696,11 +648,6 @@ def ann_index_sink(index_dir: str, vector_dir: str, out_dir: str,
         ann_incremental_from_index,
         lsh_table_buckets_vec,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -721,24 +668,12 @@ def ann_index_sink(index_dir: str, vector_dir: str, out_dir: str,
                     .select("vec_id", "embedding"))
         report = ann_incremental_from_index(idx, vecs, batch) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (batch.select(
+        _write_batch(report, out_dir, batch_id)
+        buckets = batch.select(
             "vec_id",
             F.explode(lsh_table_buckets_vec("embedding")).alias("bucket"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(index_dir))
-        (batch.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(vector_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(buckets, index_dir, batch_id)
+        _write_batch(batch, vector_dir, batch_id)
 
     return process
 
@@ -750,8 +685,7 @@ def stream_media(spark: SparkSession, src_dir: str) -> DataFrame:
         "doc_id long, payload binary").parquet(src_dir)
 
 
-def image_index_sink(index_dir: str, fps_dir: str, out_dir: str,
-                     fail_after_all_writes_for: tuple[int, ...] = ()):
+def image_index_sink(index_dir: str, fps_dir: str, out_dir: str):
     """foreachBatch twin of ``image_dedup_incremental``: each arriving
     media batch is decoded + dHashed ONCE (the expensive Python stage
     runs on exactly the new images), banded against the PERSISTED band
@@ -772,11 +706,6 @@ def image_index_sink(index_dir: str, fps_dir: str, out_dir: str,
         image_dhash,
         image_incremental_from_index,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -800,22 +729,9 @@ def image_index_sink(index_dir: str, fps_dir: str, out_dir: str,
                                 "band2", "band3"))
         report = image_incremental_from_index(idx, seen_fps, fps) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (image_band_entries(fps)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(index_dir))
-        (fps.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(fps_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(report, out_dir, batch_id)
+        _write_batch(image_band_entries(fps), index_dir, batch_id)
+        _write_batch(fps, fps_dir, batch_id)
 
     return process
 
@@ -842,9 +758,7 @@ def seed_semdedup_centroids(emb: DataFrame, cents_dir: str) -> int:
 
 
 def semdedup_assign_sink(cents_dir: str, assign_dir: str,
-                         vector_dir: str, out_dir: str,
-                         fail_after_all_writes_for:
-                         tuple[int, ...] = ()):
+                         vector_dir: str, out_dir: str):
     """foreachBatch twin of ``semdedup_incremental``: each arriving
     vector batch is assigned ONCE under the persisted centroid
     artifact (``seed_semdedup_centroids`` — read fresh per batch, K
@@ -876,11 +790,6 @@ def semdedup_assign_sink(cents_dir: str, assign_dir: str,
         semdedup_assign_with_cents,
         semdedup_incremental_from_assign,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -908,21 +817,9 @@ def semdedup_assign_sink(cents_dir: str, assign_dir: str,
         report = semdedup_incremental_from_assign(
             seen_assign, seen_vecs, batch_assign, batch) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (batch_assign.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(assign_dir))
-        (batch.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(vector_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(report, out_dir, batch_id)
+        _write_batch(batch_assign, assign_dir, batch_id)
+        _write_batch(batch, vector_dir, batch_id)
 
     return process
 
@@ -1005,11 +902,8 @@ def _compact_distinct_store(spark: SparkSession, store_dir: str,
     # checkpoint closes the self-read hazard, not concurrent appends.
     merged = (base.unionByName(old).distinct()
               .coalesce(files_per_partition)
-              .withColumn("batch_id", F.lit(-1))
               .localCheckpoint())
-    (merged.write.mode("overwrite")
-     .options(partitionOverwriteMode="dynamic")
-     .partitionBy("batch_id").parquet(store_dir))
+    _write_batch(merged, store_dir, -1)
     # cleanup AFTER the base partition is durable; a crash here only
     # leaves harmless duplicates (see docstring)
     import os
@@ -1044,8 +938,7 @@ def stream_documents_jsonl_audit(spark: SparkSession, path: str,
     return reader.json(path)
 
 
-def ingest_audit_sink(store_dir: str,
-                      fail_after_write_for: tuple[int, ...] = ()):
+def ingest_audit_sink(store_dir: str):
     """foreachBatch twin of ``q_jsonl_ingest_report``: each arriving
     micro-batch folds to per-shard PARTIAL audit rows (the same
     ``shard_audit_aggs`` expressions as the batch report — parity by
@@ -1070,25 +963,12 @@ def ingest_audit_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.ingest_audit import (
         shard_audit_aggs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         report = (batch_df
                   .groupBy(F.col("shard").cast("bigint").alias("shard"))
                   .agg(*shard_audit_aggs()))
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(report, store_dir, batch_id)
 
     return process
 
@@ -1120,9 +1000,7 @@ def ingest_audit_report_from_store(spark: SparkSession,
             .orderBy("shard"))
 
 
-def components_incremental_sink(labels_dir: str,
-                                fail_after_write_for:
-                                tuple[int, ...] = ()):
+def components_incremental_sink(labels_dir: str):
     """foreachBatch twin of ``operators/dedup.py::connected_components``
     — near-dup clusters maintained INCREMENTALLY as edge batches arrive
     (each crawl drop's verified LSH pairs), completing the incremental
@@ -1160,11 +1038,6 @@ def components_incremental_sink(labels_dir: str,
     from cga_logs_to_kinesis_spark.operators.dedup import (
         connected_components,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1185,15 +1058,7 @@ def components_incremental_sink(labels_dir: str,
                             F.col("doc").alias("doc_b")))
             edges = edges.unionByName(star)
         labels = connected_components(edges)
-        (labels.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(labels_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(labels, labels_dir, batch_id)
 
     return process
 
@@ -1240,8 +1105,7 @@ def stream_lineitem(spark: SparkSession, src_dir: str,
     return reader.parquet(src_dir)
 
 
-def table_profile_sink(partials_dir: str, values_dir: str,
-                       fail_after_write_for: tuple[int, ...] = ()):
+def table_profile_sink(partials_dir: str, values_dir: str):
     """foreachBatch twin of ``operators/ingest_audit.py::
     q_table_profile``: each arriving micro-batch writes (1) its
     per-column profile PARTIALS (the same ``profile_partials``
@@ -1272,26 +1136,11 @@ def table_profile_sink(partials_dir: str, values_dir: str,
         profile_partials,
         profile_value_pairs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import FatalDeliveryError
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        (profile_partials(batch_df)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(partials_dir))
-        (profile_value_pairs(batch_df).distinct()
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(values_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(profile_partials(batch_df), partials_dir, batch_id)
+        _write_batch(profile_value_pairs(batch_df).distinct(),
+                     values_dir, batch_id)
 
     return process
 
@@ -1321,8 +1170,7 @@ def table_profile_report_from_store(spark: SparkSession,
 # Streaming heavy hitters: Misra-Gries summaries folded across batches
 # ---------------------------------------------------------------------------
 
-def heavy_hitters_sink(store_dir: str,
-                       fail_after_write_for: tuple[int, ...] = ()):
+def heavy_hitters_sink(store_dir: str):
     """foreachBatch twin of ``operators/sketches.py::q_heavy_hitters``
     — frequent-token tracking over an unbounded document stream with
     O(K) state per partition and NO cross-batch reads at all.
@@ -1356,24 +1204,11 @@ def heavy_hitters_sink(store_dir: str,
         _mg_partitions,
         tokenize_docs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         summary = tokenize_docs(batch_df).mapInPandas(
             _mg_partitions, MG_SUMMARY_SCHEMA)
-        (summary.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(summary, store_dir, batch_id)
 
     return process
 
@@ -1480,11 +1315,8 @@ def compact_heavy_hitters_store(spark: SparkSession, store_dir: str,
     # and (via the cleanup below) removed state.
     merged = (tokens.unionByName(total)
               .coalesce(files_per_partition)
-              .withColumn("batch_id", F.lit(new_bid))
               .localCheckpoint())
-    (merged.write.mode("overwrite")
-     .options(partitionOverwriteMode="dynamic")
-     .partitionBy("batch_id").parquet(store_dir))
+    _write_batch(merged, store_dir, new_bid)
     # cleanup AFTER the new base is durable; stale dirs are ignored
     # by _effective_mg_summaries if this is interrupted
     _cleanup_stale_mg_dirs(store_dir, new_bid)
@@ -1528,8 +1360,7 @@ def heavy_hitters_from_store(spark: SparkSession,
 # Streaming Bloom blocklist: contamination fingerprints as a stream
 # ---------------------------------------------------------------------------
 
-def bloom_positions_sink(store_dir: str,
-                         fail_after_write_for: tuple[int, ...] = ()):
+def bloom_positions_sink(store_dir: str):
     """foreachBatch twin of the blocklist half of
     ``operators/sketches.py::q_bloom_decontaminate``: benchmark /
     contamination documents ARRIVE as a stream (eval sets get
@@ -1552,11 +1383,6 @@ def bloom_positions_sink(store_dir: str,
         _fp_col,
         _positions_expr,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         pos = (batch_df.select(_fp_col().alias("fp"))
@@ -1564,15 +1390,7 @@ def bloom_positions_sink(store_dir: str,
                .select(F.explode(F.expr(_positions_expr("fp")))
                        .alias("pos"))
                .distinct())
-        (pos.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(pos, store_dir, batch_id)
 
     return process
 
@@ -1740,8 +1558,7 @@ def _funnel_fold_user(pdf):
     return pd.DataFrame(out)
 
 
-def funnel_state_sink(store_dir: str,
-                      fail_after_write_for: tuple[int, ...] = ()):
+def funnel_state_sink(store_dir: str):
     """foreachBatch sink over the projected funnel feed
     (``funnel_feed`` columns: user_id, event_type, us): maintain the
     per-user candidate/anchor state and persist each post-batch state
@@ -1752,9 +1569,6 @@ def funnel_state_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.temporal import (
         FUNNEL_STAGES,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
     stage_idx = F.lit(None).cast("int")
     for i, s in enumerate(reversed(FUNNEL_STAGES),
@@ -1762,8 +1576,6 @@ def funnel_state_sink(store_dir: str,
         stage_idx = F.when(
             F.col("event_type") == s,
             F.lit(len(FUNNEL_STAGES) - i)).otherwise(stage_idx)
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1787,15 +1599,7 @@ def funnel_state_sink(store_dir: str,
                 merged = partial.select(prev.columns).unionByName(prev)
         state = (merged.groupBy("user_id")
                  .applyInPandas(_funnel_fold_user, FUNNEL_STATE_SCHEMA))
-        (state.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(state, store_dir, batch_id)
 
     return process
 
@@ -1863,8 +1667,7 @@ def event_funnel_from_store(spark: SparkSession,
 # are never wrong, merely early.
 
 def ivf_index_sink(assign_dir: str, code_dir: str, vector_dir: str,
-                   cents: DataFrame,
-                   fail_after_all_writes_for: tuple[int, ...] = ()):
+                   cents: DataFrame):
     """foreachBatch sink persisting the IVF+SQ8 index for
     :func:`cosine_topk_from_ivf_store`.  ``cents`` is the fixed
     centroid table (centroid_id, cent)."""
@@ -1872,31 +1675,13 @@ def ivf_index_sink(assign_dir: str, code_dir: str, vector_dir: str,
         _nearest_clusters,
         sq8_encode,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select("vec_id", "embedding").localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (_nearest_clusters(batch, cents, "cand_id", 1)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(assign_dir))
-        (sq8_encode(batch, "cand_id")
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(code_dir))
-        (batch.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(vector_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(_nearest_clusters(batch, cents, "cand_id", 1),
+                     assign_dir, batch_id)
+        _write_batch(sq8_encode(batch, "cand_id"), code_dir, batch_id)
+        _write_batch(batch, vector_dir, batch_id)
 
     return process
 
@@ -1943,32 +1728,18 @@ def cosine_topk_from_ivf_store(spark: SparkSession, assign_dir: str,
 # starts shipping mojibake is visible in the fold as soon as its
 # batch lands.
 
-def encoding_anomaly_sink(store_dir: str,
-                          fail_after_write_for: tuple[int, ...] = ()):
+def encoding_anomaly_sink(store_dir: str):
     """foreachBatch twin of ``q_encoding_anomaly_report`` — per-batch
     per-source partial anomaly counts appended batch_id-keyed."""
     from cga_logs_to_kinesis_spark.operators.ingest_audit import (
         encoding_anomaly_aggs,
         encoding_per_doc,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         report = (encoding_per_doc(batch_df)
                   .groupBy("source").agg(*encoding_anomaly_aggs()))
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(report, store_dir, batch_id)
 
     return process
 
@@ -1998,8 +1769,7 @@ def encoding_anomaly_report_from_store(spark: SparkSession,
             .orderBy("source"))
 
 
-def script_mixing_sink(store_dir: str,
-                       fail_after_write_for: tuple[int, ...] = ()):
+def script_mixing_sink(store_dir: str):
     """foreachBatch twin of ``q_script_mixing_report`` — the
     encoding_anomaly_sink posture verbatim: per-batch per-source
     partial script counts appended batch_id-keyed (every aggregate a
@@ -2011,24 +1781,11 @@ def script_mixing_sink(store_dir: str,
         script_counts_per_doc,
         script_mixing_aggs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         report = (script_counts_per_doc(batch_df)
                   .groupBy("source").agg(*script_mixing_aggs()))
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(report, store_dir, batch_id)
 
     return process
 
@@ -2076,31 +1833,16 @@ def script_mixing_report_from_store(spark: SparkSession,
 # a crash between base write and cleanup can never double-count
 # (_effective_mg_summaries' argument, reused verbatim).
 
-def skew_freq_sink(store_dir: str,
-                   fail_after_write_for: tuple[int, ...] = ()):
+def skew_freq_sink(store_dir: str):
     """foreachBatch sink over pre-projected (key_col, k) key-value
     batches (operators/ingest_audit.py::skew_kv rows): per-batch
     exact frequency partials appended batch_id-keyed.  The sink reads
     nothing across batches; per-batch work is one partial-agg groupBy
     of the batch."""
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.groupBy("key_col", "k")
-         .agg(F.count("*").alias("f"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(batch_df.groupBy("key_col", "k")
+                     .agg(F.count("*").alias("f")), store_dir, batch_id)
 
     return process
 
@@ -2154,11 +1896,8 @@ def _compact_mergeable_store(spark: SparkSession, store_dir: str,
     new_bid = -(max_folded + 2)
     merged = (fold(to_fold.groupBy(*group_cols))
               .coalesce(files_per_partition)
-              .withColumn("batch_id", F.lit(new_bid))
               .localCheckpoint())      # self-read: old base is input
-    (merged.write.mode("overwrite")
-     .options(partitionOverwriteMode="dynamic")
-     .partitionBy("batch_id").parquet(store_dir))
+    _write_batch(merged, store_dir, new_bid)
     _cleanup_stale_mg_dirs(store_dir, new_bid)
     return n_folded
 
@@ -2270,8 +2009,7 @@ def salted_join_plan_from_store(spark: SparkSession,
 # flood, char collapse, source churn) is visible as soon as its
 # tranche lands, with no corpus re-scan.
 
-def corpus_drift_sink(sum_dir: str, values_dir: str, max_doc_id: int,
-                      fail_after_write_for: tuple[int, ...] = ()):
+def corpus_drift_sink(sum_dir: str, values_dir: str, max_doc_id: int):
     """foreachBatch sink over document batches: per-batch per-decile
     drift partials, decile divisor pinned to ``max_doc_id`` (the
     corpus-wide snapshot the batch query reads off `documents`).
@@ -2282,43 +2020,28 @@ def corpus_drift_sink(sum_dir: str, values_dir: str, max_doc_id: int,
     from cga_logs_to_kinesis_spark.operators.ingest_audit import (
         drift_per_doc,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         pd = drift_per_doc(batch_df, max_doc_id).localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (pd.groupBy("decile")
-         .agg(F.count("*").alias("n_docs"),
-              F.sum("is_blank").alias("blank_docs"),
-              F.sum("chars").alias("total_chars"),
-              # cast the long DIRECTLY to decimal — the exact same
-              # conversion path as the batch query's davg (a double
-              # intermediate is exact only below 2^53, so sharing the
-              # cast chain, not just the target type, is what makes
-              # the folded avg bit-identical by construction)
-              F.sum(F.col("chars").cast(_DEC))
-              .cast(_DEC).alias("sum_chars_dec"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(sum_dir))
+        sums = pd.groupBy("decile").agg(
+            F.count("*").alias("n_docs"),
+            F.sum("is_blank").alias("blank_docs"),
+            F.sum("chars").alias("total_chars"),
+            # cast the long DIRECTLY to decimal — the exact same
+            # conversion path as the batch query's davg (a double
+            # intermediate is exact only below 2^53, so sharing the
+            # cast chain, not just the target type, is what makes
+            # the folded avg bit-identical by construction)
+            F.sum(F.col("chars").cast(_DEC))
+            .cast(_DEC).alias("sum_chars_dec"))
+        _write_batch(sums, sum_dir, batch_id)
         vals = None
         for col in ("source", "lang"):
             part = (pd.select("decile", F.lit(col).alias("col"),
                               F.col(col).alias("val"))
                     .filter(F.col("val").isNotNull()).distinct())
             vals = part if vals is None else vals.unionByName(part)
-        (vals.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(values_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(vals, values_dir, batch_id)
 
     return process
 
@@ -2407,7 +2130,6 @@ def compact_corpus_drift_values(spark: SparkSession, values_dir: str,
 # watermark-base compactor discipline applies.
 
 def line_df_sink(store_dir: str,
-                 fail_after_write_for: tuple[int, ...] = (),
                  seen_dir: str | None = None):
     """foreachBatch sink over document batches: per-batch
     (fp, line, n_docs) partials appended batch_id-keyed.  The sink
@@ -2429,11 +2151,6 @@ def line_df_sink(store_dir: str,
         LINE_MIN_CHARS,
         line_flat,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -2447,25 +2164,14 @@ def line_df_sink(store_dir: str,
                     "doc_id", "left_anti")
             # fresh docs feed the fold AND the seen-store write
             docs = docs.localCheckpoint()
-        flat = line_flat(docs)
-        (flat.filter(F.length("line") >= LINE_MIN_CHARS)
-         .select("fp", "line", "doc_id").distinct()
-         .groupBy("fp", "line").agg(F.count("*").alias("n_docs"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
+        line_docs = (line_flat(docs)
+                     .filter(F.length("line") >= LINE_MIN_CHARS)
+                     .select("fp", "line", "doc_id").distinct())
+        _write_batch(line_docs.groupBy("fp", "line")
+                     .agg(F.count("*").alias("n_docs")),
+                     store_dir, batch_id)
         if seen_dir is not None:
-            (docs.select("doc_id")
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .options(partitionOverwriteMode="dynamic")
-             .partitionBy("batch_id").parquet(seen_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+            _write_batch(docs.select("doc_id"), seen_dir, batch_id)
 
     return process
 
@@ -2571,8 +2277,7 @@ def compact_line_df_store(spark: SparkSession, store_dir: str,
         _sum_fold("n_docs"), files_per_partition)
 
 
-def line_source_sink(store_dir: str,
-                     fail_after_write_for: tuple[int, ...] = ()):
+def line_source_sink(store_dir: str):
     """foreachBatch sink for the ratio gate's second store: per-batch
     (source, fp) line counts — ALL lines, no length filter, because
     the ratio's denominator is a source's total line volume.  Counts
@@ -2581,25 +2286,11 @@ def line_source_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.line_dedup import (
         line_flat,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         flat = line_flat(batch_df, "source")
-        (flat.groupBy("source", "fp")
-         .agg(F.count("*").alias("n_lines"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(flat.groupBy("source", "fp")
+                     .agg(F.count("*").alias("n_lines")), store_dir, batch_id)
 
     return process
 
@@ -2666,8 +2357,7 @@ def compact_line_source_store(spark: SparkSession, store_dir: str,
 # |distinct (source, token)| — vocabulary-sized, the same envelope as
 # the prune/stop-token models; the watermark-base compactor applies.
 
-def token_count_sink(store_dir: str,
-                     fail_after_write_for: tuple[int, ...] = ()):
+def token_count_sink(store_dir: str):
     """foreachBatch sink over document batches: per-batch
     (source, tok, cnt) partials appended batch_id-keyed.  Per-batch
     work is the shared width-gated tokenize (source_tokens — the
@@ -2675,24 +2365,11 @@ def token_count_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.ingest_audit import (
         source_tokens,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        (source_tokens(batch_df)
-         .groupBy("source", "tok").agg(F.count("*").alias("cnt"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(source_tokens(batch_df)
+                     .groupBy("source", "tok").agg(F.count("*").alias("cnt")),
+                     store_dir, batch_id)
 
     return process
 
@@ -2787,8 +2464,7 @@ def mixture_from_store(spark: SparkSession,
 # (surprisal_from_counts' left joins) — the generalization a
 # continuously-fitted LM exists for.
 
-def bigram_count_sink(store_dir: str,
-                      fail_after_write_for: tuple[int, ...] = ()):
+def bigram_count_sink(store_dir: str):
     """foreachBatch sink over document batches: per-batch
     (prev, w, cnt) bigram-count partials appended batch_id-keyed.
     Per-batch work is the batch query's exact bigram front
@@ -2797,24 +2473,11 @@ def bigram_count_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.lm_quality import (
         doc_bigrams,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        (doc_bigrams(batch_df, checkpoint=False)
-         .groupBy("prev", "w").agg(F.count("*").alias("cnt"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(doc_bigrams(batch_df, checkpoint=False)
+                     .groupBy("prev", "w").agg(F.count("*").alias("cnt")),
+                     store_dir, batch_id)
 
     return process
 
@@ -2874,8 +2537,7 @@ def compact_bigram_count_store(spark: SparkSession, store_dir: str,
 # exactly why this classifier family scales to crawls (fastText's
 # argument).  The watermark-base compactor applies unchanged.
 
-def class_count_sink(store_dir: str,
-                     fail_after_write_for: tuple[int, ...] = ()):
+def class_count_sink(store_dir: str):
     """foreachBatch sink over document batches: per-batch
     (bucket, n_pos, n_neg) class-count partials, batch_id-keyed.
     Per-batch work is the batch trainer's exact front
@@ -2883,23 +2545,9 @@ def class_count_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.lm_quality import (
         _qclf_class_counts,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        (_qclf_class_counts(batch_df)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(_qclf_class_counts(batch_df), store_dir, batch_id)
 
     return process
 
@@ -2968,30 +2616,15 @@ def compact_class_count_store(spark: SparkSession, store_dir: str,
 # parity case).  State: |vocabulary| rows per batch partial and for
 # the vocab artifact, n_merges rows for the merge table.
 
-def bpe_vocab_sink(freq_dir: str,
-                   fail_after_write_for: tuple[int, ...] = ()):
+def bpe_vocab_sink(freq_dir: str):
     """foreachBatch sink over document batches: per-batch (w, freq)
     word-frequency partials appended batch_id-keyed.  Per-batch work
     is the batch fit's exact front (``word_freqs``) — one partial-agg
     groupBy to the batch's distinct words."""
     from cga_logs_to_kinesis_spark.operators.bpe import word_freqs
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        (word_freqs(batch_df)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(freq_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(word_freqs(batch_df), freq_dir, batch_id)
 
     return process
 
@@ -3133,38 +2766,21 @@ def compact_bpe_freq_store(spark: SparkSession, freq_dir: str,
 # sink reads nothing across batches (flat per-batch work, measured);
 # state is linear in distinct fingerprints — the band-index envelope.
 
-def novelty_sink(fp_dir: str, doc_dir: str,
-                 fail_after_write_for: tuple[int, ...] = ()):
+def novelty_sink(fp_dir: str, doc_dir: str):
     """foreachBatch sink over document batches: per-batch (fp ->
     min doc_id) partials + per-doc distinct-fingerprint counts."""
     from cga_logs_to_kinesis_spark.operators.dedup import (
         char_shingle_docs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sh = char_shingle_docs(batch_df).localCheckpoint()
         pairs = sh.select("doc_id", F.explode("shingles").alias("fp"))
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (pairs.groupBy("fp")
-         .agg(F.min("doc_id").alias("first_doc"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(fp_dir))
-        (sh.select("doc_id", F.size("shingles").cast("long")
-                   .alias("n_ngrams"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(doc_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(pairs.groupBy("fp")
+                     .agg(F.min("doc_id").alias("first_doc")),
+                     fp_dir, batch_id)
+        _write_batch(sh.select("doc_id", F.size("shingles").cast("long")
+                               .alias("n_ngrams")), doc_dir, batch_id)
 
     return process
 
@@ -3193,11 +2809,8 @@ def compact_novelty_store(spark: SparkSession, fp_dir: str,
     base = (to_fold.groupBy("fp")
             .agg(F.min("first_doc").alias("first_doc"))
             .coalesce(files_per_partition)
-            .withColumn("batch_id", F.lit(-1))
             .localCheckpoint())          # self-read: old base is input
-    (base.write.mode("overwrite")
-     .options(partitionOverwriteMode="dynamic")
-     .partitionBy("batch_id").parquet(fp_dir))
+    _write_batch(base, fp_dir, -1)
     for name in os.listdir(fp_dir):
         if not name.startswith("batch_id="):
             continue
@@ -3527,30 +3140,17 @@ STORE_FAMILIES: tuple[StoreFamily, ...] = (
 # single-shot batch sketch by construction (pinned by test).
 
 def hll_distinct_sink(store_dir: str, key_col: str = "lang",
-                      value_col: str = "doc_id", lg_k: int = 12,
-                      fail_after_write_for: tuple[int, ...] = ()):
+                      value_col: str = "doc_id", lg_k: int = 12):
     """foreachBatch sink: per-batch per-key HLL sketches of
     ``value_col``, appended batch_id-keyed.  State per (batch, key)
     is one ~2^lg_k-register binary — independent of batch size."""
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
-
-    already_failed: set[int] = set()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.filter(F.col(key_col).isNotNull())
-         .groupBy(key_col)
-         .agg(F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sk"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        sketches = (batch_df.filter(F.col(key_col).isNotNull())
+                    .groupBy(key_col)
+                    .agg(F.hll_sketch_agg(value_col, F.lit(lg_k))
+                         .alias("sk")))
+        _write_batch(sketches, store_dir, batch_id)
 
     return process
 

@@ -35,7 +35,13 @@ def envelope_projection(lines: DataFrame, origin: str) -> DataFrame:
 
     Ingest-time semantics per reference main.go:331: `timestamp` is the
     processing wall clock, not anything parsed from the line.
+    ``source_instance`` and ``partition_key`` are the line's file path:
+    the frame's `path` column if it has one (the tailed pipeline reads
+    spool chunks and puts the watched file's path there), else
+    ``input_file_name()``.
     """
+    path = (F.col("path") if "path" in lines.columns
+            else F.input_file_name())
     ts_ns = (F.unix_micros(F.current_timestamp()) * 1000).alias("timestamp")
     return lines.select(
         F.lit(origin).alias("origin"),
@@ -47,9 +53,9 @@ def envelope_projection(lines: DataFrame, origin: str) -> DataFrame:
             (F.unix_micros(F.current_timestamp()) * 1000).alias("timestamp"),
             F.lit(None).cast("string").alias("app_id"),
             F.lit(SOURCE_TYPE).alias("source_type"),
-            F.input_file_name().alias("source_instance"),
+            path.alias("source_instance"),
         ).alias("log_message"),
-        F.input_file_name().alias("partition_key"),
+        path.alias("partition_key"),
     )
 
 

@@ -1,4 +1,4 @@
-"""Fault-injection and inspection transports.
+"""Fault-injection and inspection transports, plus a sink crash wrapper.
 
 The reference's only test affordance is the `logProducer` stub sink for
 manual runs (reference main.go:349-369); these transports are its
@@ -6,12 +6,14 @@ systematic equivalent: deterministic fault schedules reproducing the
 PutRecords partial-failure and whole-request-error shapes
 (kinesis.go:463-474), plus a filesystem transport whose output the
 driver can inspect.  They live in the package (not tests/) so Spark
-workers can unpickle them.
+workers can unpickle them.  :func:`crash_after` injects the matching
+fault into any ``foreachBatch`` store sink (streaming/corpus.py).
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Callable, Iterable
 
 from cga_logs_to_kinesis_spark.streaming.sink import (
     FatalDeliveryError,
@@ -152,3 +154,23 @@ class FirehoseFakeTransport(Transport):
                     f.write(b)
                     f.write(b"\n")
         return failed
+
+
+def crash_after(process: Callable, batch_ids: Iterable[int]) -> Callable:
+    """Wrap a ``foreachBatch`` function so that each id in
+    ``batch_ids`` raises FatalDeliveryError ONCE, after ``process``
+    has returned for it: a crash after the sink's last write and
+    before the checkpoint commit, foreachBatch's at-least-once window.
+    Other ids pass through, and the replay of a crashed id runs
+    ``process`` again and succeeds — so one wrapped sink serves both
+    the crashing run and the restart that replays the batch."""
+    pending = set(batch_ids)
+
+    def crashing(batch_df, batch_id: int) -> None:
+        process(batch_df, batch_id)
+        if batch_id in pending:
+            pending.discard(batch_id)
+            raise FatalDeliveryError(
+                f"injected crash after batch {batch_id}")
+
+    return crashing

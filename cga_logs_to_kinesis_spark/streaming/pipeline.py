@@ -21,9 +21,9 @@ TailFollower` bridge (§7.4.1 option b) in front of this same pipeline.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from cga_logs_to_kinesis_spark.streaming.envelope import (
@@ -57,15 +57,23 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig,
                    sink_cfg: SinkConfig | None = None,
                    ) -> tuple[StreamingQuery, DeliveryStats]:
     """Assemble and start the streaming query. Returns (query, stats)."""
-    sink_cfg = sink_cfg or SinkConfig()
-    stats = DeliveryStats()
+    return _start(cfg, _read_lines(spark, cfg), transport, sink_cfg)
 
+
+def _read_lines(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     reader = (spark.readStream.format("text")
               .option("pathGlobFilter", cfg.glob))
     if cfg.max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger",
                                cfg.max_files_per_trigger)
-    lines = reader.load(cfg.watch_dir)
+    return reader.load(cfg.watch_dir)
+
+
+def _start(cfg: PipelineConfig, lines: DataFrame, transport: Transport,
+           sink_cfg: SinkConfig | None,
+           ) -> tuple[StreamingQuery, DeliveryStats]:
+    sink_cfg = sink_cfg or SinkConfig()
+    stats = DeliveryStats()
 
     wire = envelope_to_json(envelope_projection(lines, cfg.origin))
 
@@ -92,23 +100,25 @@ def build_tailed_pipeline(spark: SparkSession, cfg: PipelineConfig,
     --retry``, main.go:214-250): a driver-side TailFollower converts
     appends under ``cfg.watch_dir`` into atomic spool files, and the
     standard pipeline streams the spool directory.  Appends become
-    visible within one poll + one trigger, no rotation needed.
+    visible within one poll + one trigger, no rotation needed.  Each
+    record is keyed by the path of the watched file it came from,
+    decoded from its spool file's name — not by the spool file.
 
     Returns ``(query, stats, tailer)``; stop the tailer after the
     query.
     """
-    from cga_logs_to_kinesis_spark.streaming.tailer import TailFollower
+    from cga_logs_to_kinesis_spark.streaming.tailer import (
+        TailFollower,
+        spooled_source_path,
+    )
 
     tailer = TailFollower(watch_dir=cfg.watch_dir, spool_dir=spool_dir,
                           glob=cfg.glob,
                           poll_interval_s=poll_interval_s).start()
     if cfg.available_now:
         tailer.poll_once()      # drain mode: capture pre-start appends
-    spool_cfg = PipelineConfig(
-        watch_dir=spool_dir, glob="*.log", origin=cfg.origin,
-        checkpoint_dir=cfg.checkpoint_dir,
-        flush_interval_s=cfg.flush_interval_s,
-        available_now=cfg.available_now,
-        max_files_per_trigger=cfg.max_files_per_trigger)
-    query, stats = build_pipeline(spark, spool_cfg, transport, sink_cfg)
+    spool_cfg = replace(cfg, watch_dir=spool_dir, glob="*.log")
+    lines = _read_lines(spark, spool_cfg).withColumn(
+        "path", spooled_source_path(cfg.watch_dir))
+    query, stats = _start(spool_cfg, lines, transport, sink_cfg)
     return query, stats, tailer

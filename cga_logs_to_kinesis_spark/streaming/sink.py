@@ -190,8 +190,7 @@ class DeliveryStats:
 
 
 def deliver_pages(df: DataFrame, transport: Transport,
-                  config: SinkConfig,
-                  per_page: bool = False) -> pd.DataFrame:
+                  config: SinkConfig) -> pd.DataFrame:
     """Deliver one (micro-)batch; returns delivery stats as pandas.
 
     Input needs columns (data: binary/string, partition_key: string).
@@ -199,14 +198,13 @@ def deliver_pages(df: DataFrame, transport: Transport,
     key-partitioned producer (main.go:346): all records for a key land
     in one task, pages preserve within-key arrival order.
 
-    By default the per-page stats rows are aggregated SPARK-side to
-    one row per partition key (sums of sent/dropped/request_errors,
-    max attempts, page count) before collection: what returns to the
-    driver is O(keys), not records/500 rows — a large backfill batch
-    must not make the A1/A2 side-channel a driver-memory function of
-    data volume (the reference accumulates counters for the same
-    reason, main.go:28-47).  ``per_page=True`` is the debug view with
-    one row per page.
+    The per-page stats rows are aggregated SPARK-side to one row per
+    partition key (sums of sent/dropped/request_errors, max attempts,
+    page count) before collection: what returns to the driver is
+    O(keys), not records/500 rows — a large backfill batch must not
+    make the A1/A2 side-channel a driver-memory function of data
+    volume (the reference accumulates counters for the same reason,
+    main.go:28-47).
     """
     cfg = config
 
@@ -286,8 +284,6 @@ def deliver_pages(df: DataFrame, transport: Transport,
 
     stats = (df.repartition("partition_key")
              .mapInPandas(run, schema=PAGE_STATS))
-    if per_page:
-        return stats.toPandas()
     agg = (stats.groupBy("first_key")
            .agg(F.count("*").alias("pages"),
                 F.sum("records_sent").alias("records_sent"),

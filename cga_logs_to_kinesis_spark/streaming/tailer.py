@@ -44,17 +44,31 @@ Offsets are persisted to ``<spool>/.tail_state.json`` after each
 poll, so a daemon restart re-ships nothing (stronger than the
 reference, whose restarted ``tail`` re-emits nothing but also loses
 anything appended while down unless rotation is pending).
+
+Each spool file's name carries the path of the watched file it came
+from, so the pipeline keys every record by that path
+(:func:`spooled_source_path`) and not by the spool chunk — the
+reference's partition key (main.go:346), which keeps one file's
+records in one delivery task, in order.
 """
 
 from __future__ import annotations
 
 import glob as globmod
+import hashlib
 import json
 import os
 import threading
 import time
 import uuid
 from dataclasses import dataclass, field
+
+# Spool file name: <ns:020d>-<uuid hex>-<source>.log, where <source>
+# is the hex of the watched file's path relative to the watch dir.
+SPOOL_NAME_RE = r"\d{20}-[0-9a-f]{32}-([0-9a-f]*)\.log$"
+# Longest <source> that keeps the name, and the ".<name>.tmp" it is
+# first written as, within NAME_MAX (255 bytes).
+_MAX_SOURCE_HEX = 255 - len(f".{0:020d}-{0:032x}-.log.tmp")
 
 
 @dataclass
@@ -231,13 +245,21 @@ class TailFollower:
         return spooled
 
     def _write_spool(self, src_path: str, body: bytes) -> None:
-        # One spool file per (file, poll) chunk.  Name = zero-padded
-        # nanosecond timestamp (lexicographic order == chunk order, so
-        # readers that sort by name replay appends in sequence) + a
-        # uuid suffix so two tailer instances (or a restart racing an
-        # old thread) never collide on a name the Spark source has
-        # already committed to its file log.
-        name = f"{time.time_ns():020d}-{uuid.uuid4().hex}.log"
+        # One spool file per (file, poll) chunk, named as SPOOL_NAME_RE
+        # says.  The zero-padded nanosecond timestamp makes name order
+        # chunk order (readers that sort by name replay appends in
+        # sequence); the uuid keeps two tailer instances (or a restart
+        # racing an old thread) from colliding on a name the Spark
+        # source has already committed to its file log; the source
+        # path is relative to the watch dir, which every glob result
+        # starts with.
+        rel = os.fsencode(src_path[len(os.path.join(self.watch_dir, "")):])
+        source = rel.hex()
+        if len(source) > _MAX_SOURCE_HEX:
+            # too long for a file name: key by a digest of the path
+            digest = "#" + hashlib.sha256(rel).hexdigest()
+            source = digest.encode().hex()
+        name = f"{time.time_ns():020d}-{uuid.uuid4().hex}-{source}.log"
         tmp = os.path.join(self.spool_dir, f".{name}.tmp")
         with open(tmp, "wb") as f:
             f.write(body)
@@ -271,3 +293,14 @@ class TailFollower:
             except OSError:
                 pass
         self._handles.clear()
+
+
+def spooled_source_path(watch_dir: str):
+    """Column: the path of the watched file that the spool chunk being
+    read came from, decoded from the chunk's name (``_write_spool``).
+    It equals the path the tailer globbed for that file."""
+    from pyspark.sql import functions as F
+
+    source = F.regexp_extract(F.input_file_name(), SPOOL_NAME_RE, 1)
+    return F.concat(F.lit(os.path.join(watch_dir, "")),
+                    F.decode(F.unhex(source), "UTF-8"))

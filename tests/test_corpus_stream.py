@@ -12,6 +12,7 @@ from cga_logs_to_kinesis_spark.streaming.corpus import (
     streaming_corpus_stats,
     streaming_dedup_exact,
 )
+from cga_logs_to_kinesis_spark.streaming.faults import crash_after
 from tests.conftest import SF_SMOKE
 
 
@@ -106,7 +107,14 @@ def test_incremental_dedup_crash_between_writes_is_exactly_once(
     NOT — the replayed batch must overwrite its own output partition
     (no duplicates) and converge to the same final state.  This is
     the exactly-once upgrade over the delivery sink's documented
-    at-least-once replay."""
+    at-least-once replay.
+
+    The crash fires after both writes; deleting the batch's store
+    partition then leaves exactly the files of a crash between the
+    output write and the store merge, with batch 1 uncommitted."""
+    import os
+    import shutil
+
     from cga_logs_to_kinesis_spark.registry import all_queries
     from cga_logs_to_kinesis_spark.streaming.corpus import (
         incremental_dedup_sink,
@@ -128,17 +136,17 @@ def test_incremental_dedup_crash_between_writes_is_exactly_once(
         .write.parquet(str(src / "chunk=0"))
     drain(incremental_dedup_sink(store, out))
 
-    # batch 1 crashes AFTER its output write, BEFORE the store merge
+    # batch 1 dies with its output written and its store merge not
     docs.filter(F.col("doc_id") % 4 == 3).coalesce(1) \
         .write.parquet(str(src / "chunk=1"))
-    crashing = incremental_dedup_sink(store, out,
-                                      fail_after_output_for=(1,))
+    crashing = crash_after(incremental_dedup_sink(store, out), (1,))
     crashed = False
     try:
         drain(crashing)
     except Exception:
         crashed = True
     assert crashed
+    shutil.rmtree(os.path.join(store, "batch_id=1"))   # merge undone
     partial = spark.read.parquet(out).filter("batch_id = 1").count()
     assert partial > 0          # real side effects before the crash
 
@@ -384,8 +392,7 @@ def test_incremental_dedup_crash_after_last_write_is_exactly_once(
 
     docs.filter(F.col("doc_id") % 4 == 3).coalesce(1) \
         .write.parquet(str(src / "chunk=1"))
-    crashing = incremental_dedup_sink(store, out,
-                                      fail_after_all_writes_for=(1,))
+    crashing = crash_after(incremental_dedup_sink(store, out), (1,))
     crashed = False
     try:
         drain(crashing)
@@ -442,8 +449,7 @@ def test_minhash_incremental_crash_after_last_write_is_exactly_once(
         .write.parquet(str(src / "chunk=1"))
     crashed = False
     try:
-        drain(minhash_incremental_sink(
-            *args, fail_after_all_writes_for=(1,)))
+        drain(crash_after(minhash_incremental_sink(*args), (1,)))
     except Exception:
         crashed = True
     assert crashed
@@ -521,7 +527,7 @@ def test_ann_index_sink_matches_batch_and_survives_replay(spark, tmp_path):
         .write.parquet(str(src / "chunk=1"))
     crashed = False
     try:
-        drain(ann_index_sink(*args, fail_after_all_writes_for=(1,)))
+        drain(crash_after(ann_index_sink(*args), (1,)))
     except Exception:
         crashed = True
     assert crashed
@@ -648,7 +654,7 @@ def test_ingest_audit_crash_after_write_is_exactly_once(spark, tmp_path):
 
     base = dirty_jsonl_fixture()
     store = str(tmp_path / "audit_store")
-    sink = ingest_audit_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(ingest_audit_sink(store), (1,))
 
     def drain():
         q = (stream_documents_jsonl_audit(spark, base,
@@ -763,7 +769,7 @@ def test_components_incremental_crash_replay_is_exactly_once(
 
     edges, src = _edge_batches(spark, tmp_path)
     store = str(tmp_path / "labels")
-    sink = components_incremental_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(components_incremental_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_edges(spark, src, sink, ckpt)    # dies on batch 1 post-write
     _drain_edges(spark, src, sink, ckpt)    # replay batch 1, finish 2
@@ -798,7 +804,7 @@ def test_compact_label_store_survives_uncommitted_newest(
 
     edges, src = _edge_batches(spark, tmp_path)
     store = str(tmp_path / "labels")
-    sink = components_incremental_sink(store, fail_after_write_for=(2,))
+    sink = crash_after(components_incremental_sink(store), (2,))
     ckpt = str(tmp_path / "ckpt")
     _drain_edges(spark, src, sink, ckpt)   # dies on batch 2 post-write
     # store now holds versions {0,1,2}; batch 2 is UNCOMMITTED.
@@ -888,8 +894,7 @@ def test_table_profile_crash_after_write_is_exactly_once(spark,
     sf = _lineitem_drop_dir(spark, tmp_path)
     partials = str(tmp_path / "profile_partials")
     values = str(tmp_path / "profile_values")
-    sink = table_profile_sink(partials, values,
-                              fail_after_write_for=(1,))
+    sink = crash_after(table_profile_sink(partials, values), (1,))
 
     def drain():
         q = (stream_lineitem(spark, f"{sf}/lineitem.parquet",
@@ -1099,7 +1104,7 @@ def test_bloom_sink_crash_replay_is_exactly_once(spark, tmp_path):
 
     block, src = _blocklist_chunks(spark, tmp_path)
     crash_store = str(tmp_path / "bloom_crash")
-    sink = bloom_positions_sink(crash_store, fail_after_write_for=(1,))
+    sink = crash_after(bloom_positions_sink(crash_store), (1,))
     ckpt = str(tmp_path / "ckpt_crash")
     _drain_blocklist(spark, src, sink, ckpt)   # dies on batch 1
     _drain_blocklist(spark, src, sink, ckpt)   # replay, finish
@@ -1215,7 +1220,7 @@ def test_funnel_state_crash_replay_is_exactly_once(spark, tmp_path):
 
     _, src = _funnel_batches(spark, tmp_path)
     store = str(tmp_path / "funnel_state")
-    sink = funnel_state_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(funnel_state_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_funnel(spark, src, sink, ckpt)   # dies on batch 1 post-write
     _drain_funnel(spark, src, sink, ckpt)   # replay batch 1, finish 2
@@ -1343,7 +1348,7 @@ def test_ivf_sink_crash_replay_is_exactly_once(spark, tmp_path):
 
     emb, queries, cents, src = _ivf_fixture(spark, tmp_path)
     dirs = [str(tmp_path / d) for d in ("assign", "codes", "vecs")]
-    sink = ivf_index_sink(*dirs, cents, fail_after_all_writes_for=(1,))
+    sink = crash_after(ivf_index_sink(*dirs, cents), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_vecs(spark, src, sink, ckpt)   # dies on batch 1 post-write
     _drain_vecs(spark, src, sink, ckpt)   # replay batch 1, finish 2
@@ -1440,7 +1445,7 @@ def test_encoding_anomaly_sink_crash_replay_is_exactly_once(
 
     src = _doc_chunks(spark, tmp_path)
     store = str(tmp_path / "enc_store")
-    sink = encoding_anomaly_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(encoding_anomaly_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -1511,7 +1516,7 @@ def test_novelty_curve_from_store_matches_batch(spark, tmp_path):
     fp_dir = str(tmp_path / "fps")
     doc_dir = str(tmp_path / "docs")
     # reuse the crash-replay path: die on batch 1, then finish
-    sink = novelty_sink(fp_dir, doc_dir, fail_after_write_for=(1,))
+    sink = crash_after(novelty_sink(fp_dir, doc_dir), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)
     _drain_doc_sink(spark, src, sink, ckpt)
@@ -1550,7 +1555,7 @@ def test_novelty_sink_crash_replay_and_compaction(spark, tmp_path):
     src = _novelty_batches(spark, tmp_path)
     fp_dir = str(tmp_path / "fps")
     doc_dir = str(tmp_path / "docs")
-    sink = novelty_sink(fp_dir, doc_dir, fail_after_write_for=(1,))
+    sink = crash_after(novelty_sink(fp_dir, doc_dir), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -1652,7 +1657,7 @@ def test_skew_freq_store_crash_replay_and_compaction(spark, tmp_path):
 
     src = _skew_kv_chunks(spark, tmp_path)
     store = str(tmp_path / "freq_store")
-    sink = skew_freq_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(skew_freq_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_kv_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_kv_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -1697,7 +1702,7 @@ def test_script_mixing_sink_matches_batch(spark, tmp_path):
 
     src = _doc_chunks(spark, tmp_path)
     store = str(tmp_path / "script_store")
-    sink = script_mixing_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(script_mixing_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -1825,8 +1830,7 @@ def test_corpus_drift_store_matches_batch(spark, tmp_path):
     src = _doc_chunks(spark, tmp_path)
     sum_dir = str(tmp_path / "drift_sums")
     val_dir = str(tmp_path / "drift_vals")
-    sink = corpus_drift_sink(sum_dir, val_dir, n,
-                             fail_after_write_for=(1,))
+    sink = crash_after(corpus_drift_sink(sum_dir, val_dir, n), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -1954,7 +1958,7 @@ def test_line_df_store_matches_batch_report_and_scrub(spark, tmp_path):
 
     docs, src = _poisoned_doc_chunks(spark, tmp_path)
     store = str(tmp_path / "line_df")
-    sink = line_df_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(line_df_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -2124,7 +2128,7 @@ def test_line_source_store_matches_batch_ratio(spark, tmp_path):
     src_store = str(tmp_path / "line_src")
     _drain_doc_sink(spark, src, line_df_sink(df_store),
                     str(tmp_path / "ck1"))
-    sink = line_source_sink(src_store, fail_after_write_for=(1,))
+    sink = crash_after(line_source_sink(src_store), (1,))
     ckpt = str(tmp_path / "ck2")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -2167,7 +2171,7 @@ def test_token_count_store_matches_batch_divergence(spark, tmp_path):
 
     src = _doc_chunks(spark, tmp_path)
     store = str(tmp_path / "tok_counts")
-    sink = token_count_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(token_count_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -2206,7 +2210,7 @@ def test_hll_store_matches_batch_sketch_and_bounds(spark, tmp_path):
 
     src = _doc_chunks(spark, tmp_path)
     store = str(tmp_path / "hll")
-    sink = hll_distinct_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(hll_distinct_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -2298,7 +2302,7 @@ def test_mixture_from_store_matches_batch_algebra(spark, tmp_path):
 
     src = _doc_chunks(spark, tmp_path)
     store = str(tmp_path / "tok_counts")
-    sink = token_count_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(token_count_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -2424,7 +2428,7 @@ def test_setjoin_index_sink_crash_is_exactly_once(spark, tmp_path):
         .write.parquet(str(src / "chunk=1"))
     crashed = False
     try:
-        drain(setjoin_index_sink(*args, fail_after_all_writes_for=(1,)))
+        drain(crash_after(setjoin_index_sink(*args), (1,)))
     except Exception:
         crashed = True
     assert crashed
@@ -2466,7 +2470,7 @@ def test_perplexity_split_from_store_matches_batch(spark, tmp_path):
 
     src = _doc_chunks(spark, tmp_path)
     store = str(tmp_path / "bigram_counts")
-    sink = bigram_count_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(bigram_count_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -2535,7 +2539,7 @@ def test_classifier_eval_from_store_matches_batch(spark, tmp_path):
 
     src = _doc_chunks(spark, tmp_path)
     store = str(tmp_path / "class_counts")
-    sink = class_count_sink(store, fail_after_write_for=(1,))
+    sink = crash_after(class_count_sink(store), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, src, sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, src, sink, ckpt)   # replay 1, finish 2
@@ -2595,7 +2599,7 @@ def test_token_decon_from_store_matches_batch(spark, tmp_path):
             .write.parquet(str(src / f"chunk={k}"))
     freq = str(tmp_path / "word_freqs")
     model = str(tmp_path / "bpe_model")
-    sink = bpe_vocab_sink(freq, fail_after_write_for=(1,))
+    sink = crash_after(bpe_vocab_sink(freq), (1,))
     ckpt = str(tmp_path / "ckpt")
     _drain_doc_sink(spark, str(src), sink, ckpt)   # dies on batch 1
     _drain_doc_sink(spark, str(src), sink, ckpt)   # replay 1, finish 2
@@ -2691,8 +2695,7 @@ def test_semdedup_assign_sink_matches_batch_and_survives_replay(
         .write.parquet(str(src / "chunk=1"))
     crashed = False
     try:
-        drain(semdedup_assign_sink(
-            *args, fail_after_all_writes_for=(1,)))
+        drain(crash_after(semdedup_assign_sink(*args), (1,)))
     except Exception:
         crashed = True
     assert crashed
@@ -2751,7 +2754,7 @@ def test_image_index_sink_matches_batch_and_survives_replay(
         .write.parquet(str(src / "chunk=1"))
     crashed = False
     try:
-        drain(image_index_sink(*args, fail_after_all_writes_for=(1,)))
+        drain(crash_after(image_index_sink(*args), (1,)))
     except Exception:
         crashed = True
     assert crashed

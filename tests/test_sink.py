@@ -27,22 +27,23 @@ def _records_df(spark, n, key="k"):
         "data binary, partition_key string")
 
 
-def test_page_cut_at_500(spark):
+def test_page_cut_at_500(spark, tmp_path):
     # single-partition input so one task pages all 1200 records
     df = _records_df(spark, 1200).coalesce(1)
-    stats = deliver_pages(df, JsonDirTransport("/tmp/_ignored"),
-                          SinkConfig(), per_page=True)
-    # ≤500 per page (B2, reference batchproducer.go:14): 500+500+200
-    assert sorted(stats["records_sent"]) == [200, 500, 500]
-    assert stats["records_dropped"].sum() == 0
-    # the default (driver-bounded) view folds those pages Spark-side:
-    # one row per partition key, O(keys) on the driver regardless of
-    # batch size, with identical counter totals
-    agg = deliver_pages(df, JsonDirTransport("/tmp/_ignored"),
-                        SinkConfig())
+    out = tmp_path / "pages"
+    agg = deliver_pages(df, JsonDirTransport(str(out)), SinkConfig())
+    # ≤500 per page (B2, reference batchproducer.go:14): 500+500+200,
+    # read back from the transport's one file per page
+    pages = [json.loads(f.read_text()) for f in out.glob("page-*.json")]
+    assert sorted(len(p) for p in pages) == [200, 500, 500]
+    assert sorted(d for p in pages for d, _k in p) == sorted(
+        f"record-{i}" for i in range(1200))
+    # the stats fold those pages Spark-side: one row per partition
+    # key, O(keys) on the driver regardless of batch size
     assert len(agg) == 1
     assert int(agg["pages"].iloc[0]) == 3
     assert int(agg["records_sent"].sum()) == 1200
+    assert int(agg["records_dropped"].sum()) == 0
 
 
 def test_per_record_retry_then_success(spark):
@@ -120,9 +121,10 @@ def test_delivery_completeness_across_tasks(spark, tmp_path):
 
 
 @pytest.mark.parametrize("n", [0, 1])
-def test_empty_and_single(spark, n):
+def test_empty_and_single(spark, tmp_path, n):
     stats = deliver_pages(_records_df(spark, n).coalesce(1),
-                          JsonDirTransport("/tmp/_ignored"), SinkConfig())
+                          JsonDirTransport(str(tmp_path / "pages")),
+                          SinkConfig())
     assert stats["records_sent"].sum() == n
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from cga_logs_to_kinesis_spark.streaming.faults import crash_after
 from tests.conftest import SF_SMOKE
 
 
@@ -176,7 +177,7 @@ def test_heavy_hitters_sink_crash_replay_is_exactly_once(
 
     docs, src = _doc_batches(spark, tmp_path)
     crash_store = str(tmp_path / "mg_crash")
-    sink = heavy_hitters_sink(crash_store, fail_after_write_for=(1,))
+    sink = crash_after(heavy_hitters_sink(crash_store), (1,))
     ckpt = str(tmp_path / "ckpt_crash")
     _drain_docs(spark, src, sink, ckpt)   # dies on batch 1 post-write
     _drain_docs(spark, src, sink, ckpt)   # replay batch 1, finish 2

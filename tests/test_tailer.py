@@ -258,3 +258,90 @@ def test_tailed_pipeline_survives_rotation_live(spark, tmp_path):
         tailer.stop()
     assert sorted(delivered_messages(out)) == [
         "after-rotate", "appended-pre-rotate", "before"]
+
+
+def test_tailed_pipeline_keys_records_by_watched_file(spark, tmp_path):
+    """Every record's partition key (and source_instance) is the path
+    of the watched file it was appended to — the reference's key,
+    main.go:346 — not the path of the spool chunk that carried it.
+    Two files, several polls each, and a rotation of one of them:
+    a file keeps one key across chunks and across the rotation."""
+    watch = tmp_path / "logs"
+    (watch / "sub").mkdir(parents=True)
+    paths = {"a": watch / "a.log", "b": watch / "sub" / "b.log"}
+    for name, p in paths.items():
+        p.write_text(f"{name}-0\n")
+    out = tmp_path / "delivered"
+
+    cfg = PipelineConfig(watch_dir=str(watch), glob="*.log",
+                         origin="inst-k",
+                         checkpoint_dir=str(tmp_path / "ckpt"),
+                         flush_interval_s=1)
+    query, stats, tailer = build_tailed_pipeline(
+        spark, cfg, JsonDirTransport(str(out)),
+        spool_dir=str(tmp_path / "spool"), poll_interval_s=0.1)
+    try:
+        deadline = time.time() + 90
+
+        def wait_for(n):
+            while stats.records_sent < n and time.time() < deadline:
+                time.sleep(0.1)
+            assert stats.records_sent == n
+
+        wait_for(2)
+        for i in (1, 2):                      # one chunk per append
+            for name, p in paths.items():
+                with p.open("a") as fh:
+                    fh.write(f"{name}-{i}\n")
+            time.sleep(0.3)
+        # rotate b: the line appended to the old inode is drained
+        with paths["b"].open("a") as fh:
+            fh.write("b-3\n")
+        os.rename(paths["b"], watch / "sub" / "b.log.1")
+        paths["b"].write_text("b-4\n")
+        wait_for(8)
+    finally:
+        query.stop()
+        tailer.stop()
+
+    import base64
+
+    keys: dict[str, set[str]] = {"a": set(), "b": set()}
+    n = 0
+    for fp in out.glob("page-*.json"):
+        for data, key in json.loads(fp.read_text()):
+            log = json.loads(data)["log_message"]
+            msg = base64.b64decode(log["message"]).decode()
+            assert log["source_instance"] == key
+            keys[msg.split("-")[0]].add(key)
+            n += 1
+    assert n == 8
+    assert keys == {name: {str(p)} for name, p in paths.items()}
+
+
+def test_spool_name_carries_source_path(tmp_path):
+    """The spool file name encodes the watched file's path relative to
+    the watch dir.  A path too long for that is encoded as a digest
+    instead, so the poll never fails on it (the tmp name written first
+    is the longest name involved)."""
+    import hashlib
+    import re
+
+    from cga_logs_to_kinesis_spark.streaming.tailer import (
+        _MAX_SOURCE_HEX,
+        SPOOL_NAME_RE,
+    )
+
+    watch, spool, t = mk(tmp_path)
+    n = _MAX_SOURCE_HEX // 2 - len("/a.log")
+    longest, too_long = "d" * n + "/a.log", "e" * (n + 1) + "/a.log"
+    for i, rel in enumerate(["a.log", longest, too_long]):
+        (watch / rel).parent.mkdir(exist_ok=True)
+        (watch / rel).write_text(f"{i}\n")
+    assert t.poll_once() == 3
+    sources = {}
+    for f in spool.glob("*.log"):
+        hexed = re.search(SPOOL_NAME_RE, f.name).group(1)
+        sources[f.read_text()] = bytes.fromhex(hexed).decode()
+    digest = "#" + hashlib.sha256(too_long.encode()).hexdigest()
+    assert sources == {"0\n": "a.log", "1\n": longest, "2\n": digest}
