@@ -1,29 +1,22 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...},
-   "sf": ..., "deltas": {...}, "regressions": [...]}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 `value` is total wall-clock over the headline queries (excluding Spark
 session startup, which is environment cost, not engine cost).  Each
 query is materialized via a count-style action that forces full
 execution without driver-side collection of the result set.
 
-`deltas` is this run's per-query time over the most recent recorded
-round (`BENCH_r*.json`, same sf only); any query slower than
-REGRESSION_FACTOR shouts on stderr and lands in `regressions`, so a
-perf regression is caught by the builder running bench locally, not
-by the judge a round later.  Exit code stays 0 — the driver treats
-nonzero as a crash, and a slow-but-correct suite is a report, not a
-failure.
+This is the bench CLI's one-line contract and a cold smoke check; performance
+claims are measured with `perfbench/` (see `perfbench/README.md`).
+The run writes nothing into the repository tree.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 import time
 
@@ -165,387 +158,6 @@ HEADLINE = (
     "image_dedup_pairs",
 )
 
-# In-run drift control (r10 verdict): the same query measured at the
-# very start and again after the whole suite.  A bursty host shows up
-# as last/first far from 1.0 INSIDE the run, so a noisy official
-# number self-identifies instead of spawning a cross-round
-# investigation (r8 and r10 both burned a round adjudicating exactly
-# this).  stats_tumbling: first headline query, cheap, shuffle-light.
-CANARY = "stats_tumbling"
-
-
-REGRESSION_FACTOR = 1.5
-
-
-def _recover_from_tail(record: dict, sf: float) -> dict | None:
-    """Recover per-query timings from a driver record whose ``parsed``
-    is null (the driver keeps only the LAST 2000 stdout chars, so a
-    long bench line loses its head and fails json.loads — every round
-    since r11 recorded this way, which silently staled the regression
-    base to r10; r13 verdict #1).
-
-    The bench line's key order is fixed (``queries`` immediately
-    precedes ``"sf"``), so the queries region is everything before the
-    first ``}, "sf":`` — the ``deltas`` dict (whose pairs look
-    identical) comes after and can never leak in.  A pair beheaded by
-    the truncation point cannot false-match: the tail is a SUFFIX, so
-    a surviving opening quote always has its complete key after it
-    (r13's tail starts ``minhash_lsh": 1.31`` — no opening quote, the
-    regex skips it and the first recovered pair is the next intact
-    one).
-    """
-    tail = record.get("tail")
-    if not isinstance(tail, str):
-        return None
-    rec_sf = record.get("sf")
-    if rec_sf is not None and rec_sf != sf:
-        return None
-    end = tail.find('}, "sf":')
-    if end < 0:
-        return None
-    region = tail[:end]
-    if '"queries": {' in region:
-        region = region.split('"queries": {', 1)[1]
-    pairs = re.findall(r'"([A-Za-z0-9_]+)": ([0-9][0-9.]*)', region)
-    if len(pairs) < 5:
-        return None
-    return {"sf": rec_sf if rec_sf is not None else sf,
-            "queries": {k: float(v) for k, v in pairs},
-            "recovered_from_tail": True}
-
-
-def _git_head_sha(repo_dir: str) -> str | None:
-    """HEAD SHA of the benched tree, stamped into every bench record.
-
-    Round arithmetic alone cannot tell the driver's post-round run
-    apart from a true round-over-round comparison (r15 verdict #1:
-    the driver benches AFTER CORRECTNESS_rN lands, self-identifies as
-    round N+1, and round N's own builder runs resolve as "previous
-    round" — so same-code host drift shipped wearing a BENCH
-    REGRESSION label in r14 AND r15).  The ground truth is the CODE:
-    a delta base whose records all carry the benched tree's SHA is by
-    construction the same code, and its deltas are host drift.
-    """
-    import subprocess
-    try:
-        res = subprocess.run(
-            ["git", "-C", repo_dir, "rev-parse", "HEAD"],
-            capture_output=True, text=True, timeout=10)
-    except (OSError, subprocess.SubprocessError):
-        return None
-    sha = (res.stdout or "").strip()
-    if res.returncode == 0 and re.fullmatch(r"[0-9a-f]{40}", sha):
-        return sha
-    return None
-
-
-# The tree paths whose git object ids identify the EXECUTED engine.
-_CODE_PATHS = ("cga_logs_to_kinesis_spark", "bench.py",
-               "__spark_entry__.py")
-
-
-def _code_sha(repo_dir: str) -> str | None:
-    """SHA identifying the executed CODE irrespective of doc-only
-    commits.  The commit SHA alone misses the main case: a round's
-    final bench records are committed AFTER the benched commit (the
-    records-and-notes commit is docs-only), so the driver's HEAD
-    differs from every recorded commit SHA while the code is
-    byte-identical.  Hashing the git object ids of the package tree
-    plus the two entry files tracks exactly what executes — doc/test
-    commits leave it unchanged, any engine change moves it.
-    Returns None when the working tree is dirty under any code path:
-    HEAD's object ids would then stamp a same-code SHA for code that
-    did not actually execute, which could later reroute a true
-    regression into the looser canary-scaled host-drift channel —
-    dirty-tree runs stay unstamped and on the conservative
-    regression path."""
-    import hashlib
-    import subprocess
-    try:
-        dirty = subprocess.run(
-            ["git", "-C", repo_dir, "status", "--porcelain", "--"]
-            + list(_CODE_PATHS),
-            capture_output=True, text=True, timeout=10)
-        if dirty.returncode != 0 or (dirty.stdout or "").strip():
-            return None
-        res = subprocess.run(
-            ["git", "-C", repo_dir, "rev-parse"]
-            + [f"HEAD:{p}" for p in _CODE_PATHS],
-            capture_output=True, text=True, timeout=10)
-    except (OSError, subprocess.SubprocessError):
-        return None
-    ids = (res.stdout or "").split()
-    if res.returncode != 0 or len(ids) != len(_CODE_PATHS) \
-            or not all(re.fullmatch(r"[0-9a-f]{40}", i) for i in ids):
-        return None
-    return hashlib.sha256(" ".join(ids).encode()).hexdigest()[:40]
-
-
-def detect_current_round(repo_dir: str) -> int | None:
-    """The round number THIS bench run belongs to.
-
-    ``SPARK_GRAFT_ROUND`` overrides; otherwise it is max(N) of the
-    driver's ``CORRECTNESS_r*.json`` + 1 — those land when a round
-    FINISHES, so during round N the newest is r(N-1).  Needed because
-    the builder commits ``docs/bench/r{N}_final_run*.json`` DURING
-    round N: without the cut-off, "previous round" resolves to the
-    current round's own runs and the driver record's deltas become
-    same-code host-drift numbers wearing a round-over-round label
-    (exactly what BENCH_r14 recorded — r14 verdict #1).
-    """
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        try:
-            return int(env)
-        except ValueError:
-            # Loud fallback: a natural typo like SPARK_GRAFT_ROUND=r15
-            # silently reverting to the glob heuristic could resolve
-            # the wrong round in a worktree with stale CORRECTNESS
-            # files — recreating the same-code-drift-as-regression
-            # confusion the env override exists to prevent.
-            print(f"BENCH WARNING: SPARK_GRAFT_ROUND={env!r} is not "
-                  f"an integer — ignoring it and deriving the round "
-                  f"from CORRECTNESS_r*.json", file=sys.stderr)
-    ns = [int(m.group(1))
-          for p in glob.glob(os.path.join(repo_dir,
-                                          "CORRECTNESS_r*.json"))
-          if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))]
-    return max(ns) + 1 if ns else None
-
-
-def _round_sources(repo_dir: str) -> dict[int, dict]:
-    by_round: dict[int, dict[str, list[str] | str]] = {}
-    for p in glob.glob(os.path.join(repo_dir, "docs", "bench",
-                                    "r*_final_run*.json")):
-        m = re.search(r"r(\d+)_final_run\d+\.json$", p)
-        if m:
-            by_round.setdefault(int(m.group(1)), {}) \
-                .setdefault("builder", []).append(p)
-    for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            by_round.setdefault(int(m.group(1)), {})["driver"] = p
-    return by_round
-
-
-def _resolve_round(sources: dict, rnd: int, sf: float) -> dict | None:
-    """One round's best per-query record: builder min-of-runs, then
-    the driver's parsed record, then tail recovery."""
-    merged: dict[str, float] = {}
-    used = []
-    shas: list[tuple[str | None, str | None]] = []
-    for path in sorted(sources.get("builder", [])):
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if rec.get("sf") != sf or not isinstance(
-                rec.get("queries"), dict):
-            continue
-        used.append(os.path.basename(path))
-        # (None, None) for pre-r16 records (no stamp): a base
-        # containing any unstamped record can never be PROVEN
-        # same-code, so the same-sha host-drift reroute stays
-        # conservative.
-        shas.append((rec.get("git_sha"), rec.get("code_sha")))
-        for k, v in rec["queries"].items():
-            if k not in merged or v < merged[k]:
-                merged[k] = v
-    if merged:
-        return {"sf": sf, "queries": merged,
-                "base": f"r{rnd}:min({len(used)}runs)",
-                "base_files": used, "sha_pairs": shas}
-    driver_path = sources.get("driver")
-    if driver_path:
-        try:
-            with open(driver_path) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            return None
-        parsed = rec.get("parsed")
-        if isinstance(parsed, dict) and parsed.get("sf") == sf \
-                and isinstance(parsed.get("queries"), dict):
-            parsed = dict(parsed)
-            parsed["base"] = f"r{rnd}:driver"
-            return parsed
-        # bare bench-format file (tests / hand-recorded)
-        if rec.get("sf") == sf and isinstance(
-                rec.get("queries"), dict):
-            rec = dict(rec)
-            rec["base"] = f"r{rnd}:driver"
-            return rec
-        recovered = _recover_from_tail(rec, sf)
-        if recovered is not None:
-            recovered["base"] = f"r{rnd}:tail"
-            return recovered
-    return None
-
-
-def previous_round_bench(repo_dir: str, sf: float,
-                         before_round: int | None = None) -> dict | None:
-    """The newest prior round's per-query record at the same sf —
-    rounds ``>= before_round`` are SKIPPED when given, so the deltas
-    computed against the result are true round-over-round (r14
-    verdict #1: the builder's current-round final runs are committed
-    before the driver runs bench, and without the cut-off they win
-    the newest-first walk).
-
-    Resolution order per round, newest round first (r13 verdict #1 —
-    the driver's own BENCH_r*.json carried ``parsed: null`` from r11
-    on, so the naive "latest parseable driver record" base silently
-    regressed to r10 and the 1.5x gate measured against a 3-round-old
-    host-inflated run):
-
-    1. the builder's complete ``docs/bench/r{N}_final_run*.json``
-       records (per-query MIN across that round's runs — same robust
-       estimator the in-run passes use);
-    2. the driver's ``BENCH_r{N}.json`` when its ``parsed`` survived;
-    3. timings regex-recovered from the driver record's ``tail``.
-
-    The returned dict carries ``base`` (human-readable provenance) so
-    the printed record shows WHAT the deltas were computed against.
-    """
-    by_round = _round_sources(repo_dir)
-    for rnd in sorted(by_round, reverse=True):
-        if before_round is not None and rnd >= before_round:
-            continue
-        got = _resolve_round(by_round[rnd], rnd, sf)
-        if got is not None:
-            return got
-    return None
-
-
-def current_round_bench(repo_dir: str, sf: float,
-                        rnd: int) -> dict | None:
-    """The CURRENT round's own builder record (min across the
-    committed ``r{rnd}_final_run*.json``), for the host-drift
-    comparison: same code, different host/run — a looser,
-    canary-scaled gate, reported separately from the round-over-round
-    deltas so the two can never be conflated again."""
-    sources = _round_sources(repo_dir).get(rnd)
-    if not sources or not sources.get("builder"):
-        return None
-    return _resolve_round({"builder": sources["builder"]}, rnd, sf)
-
-
-def _same_code(pair: tuple[str | None, str | None],
-               head_sha: str | None,
-               code_sha: str | None) -> bool:
-    """One base record is proven same-code iff its code SHA matches
-    HEAD's (preferred — doc-only commits don't move it) or, lacking a
-    code stamp on either side, its commit SHA does."""
-    rec_git, rec_code = pair
-    if rec_code and code_sha:
-        return rec_code == code_sha
-    if rec_git and head_sha:
-        return rec_git == head_sha
-    return False
-
-
-def delta_sections(repo_dir: str, sf: float, cur: int | None,
-                   timings: dict[str, float],
-                   canary: float | None,
-                   head_sha: str | None,
-                   code_sha: str | None = None) -> tuple[dict, dict]:
-    """The round-over-round and host-drift sections of the record.
-
-    Returns ``(full_fields, out_fields)`` — merged into the persisted
-    record and the stdout line respectively — and prints the shouts.
-
-    Two independent defenses against mislabeling same-code drift as a
-    regression (r14 verdict #1 fixed the builder context; r15 verdict
-    #1 showed the driver context still conflated):
-
-    1. round arithmetic — rounds >= ``cur`` are excluded from the
-       round-over-round base (builder context: the current round's
-       own final runs are on disk before the driver benches);
-    2. SHA identity — since r16 every final-run record is stamped
-       with the git HEAD SHA at record time; when EVERY record of the
-       resolved base carries the benched tree's SHA, the base is the
-       same code no matter what round arithmetic says (driver
-       context: CORRECTNESS_rN has landed, the run self-identifies as
-       round N+1, and round N's builder runs — same SHA — resolve as
-       "previous").  Such a base is rerouted to the host-drift
-       section: canary-scaled threshold, HOST-DRIFT shout, never
-       REGRESSION.
-    """
-    full: dict = {}
-    out: dict = {}
-    prev = previous_round_bench(repo_dir, sf, before_round=cur)
-    prev_same_sha = (
-        prev is not None and bool(prev.get("sha_pairs"))
-        and all(_same_code(pair, head_sha, code_sha)
-                for pair in prev["sha_pairs"]))
-    if prev is not None and not prev_same_sha:
-        deltas, regressions = {}, []
-        for name, sec in timings.items():
-            before = prev["queries"].get(name)
-            if not before:
-                continue
-            ratio = round(sec / before, 3)
-            deltas[name] = ratio
-            if ratio > REGRESSION_FACTOR:
-                regressions.append(name)
-                print(f"BENCH REGRESSION: {name} {sec:.2f}s is "
-                      f"{ratio:.2f}x the previous round's "
-                      f"{before:.2f}s (threshold "
-                      f"{REGRESSION_FACTOR}x)", file=sys.stderr)
-        ordered = sorted(deltas.values())
-        full["deltas"] = deltas
-        full["delta_base"] = prev.get("base")
-        full["delta_base_files"] = prev.get("base_files")
-        full["regressions"] = regressions
-        out["delta_median"] = (
-            round(ordered[len(ordered) // 2], 3) if ordered else None)
-        out["delta_base"] = prev.get("base")
-        # the stdout line caps the list (a bad round with many names
-        # could push the line past the driver's 2000-char tail and
-        # re-create the parsed:null failure — r14 advice); the full
-        # list is in docs/bench/last_run.json.
-        out["n_regressions"] = len(regressions)
-        out["regressions"] = regressions[:8]
-    elif prev_same_sha:
-        stamp = (code_sha or head_sha or "?")[:12]
-        full["delta_skipped"] = (
-            f"base {prev.get('base')} carries the benched tree's "
-            f"code SHA {stamp} — same code, reported as host_drift")
-    # SAME-code host drift: this run vs a builder min of the SAME
-    # tree — any ratio here is host/run noise, reported under an
-    # honest name with a looser canary-scaled threshold (r14's
-    # "1.92x regression" and r15's four driver-record shouts were
-    # exactly this).  Two ways a base qualifies: the current round's
-    # own builder runs (round arithmetic), or a "previous"-round base
-    # whose records all carry HEAD's SHA (driver context).
-    host = current_round_bench(repo_dir, sf, cur) \
-        if cur is not None else None
-    if host is None and prev_same_sha:
-        host = dict(prev)
-        host["base"] = f"{prev.get('base')}:same-sha"
-    if host is not None:
-        host_threshold = max(
-            2.0, REGRESSION_FACTOR * max(1.0, canary or 1.0))
-        hd = {}
-        for name, sec in timings.items():
-            before = host["queries"].get(name)
-            if not before:
-                continue
-            hd[name] = round(sec / before, 3)
-            if hd[name] > host_threshold:
-                print(f"BENCH HOST-DRIFT: {name} {sec:.2f}s is "
-                      f"{hd[name]:.2f}x the same-code builder min "
-                      f"{before:.2f}s (same code — host noise, "
-                      f"threshold {host_threshold:.2f}x)",
-                      file=sys.stderr)
-        hs = sorted(hd.values())
-        full["host_drift"] = hd
-        full["host_base"] = host.get("base")
-        full["host_base_files"] = host.get("base_files")
-        out["host_drift_median"] = (
-            round(hs[len(hs) // 2], 3) if hs else None)
-        out["host_base"] = host.get("base")
-    return full, out
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -565,97 +177,28 @@ def main() -> None:
         specs[name].fn(spark, warm_dir) \
             .write.format("noop").mode("overwrite").save()
 
-    # Three measured passes, per-query minimum: this VM shows bursty
+    # Three measured passes, per-query minimum: shared hosts show bursty
     # host interference (isolated timing showed pricing_summary at
     # 1.6s / 1.7s / 12.6s / 6.9s across identical runs) that can
     # multiply any single measurement; per-query min is the standard
-    # robust estimator and keeps the regression gate below triggering
-    # on host noise instead of engine changes.
+    # robust estimator.
     timings: dict[str, float] = {}
-    canary_first = None
     for _pass in range(3):
         for name in HEADLINE:
             t0 = time.time()
             df = specs[name].fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             sec = round(time.time() - t0, 3)
-            if _pass == 0 and name == CANARY:
-                canary_first = sec
             if name not in timings or sec < timings[name]:
                 timings[name] = sec
 
-    # drift canary: one more run of the first query AFTER the suite
-    t0 = time.time()
-    specs[CANARY].fn(spark, sf_dir) \
-        .write.format("noop").mode("overwrite").save()
-    canary_last = round(time.time() - t0, 3)
-
-    total = round(sum(timings.values()), 3)
-    # The stdout line MUST stay under the driver's 2000-char stdout
-    # tail or the driver records "parsed: null" and the next round's
-    # regression base goes stale (this exact failure shipped r11-r13:
-    # the full per-query deltas dict pushed the line to ~3.5 KB).  So
-    # the line carries per-query TIMINGS (the contract) plus a compact
-    # delta SUMMARY; the complete record — per-query deltas, canary,
-    # provenance — goes to docs/bench/last_run.json.
-    out = {
+    print(json.dumps({
         "metric": "headline_suite_wall_clock",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-    }
-    full = dict(out)
-    # last/first far from 1.0 = the host's load changed DURING this
-    # run; read per-query deltas with that in mind.  (r8's apparent
-    # 1.21x cross-round drift was exactly this — see
-    # docs/bench/r10_backtoback_run*.json.)
-    full["drift_canary"] = {
-        "query": CANARY,
-        "first_sec": canary_first,
-        "last_sec": canary_last,
-        "last_over_first": (round(canary_last / canary_first, 3)
-                            if canary_first else None),
-    }
-    out["canary_drift"] = full["drift_canary"]["last_over_first"]
-    repo = os.path.dirname(os.path.abspath(__file__))
-    cur = detect_current_round(repo)
-    full["current_round"] = cur
-    head_sha = _git_head_sha(repo)
-    code_sha = _code_sha(repo)
-    full["git_sha"] = head_sha
-    full["code_sha"] = code_sha
-    d_full, d_out = delta_sections(repo, sf, cur, timings,
-                                   out.get("canary_drift"), head_sha,
-                                   code_sha)
-    full.update(d_full)
-    out.update(d_out)
-    line = json.dumps(out)
-    if len(line) > 1900:  # headroom under the driver's 2000-char tail
-        # drop optional summary fields (never timings — they are the
-        # contract) until the line fits; full record persists below.
-        for fld in ("regressions", "host_base", "host_drift_median",
-                    "delta_base", "n_regressions", "delta_median"):
-            out.pop(fld, None)
-            line = json.dumps(out)
-            if len(line) <= 1900:
-                break
-    if len(line) > 1900:
-        print(f"BENCH WARNING: stdout line {len(line)} chars exceeds "
-              f"the driver's parse window — trim the headline set",
-              file=sys.stderr)
-    print(line)
-    try:
-        os.makedirs(os.path.join(os.path.dirname(
-            os.path.abspath(__file__)), "docs", "bench"), exist_ok=True)
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "docs", "bench", "last_run.json"),
-                  "w") as f:
-            json.dump(full, f, indent=1)
-            f.write("\n")
-    except OSError as exc:
-        print(f"BENCH WARNING: could not write last_run.json: {exc}",
-              file=sys.stderr)
+    }))
     spark.stop()
 
 

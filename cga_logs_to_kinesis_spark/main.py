@@ -15,10 +15,15 @@ Run the Spark equivalent the same way:
     DIRS_TO_WATCH='/var/log/**/*.log' INSTANCE=web-0 \\
         python -m cga_logs_to_kinesis_spark.main
 
+Each watched target is tailed (``tail --follow=name --retry``,
+main.go:214-250) by ``streaming/tailer.py``, which spools appended
+lines under ``$CHECKPOINT_DIR`` for a checkpointed streaming query;
+a spool file is deleted once its batch is committed.
+
 Differences from the reference, by design: checkpointed exactly-once
-source tracking instead of a lossy in-memory buffer; file-unit ingest
-instead of tail-follow (SURVEY §7.4.1); transport defaults to a local
-file sink unless boto3 + AWS config are present.
+source tracking instead of a lossy in-memory buffer; tailer offsets
+persist, so a restart re-ships nothing; ``TRANSPORT`` defaults to a
+local file sink (``file``), whether or not boto3 is installed.
 """
 
 from __future__ import annotations
@@ -26,16 +31,18 @@ from __future__ import annotations
 import os
 import signal
 import sys
+import time
 
 from cga_logs_to_kinesis_spark.session import get_session
 from cga_logs_to_kinesis_spark.streaming.config import watch_config_from_env
+from cga_logs_to_kinesis_spark.streaming.envelope import FLUSH_INTERVAL_S
 from cga_logs_to_kinesis_spark.streaming.metrics import (
     attach_metrics,
     serve_metrics,
 )
 from cga_logs_to_kinesis_spark.streaming.pipeline import (
     PipelineConfig,
-    build_pipeline,
+    build_tailed_pipeline,
 )
 from cga_logs_to_kinesis_spark.streaming.sink import (
     ConsoleTransport,
@@ -43,6 +50,7 @@ from cga_logs_to_kinesis_spark.streaming.sink import (
     SinkConfig,
     boto3_transport,
 )
+from cga_logs_to_kinesis_spark.streaming.tailer import prune_spool
 
 
 def make_transport(env: dict[str, str]):
@@ -63,38 +71,51 @@ def run(env: dict[str, str] | None = None,
               file=sys.stderr)
         return 2
 
+    # one tailed streaming query per watch root — the goroutine-per-
+    # watch structure of the reference (main.go:259,285); each keeps
+    # its checkpoint at <ckpt>/<id> and its spool at <ckpt>/<id>-spool
+    ckpt = env.get("CHECKPOINT_DIR", "/tmp/l2k-ckpt")
+    targets = ([(f"f{i}", os.path.dirname(f) or ".", os.path.basename(f))
+                for i, f in enumerate(files)]
+               + [(f"d{i}", d.root, d.glob) for i, d in enumerate(dirs)])
+    for _, watch_dir, _ in targets:
+        # the tailer globs its root recursively: it would re-ship its
+        # own spool files, forever
+        root = os.path.realpath(watch_dir)
+        if os.path.commonpath([root, os.path.realpath(ckpt)]) == root:
+            print(f"CHECKPOINT_DIR {ckpt} lies under the watched "
+                  f"directory {watch_dir}", file=sys.stderr)
+            return 2
+
     spark = get_session("logs-to-kinesis-spark")
     metrics = attach_metrics(spark)
     transport = make_transport(env)
     sink_cfg = SinkConfig(stream_name=env.get("STREAM_NAME", "logs"))
-
-    queries = []
-    # one streaming query per watch root — the goroutine-per-watch
-    # structure of the reference (main.go:259,285), as Spark queries
-    targets = ([PipelineConfig(
-        watch_dir=os.path.dirname(f) or ".",
-        glob=os.path.basename(f),
-        origin=env.get("INSTANCE", "spark-engine"),
-        checkpoint_dir=env.get("CHECKPOINT_DIR",
-                               "/tmp/l2k-ckpt") + f"/f{i}",
-        available_now=available_now)
-        for i, f in enumerate(files)]
-        + [PipelineConfig(
-            watch_dir=d.root, glob=d.glob,
+    queries, stats_list, tailers = [], [], []
+    for tid, watch_dir, glob in targets:
+        cfg = PipelineConfig(
+            watch_dir=watch_dir, glob=glob,
             origin=env.get("INSTANCE", "spark-engine"),
-            checkpoint_dir=env.get("CHECKPOINT_DIR",
-                                   "/tmp/l2k-ckpt") + f"/d{i}",
-            available_now=available_now)
-           for i, d in enumerate(dirs)])
-    stats_list = []
-    for cfg in targets:
-        query, stats = build_pipeline(spark, cfg, transport, sink_cfg)
+            checkpoint_dir=f"{ckpt}/{tid}", available_now=available_now)
+        query, stats, tailer = build_tailed_pipeline(
+            spark, cfg, transport, f"{ckpt}/{tid}-spool", sink_cfg)
         queries.append(query)
         stats_list.append(stats)
+        tailers.append(tailer)
+
+    # the last source log offset whose spool files are deleted
+    pruned = {tid: -1 for tid, _, _ in targets}
+
+    def prune():
+        for tid in pruned:
+            pruned[tid] = prune_spool(f"{ckpt}/{tid}", f"{ckpt}/{tid}-spool",
+                                      pruned[tid])
 
     if available_now:
-        for q in queries:
+        for q, t in zip(queries, tailers):
             q.awaitTermination(600)
+            t.stop()
+        prune()
         total = sum(s.records_sent for s in stats_list)
         print(f"drained: {total} records sent, "
               f"{sum(s.records_dropped for s in stats_list)} dropped")
@@ -115,8 +136,17 @@ def run(env: dict[str, str] | None = None,
 
     signal.signal(signal.SIGINT, shutdown)
     signal.signal(signal.SIGTERM, shutdown)
+    # delete committed spool files once per trigger, so the spool the
+    # file source lists on every trigger stays small
+    while all(q.isActive for q in queries):
+        time.sleep(FLUSH_INTERVAL_S)
+        prune()
+    shutdown(None, None)                # one ended: stop the others
+    for t in tailers:
+        t.stop()
+    prune()
     for q in queries:
-        q.awaitTermination()
+        q.awaitTermination()            # re-raises a query's failure
     metrics_path = env.get("METRICS_PATH")
     if metrics_path:
         with open(metrics_path, "w") as f:

@@ -209,7 +209,8 @@ class DirStreamClient(ConsumerClient):
 
 
 def boto3_consumer_client(region: str) -> ConsumerClient:
-    """Real Kinesis consumer, gated: boto3 isn't in this container."""
+    """Real Kinesis consumer; raises NotImplementedError when boto3 is
+    not installed."""
     try:
         import boto3  # noqa: F401
     except ImportError as e:  # pragma: no cover

@@ -825,8 +825,7 @@ def semdedup_assign_sink(cents_dir: str, assign_dir: str,
 
 
 def compact_digest_store(spark: SparkSession, store_dir: str,
-                         upto_batch_id: int,
-                         files_per_partition: int = 1) -> int:
+                         upto_batch_id: int) -> int:
     """Fold the digest store's per-batch partitions at or below
     ``upto_batch_id`` into one distinct base partition (batch_id =
     -1), returning the number of batch partitions folded.
@@ -850,12 +849,11 @@ def compact_digest_store(spark: SparkSession, store_dir: str,
     directory swapped in while the stream is stopped).
     """
     return _compact_distinct_store(spark, store_dir, upto_batch_id,
-                                   ["text_digest"], files_per_partition)
+                                   ["text_digest"])
 
 
 def compact_profile_values(spark: SparkSession, values_dir: str,
-                           upto_batch_id: int,
-                           files_per_partition: int = 1) -> int:
+                           upto_batch_id: int) -> int:
     """Compact the table-profile DISTINCT-VALUES store (see
     :func:`table_profile_sink`) — same algebra as the digest store:
     the consumer is ``count_distinct`` per column, idempotent under
@@ -867,13 +865,11 @@ def compact_profile_values(spark: SparkSession, values_dir: str,
     are 1 row per profiled column, so the pressure is bounded anyway.
     Run with the stream stopped."""
     return _compact_distinct_store(spark, values_dir, upto_batch_id,
-                                   ["col_name", "val"],
-                                   files_per_partition)
+                                   ["col_name", "val"])
 
 
 def _compact_distinct_store(spark: SparkSession, store_dir: str,
-                            upto_batch_id: int, cols: list[str],
-                            files_per_partition: int) -> int:
+                            upto_batch_id: int, cols: list[str]) -> int:
     """Fold per-batch partitions of a DISTINCT-consumed store into the
     batch_id=-1 base — shared by the digest and profile-values
     compactors (both consumers are idempotent under duplicate rows,
@@ -901,7 +897,7 @@ def _compact_distinct_store(spark: SparkSession, store_dir: str,
     # still requires the stream to be STOPPED (see docstring) — the
     # checkpoint closes the self-read hazard, not concurrent appends.
     merged = (base.unionByName(old).distinct()
-              .coalesce(files_per_partition)
+              .coalesce(1)
               .localCheckpoint())
     _write_batch(merged, store_dir, -1)
     # cleanup AFTER the base partition is durable; a crash here only
@@ -1255,8 +1251,7 @@ def _cleanup_stale_mg_dirs(store_dir: str, base_bid: int) -> int:
 
 
 def compact_heavy_hitters_store(spark: SparkSession, store_dir: str,
-                                upto_batch_id: int,
-                                files_per_partition: int = 1) -> int:
+                                upto_batch_id: int) -> int:
     """Fold the MG summary store's batch partitions at or below
     ``upto_batch_id`` (plus any existing base) into ONE merged base
     partition, returning the number of batch partitions folded.
@@ -1314,7 +1309,7 @@ def compact_heavy_hitters_store(spark: SparkSession, store_dir: str,
     # _compact_distinct_store: the old base partition is both input
     # and (via the cleanup below) removed state.
     merged = (tokens.unionByName(total)
-              .coalesce(files_per_partition)
+              .coalesce(1)
               .localCheckpoint())
     _write_batch(merged, store_dir, new_bid)
     # cleanup AFTER the new base is durable; stale dirs are ignored
@@ -1396,14 +1391,13 @@ def bloom_positions_sink(store_dir: str):
 
 
 def compact_bloom_store(spark: SparkSession, store_dir: str,
-                        upto_batch_id: int,
-                        files_per_partition: int = 1) -> int:
+                        upto_batch_id: int) -> int:
     """Fold the position store's batch partitions into the
     ``batch_id=-1`` base — the shared distinct-store compactor; the
     crash window between base write and cleanup leaves only harmless
     duplicate positions (OR is idempotent)."""
     return _compact_distinct_store(spark, store_dir, upto_batch_id,
-                                   ["pos"], files_per_partition)
+                                   ["pos"])
 
 
 def bloom_bitmap_from_store(spark: SparkSession, store_dir: str,
@@ -1866,8 +1860,7 @@ def skew_frequencies_from_store(spark: SparkSession,
 def _compact_mergeable_store(spark: SparkSession, store_dir: str,
                              upto_batch_id: int,
                              group_cols: list[str],
-                             fold,
-                             files_per_partition: int = 1) -> int:
+                             fold) -> int:
     """Generic compactor for a MERGEABLE-partials store: fold batch
     partitions at or below ``upto_batch_id`` (plus any existing base)
     into one merged base at ``batch_id = -(max_folded + 2)`` — the
@@ -1895,7 +1888,7 @@ def _compact_mergeable_store(spark: SparkSession, store_dir: str,
         return 0
     new_bid = -(max_folded + 2)
     merged = (fold(to_fold.groupBy(*group_cols))
-              .coalesce(files_per_partition)
+              .coalesce(1)
               .localCheckpoint())      # self-read: old base is input
     _write_batch(merged, store_dir, new_bid)
     _cleanup_stale_mg_dirs(store_dir, new_bid)
@@ -1908,17 +1901,15 @@ def _sum_fold(*cols: str):
 
 
 def compact_skew_freq_store(spark: SparkSession, store_dir: str,
-                            upto_batch_id: int,
-                            files_per_partition: int = 1) -> int:
+                            upto_batch_id: int) -> int:
     """Fold frequency partials into the watermark base (counts SUM)."""
     return _compact_mergeable_store(
         spark, store_dir, upto_batch_id, ["key_col", "k"],
-        _sum_fold("f"), files_per_partition)
+        _sum_fold("f"))
 
 
 def compact_encoding_store(spark: SparkSession, store_dir: str,
-                           upto_batch_id: int,
-                           files_per_partition: int = 1) -> int:
+                           upto_batch_id: int) -> int:
     """Fold encoding-audit partials (every column a count/sum) into
     the watermark base — without this the store grows one partition
     set per micro-batch forever."""
@@ -1929,12 +1920,11 @@ def compact_encoding_store(spark: SparkSession, store_dir: str,
     cols = ["n_docs", "n_chars", *ENC_PATTERNS, "dirty_docs"]
     return _compact_mergeable_store(
         spark, store_dir, upto_batch_id, ["source"],
-        _sum_fold(*cols), files_per_partition)
+        _sum_fold(*cols))
 
 
 def compact_script_mixing_store(spark: SparkSession, store_dir: str,
-                                upto_batch_id: int,
-                                files_per_partition: int = 1) -> int:
+                                upto_batch_id: int) -> int:
     """Fold script-mixing partials (counts/sums) into the base."""
     from cga_logs_to_kinesis_spark.operators.ingest_audit import (
         SCRIPT_CLASSES,
@@ -1944,12 +1934,11 @@ def compact_script_mixing_store(spark: SparkSession, store_dir: str,
             "multi_script_docs", "confusable_docs"]
     return _compact_mergeable_store(
         spark, store_dir, upto_batch_id, ["source"],
-        _sum_fold(*cols), files_per_partition)
+        _sum_fold(*cols))
 
 
 def compact_ingest_audit_store(spark: SparkSession, store_dir: str,
-                               upto_batch_id: int,
-                               files_per_partition: int = 1) -> int:
+                               upto_batch_id: int) -> int:
     """Fold JSONL-audit partials into the base: counts SUM, the
     doc-id extrema fold with MIN/MAX — the same merge the reader
     itself applies, so fold-after-compaction == fold-before."""
@@ -1962,8 +1951,7 @@ def compact_ingest_audit_store(spark: SparkSession, store_dir: str,
                      F.max("max_doc_id").alias("max_doc_id"))
 
     return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["shard"], fold,
-        files_per_partition)
+        spark, store_dir, upto_batch_id, ["shard"], fold)
 
 
 def salted_join_plan_from_store(spark: SparkSession,
@@ -2084,8 +2072,7 @@ def corpus_drift_from_store(spark: SparkSession, sum_dir: str,
 
 
 def compact_corpus_drift_sums(spark: SparkSession, store_dir: str,
-                              upto_batch_id: int,
-                              files_per_partition: int = 1) -> int:
+                              upto_batch_id: int) -> int:
     """Fold drift sum partials into the watermark base — counts and
     the exact decimal char sum both SUM, so the shared mergeable
     compactor applies with a type-pinning cast on the decimal."""
@@ -2099,18 +2086,15 @@ def compact_corpus_drift_sums(spark: SparkSession, store_dir: str,
                      .alias("sum_chars_dec"))
 
     return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["decile"], fold,
-        files_per_partition)
+        spark, store_dir, upto_batch_id, ["decile"], fold)
 
 
 def compact_corpus_drift_values(spark: SparkSession, values_dir: str,
-                                upto_batch_id: int,
-                                files_per_partition: int = 1) -> int:
+                                upto_batch_id: int) -> int:
     """The values store is DISTINCT-consumed — the shared distinct
     base compactor applies verbatim."""
     return _compact_distinct_store(spark, values_dir, upto_batch_id,
-                                   ["decile", "col", "val"],
-                                   files_per_partition)
+                                   ["decile", "col", "val"])
 
 
 # ---------------------------------------------------------------------------
@@ -2267,14 +2251,13 @@ def line_pipeline_from_store(spark: SparkSession, docs: DataFrame,
 
 
 def compact_line_df_store(spark: SparkSession, store_dir: str,
-                          upto_batch_id: int,
-                          files_per_partition: int = 1) -> int:
+                          upto_batch_id: int) -> int:
     """Fold line-frequency partials into the watermark base (counts
     SUM; line is functionally dependent on fp, so it rides the group
     key)."""
     return _compact_mergeable_store(
         spark, store_dir, upto_batch_id, ["fp", "line"],
-        _sum_fold("n_docs"), files_per_partition)
+        _sum_fold("n_docs"))
 
 
 def line_source_sink(store_dir: str):
@@ -2332,13 +2315,12 @@ def boilerplate_ratio_from_store(spark: SparkSession,
 
 
 def compact_line_source_store(spark: SparkSession, store_dir: str,
-                              upto_batch_id: int,
-                              files_per_partition: int = 1) -> int:
+                              upto_batch_id: int) -> int:
     """Fold (source, fp) line-count partials into the watermark base
     (counts SUM)."""
     return _compact_mergeable_store(
         spark, store_dir, upto_batch_id, ["source", "fp"],
-        _sum_fold("n_lines"), files_per_partition)
+        _sum_fold("n_lines"))
 
 
 # ---------------------------------------------------------------------------
@@ -2399,13 +2381,12 @@ def source_divergence_from_store(spark: SparkSession,
 
 
 def compact_token_count_store(spark: SparkSession, store_dir: str,
-                              upto_batch_id: int,
-                              files_per_partition: int = 1) -> int:
+                              upto_batch_id: int) -> int:
     """Fold token-count partials into the watermark base (counts
     SUM)."""
     return _compact_mergeable_store(
         spark, store_dir, upto_batch_id, ["source", "tok"],
-        _sum_fold("cnt"), files_per_partition)
+        _sum_fold("cnt"))
 
 
 def mixture_from_store(spark: SparkSession,
@@ -2513,13 +2494,12 @@ def perplexity_split_from_store(spark: SparkSession, docs: DataFrame,
 
 
 def compact_bigram_count_store(spark: SparkSession, store_dir: str,
-                               upto_batch_id: int,
-                               files_per_partition: int = 1) -> int:
+                               upto_batch_id: int) -> int:
     """Fold bigram-count partials into the watermark base (counts
     SUM)."""
     return _compact_mergeable_store(
         spark, store_dir, upto_batch_id, ["prev", "w"],
-        _sum_fold("cnt"), files_per_partition)
+        _sum_fold("cnt"))
 
 
 # ---------------------------------------------------------------------------
@@ -2579,13 +2559,12 @@ def classifier_eval_from_store(spark: SparkSession, docs: DataFrame,
 
 
 def compact_class_count_store(spark: SparkSession, store_dir: str,
-                              upto_batch_id: int,
-                              files_per_partition: int = 1) -> int:
+                              upto_batch_id: int) -> int:
     """Fold class-count partials into the watermark base (counts
     SUM)."""
     return _compact_mergeable_store(
         spark, store_dir, upto_batch_id, ["bucket"],
-        _sum_fold("n_pos", "n_neg"), files_per_partition)
+        _sum_fold("n_pos", "n_neg"))
 
 
 # ---------------------------------------------------------------------------
@@ -2740,13 +2719,12 @@ def token_decontaminate_from_store(spark: SparkSession,
 
 
 def compact_bpe_freq_store(spark: SparkSession, freq_dir: str,
-                           upto_batch_id: int,
-                           files_per_partition: int = 1) -> int:
+                           upto_batch_id: int) -> int:
     """Fold word-frequency partials into the watermark base (counts
     SUM)."""
     return _compact_mergeable_store(
         spark, freq_dir, upto_batch_id, ["w"],
-        _sum_fold("freq"), files_per_partition)
+        _sum_fold("freq"))
 
 
 # ---------------------------------------------------------------------------
@@ -2786,8 +2764,7 @@ def novelty_sink(fp_dir: str, doc_dir: str):
 
 
 def compact_novelty_store(spark: SparkSession, fp_dir: str,
-                          upto_batch_id: int,
-                          files_per_partition: int = 1) -> int:
+                          upto_batch_id: int) -> int:
     """Fold fp partials at or below ``upto_batch_id`` (plus any
     existing base) into a ``batch_id=-1`` base via the MIN fold.
     MIN idempotence makes the plain distinct-store base discipline
@@ -2808,7 +2785,7 @@ def compact_novelty_store(spark: SparkSession, fp_dir: str,
         return 0
     base = (to_fold.groupBy("fp")
             .agg(F.min("first_doc").alias("first_doc"))
-            .coalesce(files_per_partition)
+            .coalesce(1)
             .localCheckpoint())          # self-read: old base is input
     _write_batch(base, fp_dir, -1)
     for name in os.listdir(fp_dir):
@@ -2821,16 +2798,14 @@ def compact_novelty_store(spark: SparkSession, fp_dir: str,
 
 
 def compact_novelty_doc_store(spark: SparkSession, doc_dir: str,
-                              upto_batch_id: int,
-                              files_per_partition: int = 1) -> int:
+                              upto_batch_id: int) -> int:
     """Fold the per-doc count store's batch partitions into the
     batch_id=-1 base — the doc store is DISTINCT-consumed (the report
     reads it through .distinct(); a replayed batch's duplicate
     (doc_id, n_ngrams) rows are harmless), so the shared base
     compactor applies verbatim."""
     return _compact_distinct_store(spark, doc_dir, upto_batch_id,
-                                   ["doc_id", "n_ngrams"],
-                                   files_per_partition)
+                                   ["doc_id", "n_ngrams"])
 
 
 def novelty_curve_from_store(spark: SparkSession, fp_dir: str,
@@ -3173,8 +3148,7 @@ def approx_distinct_from_store(spark: SparkSession, store_dir: str,
 
 
 def compact_hll_store(spark: SparkSession, store_dir: str,
-                      upto_batch_id: int, key_col: str = "lang",
-                      files_per_partition: int = 1) -> int:
+                      upto_batch_id: int, key_col: str = "lang") -> int:
     """Fold sketch partials into the watermark base — HLL union is
     register-wise MAX (idempotent + commutative), so the shared
     mergeable compactor applies with the union as the merge."""
@@ -3182,5 +3156,4 @@ def compact_hll_store(spark: SparkSession, store_dir: str,
         return g.agg(F.hll_union_agg("sk").alias("sk"))
 
     return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, [key_col], fold,
-        files_per_partition)
+        spark, store_dir, upto_batch_id, [key_col], fold)

@@ -49,7 +49,6 @@ class PipelineConfig:
     checkpoint_dir: str | None = None
     flush_interval_s: int = FLUSH_INTERVAL_S
     available_now: bool = False          # drain-and-stop (tests/backfill)
-    max_files_per_trigger: int | None = None  # rate limiting (B1)
 
 
 def build_pipeline(spark: SparkSession, cfg: PipelineConfig,
@@ -61,12 +60,9 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig,
 
 
 def _read_lines(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    reader = (spark.readStream.format("text")
-              .option("pathGlobFilter", cfg.glob))
-    if cfg.max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               cfg.max_files_per_trigger)
-    return reader.load(cfg.watch_dir)
+    return (spark.readStream.format("text")
+            .option("pathGlobFilter", cfg.glob)
+            .load(cfg.watch_dir))
 
 
 def _start(cfg: PipelineConfig, lines: DataFrame, transport: Transport,
@@ -104,8 +100,12 @@ def build_tailed_pipeline(spark: SparkSession, cfg: PipelineConfig,
     record is keyed by the path of the watched file it came from,
     decoded from its spool file's name — not by the spool file.
 
+    With ``cfg.available_now`` the tailer drains in this thread
+    (:meth:`TailFollower.drain`) and runs no thread of its own: the
+    query ships every complete line appended before the call.
+
     Returns ``(query, stats, tailer)``; stop the tailer after the
-    query.
+    query, which saves its offsets.
     """
     from cga_logs_to_kinesis_spark.streaming.tailer import (
         TailFollower,
@@ -113,10 +113,13 @@ def build_tailed_pipeline(spark: SparkSession, cfg: PipelineConfig,
     )
 
     tailer = TailFollower(watch_dir=cfg.watch_dir, spool_dir=spool_dir,
-                          glob=cfg.glob,
-                          poll_interval_s=poll_interval_s).start()
+                          glob=cfg.glob, poll_interval_s=poll_interval_s)
     if cfg.available_now:
-        tailer.poll_once()      # drain mode: capture pre-start appends
+        # a started thread's first poll would race this drain and
+        # could spool the same lines twice
+        tailer.load().drain()
+    else:
+        tailer.start()
     spool_cfg = replace(cfg, watch_dir=spool_dir, glob="*.log")
     lines = _read_lines(spark, spool_cfg).withColumn(
         "path", spooled_source_path(cfg.watch_dir))

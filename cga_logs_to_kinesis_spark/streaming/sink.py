@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -123,7 +123,8 @@ class FileTransport(Transport):
 
 
 def boto3_transport(stream_region: str) -> Transport:
-    """Real Kinesis transport, gated: boto3 isn't in this container."""
+    """Real Kinesis transport; raises NotImplementedError when boto3 is
+    not installed."""
     try:
         import boto3  # noqa: F401
     except ImportError as e:  # pragma: no cover
@@ -173,20 +174,13 @@ class DeliveryStats:
     records_dropped: int = 0
     request_errors: int = 0
     batches: int = 0
-    history: list[dict] = field(default_factory=list)
 
     def update(self, batch_rows: list[dict]) -> None:
         self.batches += 1
-        snap = {"records_sent": 0, "records_dropped": 0,
-                "request_errors": 0}
         for r in batch_rows:
-            snap["records_sent"] += r["records_sent"]
-            snap["records_dropped"] += r["records_dropped"]
-            snap["request_errors"] += r["request_errors"]
-        self.records_sent += snap["records_sent"]
-        self.records_dropped += snap["records_dropped"]
-        self.request_errors += snap["request_errors"]
-        self.history.append(snap)
+            self.records_sent += r["records_sent"]
+            self.records_dropped += r["records_dropped"]
+            self.request_errors += r["request_errors"]
 
 
 def deliver_pages(df: DataFrame, transport: Transport,

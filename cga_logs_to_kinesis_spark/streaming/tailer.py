@@ -101,6 +101,9 @@ class TailFollower:
     _handles: dict[str, object] = field(default_factory=dict)
     _stop: threading.Event = field(default_factory=threading.Event)
     _thread: threading.Thread | None = None
+    # set by a poll whose read of some file stopped at max_chunk_bytes:
+    # that file had more on disk than the poll shipped
+    _capped: bool = field(default=False, init=False)
 
     # -- state persistence -------------------------------------------------
 
@@ -132,6 +135,7 @@ class TailFollower:
         deterministically without the thread.
         """
         spooled = 0
+        self._capped = False
         pattern = os.path.join(self.watch_dir, "**", self.glob)
         seen: set[str] = set()
         for path in globmod.glob(pattern, recursive=True):
@@ -189,6 +193,7 @@ class TailFollower:
                                 self.max_chunk_bytes))
         except OSError:
             return spooled
+        self._capped |= len(chunk) == self.max_chunk_bytes
         if not chunk:
             return spooled
         # Ship only complete lines; keep a trailing partial buffered in
@@ -267,9 +272,25 @@ class TailFollower:
 
     # -- lifecycle ---------------------------------------------------------
 
-    def start(self) -> "TailFollower":
+    def load(self) -> "TailFollower":
+        """Create the spool dir and load the saved offsets, without
+        starting the thread; the caller then drives :meth:`poll_once`."""
         os.makedirs(self.spool_dir, exist_ok=True)
         self._load_state()
+        return self
+
+    def drain(self) -> int:
+        """Poll until one poll reads every watched file up to the end
+        it saw, so every complete line appended before the call is
+        spooled: one poll reads at most ``max_chunk_bytes`` of each
+        file.  Returns the number of spool files written."""
+        spooled = self.poll_once()
+        while self._capped:
+            spooled += self.poll_once()
+        return spooled
+
+    def start(self) -> "TailFollower":
+        self.load()
         self._stop.clear()
         self._thread = threading.Thread(
             target=self._run, name="tail-follower", daemon=True)
@@ -293,6 +314,42 @@ class TailFollower:
             except OSError:
                 pass
         self._handles.clear()
+
+
+def prune_spool(checkpoint_dir: str, spool_dir: str, after: int) -> int:
+    """Delete the spool files of every batch that the query
+    checkpointed at ``checkpoint_dir`` has committed, and return the
+    file source's log offset they reach; pass it as ``after`` next
+    time, so only newer source log entries are read (start with -1).
+
+    A restart replays only uncommitted batches, so nothing reads these
+    files again.  Reads Spark's checkpoint layout (format ``v1``): the
+    last ``commits/<batch>``; the source's ``{"logOffset": n}`` on the
+    third line of ``offsets/<batch>``; and ``sources/0/<n>[.compact]``,
+    one ``{"path": ...}`` entry per line after the header, where a
+    compact file also repeats every entry before it.
+    """
+    try:
+        batch = max(int(n) for n in os.listdir(
+            os.path.join(checkpoint_dir, "commits")) if n.isdigit())
+        with open(os.path.join(checkpoint_dir, "offsets", str(batch))) as f:
+            upto = json.loads(f.read().splitlines()[2])["logOffset"]
+        logs = os.listdir(os.path.join(checkpoint_dir, "sources", "0"))
+    except (OSError, ValueError):
+        return after                           # nothing committed yet
+    for name in logs:
+        n = name.split(".")[0]
+        if not n.isdigit() or not after < int(n) <= upto:
+            continue
+        with open(os.path.join(checkpoint_dir, "sources", "0", name)) as f:
+            entries = f.read().splitlines()[1:]
+        for entry in entries:
+            spooled = json.loads(entry)["path"].rsplit("/", 1)[-1]
+            try:
+                os.remove(os.path.join(spool_dir, spooled))
+            except FileNotFoundError:
+                pass
+    return upto
 
 
 def spooled_source_path(watch_dir: str):

@@ -4,8 +4,11 @@ ctl.erb wiring, exercised end to end in drain mode."""
 from __future__ import annotations
 
 import json
+import pathlib
 import subprocess
 import sys
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
 
 
 def test_daemon_drain_mode(tmp_path):
@@ -31,25 +34,34 @@ def test_daemon_drain_mode(tmp_path):
     })
     env.pop("FILES_TO_WATCH", None)
 
-    proc = subprocess.run(
-        [sys.executable, "-m", "cga_logs_to_kinesis_spark.main",
-         "--drain"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
-        timeout=420)
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    assert "drained: 2 records sent, 0 dropped" in proc.stdout
+    def drain():
+        proc = subprocess.run(
+            [sys.executable, "-m", "cga_logs_to_kinesis_spark.main",
+             "--drain"],
+            cwd=REPO, env=env, capture_output=True, text=True,
+            timeout=420)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        assert "drained: 2 records sent, 0 dropped" in proc.stdout
+        # every batch is committed: its spool files are deleted
+        assert not list((tmp_path / "ckpt" / "d0-spool").glob("*.log"))
 
-    delivered = []
-    for f in out.glob("*.jsonl"):
-        delivered.extend(json.loads(line)
-                         for line in f.read_text().splitlines())
-    # BinaryType serializes as base64 on the JSON wire (and the
-    # consumer's from_json BINARY schema decodes it back)
-    import base64
-    msgs = {base64.b64decode(d["log_message"]["message"]).decode()
-            for d in delivered}
-    assert msgs == {"one", "two"}
-    assert all(d["origin"] == "daemon-test" for d in delivered)
+        delivered = []
+        for f in out.glob("*.jsonl"):
+            delivered.extend(json.loads(line)
+                             for line in f.read_text().splitlines())
+        assert all(d["origin"] == "daemon-test" for d in delivered)
+        # BinaryType serializes as base64 on the JSON wire (and the
+        # consumer's from_json BINARY schema decodes it back)
+        import base64
+        return sorted(base64.b64decode(d["log_message"]["message"]).decode()
+                      for d in delivered)
+
+    assert drain() == ["one", "two"]
+    # lines appended to the same open file after the first drain are
+    # shipped by the next one, and nothing is shipped twice
+    with (watch / "app.log").open("a") as fh:
+        fh.write("three\nfour\n")
+    assert drain() == ["four", "one", "three", "two"]
 
 
 def test_daemon_requires_watch_config(tmp_path):
@@ -60,7 +72,18 @@ def test_daemon_requires_watch_config(tmp_path):
     proc = subprocess.run(
         [sys.executable, "-m", "cga_logs_to_kinesis_spark.main",
          "--drain"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
+        cwd=REPO, env=env, capture_output=True, text=True,
         timeout=120)
     assert proc.returncode == 2
     assert "nothing to watch" in proc.stderr
+
+    # a checkpoint under a watched root would be tailed itself
+    env.update({"DIRS_TO_WATCH": f"{tmp_path}/**/*",
+                "CHECKPOINT_DIR": str(tmp_path / "sub" / "ckpt")})
+    proc = subprocess.run(
+        [sys.executable, "-m", "cga_logs_to_kinesis_spark.main",
+         "--drain"],
+        cwd=REPO, env=env, capture_output=True, text=True,
+        timeout=120)
+    assert proc.returncode == 2
+    assert "lies under the watched directory" in proc.stderr

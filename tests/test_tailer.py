@@ -13,7 +13,10 @@ from cga_logs_to_kinesis_spark.streaming.pipeline import (
     PipelineConfig,
     build_tailed_pipeline,
 )
-from cga_logs_to_kinesis_spark.streaming.tailer import TailFollower
+from cga_logs_to_kinesis_spark.streaming.tailer import (
+    TailFollower,
+    prune_spool,
+)
 
 
 def mk(tmp_path):
@@ -151,6 +154,35 @@ def test_drain_cuts_chunks_at_newlines(tmp_path):
     assert partials == [b"cccc\ndd"]
 
 
+def test_prune_spool_keeps_uncommitted_batches(tmp_path):
+    """Only the spool files of source log entries up to the last
+    committed batch's offset are deleted; a compact file repeats the
+    entries before it."""
+    ckpt, spool = tmp_path / "ckpt", tmp_path / "spool"
+    for d in ("commits", "offsets", "sources/0"):
+        (ckpt / d).mkdir(parents=True)
+    spool.mkdir()
+
+    def log(name, *files):
+        (ckpt / "sources/0" / name).write_text("v1\n" + "".join(
+            json.dumps({"path": f"file://{spool}/{f}", "batchId": 0})
+            + "\n" for f in files))
+        for f in files:
+            (spool / f).write_text("l\n")
+
+    log("0", "a.log")
+    log("1.compact", "a.log", "b.log")
+    log("2", "c.log")
+    (ckpt / "commits/1").write_text("v1\n{}\n")
+    (ckpt / "offsets/1").write_text('v1\n{}\n{"logOffset":1}\n')
+    (ckpt / "offsets/2").write_text('v1\n{}\n{"logOffset":2}\n')
+    assert prune_spool(str(ckpt), str(spool), -1) == 1
+    assert sorted(p.name for p in spool.iterdir()) == ["c.log"]
+    (ckpt / "commits/2").write_text("v1\n{}\n")
+    assert prune_spool(str(ckpt), str(spool), 1) == 2
+    assert not list(spool.iterdir())
+
+
 def test_truncation_restarts_from_zero(tmp_path):
     watch, spool, t = mk(tmp_path)
     f = watch / "tr.log"
@@ -258,6 +290,41 @@ def test_tailed_pipeline_survives_rotation_live(spark, tmp_path):
         tailer.stop()
     assert sorted(delivered_messages(out)) == [
         "after-rotate", "appended-pre-rotate", "before"]
+
+
+def test_tailed_drain_ships_files_bigger_than_one_chunk(spark, tmp_path,
+                                                       monkeypatch):
+    """A backfill (available_now) delivers every line of a file that
+    one poll's max_chunk_bytes cannot cover, in a single run; the
+    drain ends with a trailing partial line left unread."""
+    watch = tmp_path / "logs"
+    watch.mkdir()
+    lines = [f"line-{i:03d}" for i in range(40)]
+    (watch / "big.log").write_text(
+        "".join(f"{ln}\n" for ln in lines) + "part")
+    (watch / "small.log").write_text("x\n")
+    out = tmp_path / "delivered"
+
+    load = TailFollower.load
+
+    def small_chunks(self):
+        self.max_chunk_bytes = 64             # big.log is 364 bytes
+        return load(self)
+
+    monkeypatch.setattr(TailFollower, "load", small_chunks)
+    ckpt, spool = tmp_path / "ckpt", tmp_path / "spool"
+    cfg = PipelineConfig(watch_dir=str(watch), glob="*.log",
+                         origin="inst-d", checkpoint_dir=str(ckpt),
+                         available_now=True)
+    query, stats, tailer = build_tailed_pipeline(
+        spark, cfg, JsonDirTransport(str(out)), spool_dir=str(spool))
+    query.awaitTermination(120)
+    tailer.stop()
+    assert len(list(spool.glob("*.log"))) > 1
+    assert sorted(delivered_messages(out)) == lines + ["x"]
+    # every batch is committed, so every spool file can go
+    prune_spool(str(ckpt), str(spool), -1)
+    assert not list(spool.glob("*.log"))
 
 
 def test_tailed_pipeline_keys_records_by_watched_file(spark, tmp_path):
