@@ -28,6 +28,7 @@ local file sink (``file``), whether or not boto3 is installed.
 
 from __future__ import annotations
 
+import glob as globmod
 import os
 import signal
 import sys
@@ -75,16 +76,19 @@ def run(env: dict[str, str] | None = None,
     # watch structure of the reference (main.go:259,285); each keeps
     # its checkpoint at <ckpt>/<id> and its spool at <ckpt>/<id>-spool
     ckpt = env.get("CHECKPOINT_DIR", "/tmp/l2k-ckpt")
-    targets = ([(f"f{i}", os.path.dirname(f) or ".", os.path.basename(f))
+    # a file target tails exactly that path; a dir target recurses
+    targets = ([(f"f{i}", os.path.dirname(f) or ".",
+                 globmod.escape(os.path.basename(f)))
                 for i, f in enumerate(files)]
-               + [(f"d{i}", d.root, d.glob) for i, d in enumerate(dirs)])
-    for _, watch_dir, _ in targets:
-        # the tailer globs its root recursively: it would re-ship its
-        # own spool files, forever
-        root = os.path.realpath(watch_dir)
+               + [(f"d{i}", d.root, "**/" + d.glob)
+                  for i, d in enumerate(dirs)])
+    for d in dirs:
+        # a dir target's tailer globs its root recursively: it would
+        # re-ship its own spool files, forever
+        root = os.path.realpath(d.root)
         if os.path.commonpath([root, os.path.realpath(ckpt)]) == root:
             print(f"CHECKPOINT_DIR {ckpt} lies under the watched "
-                  f"directory {watch_dir}", file=sys.stderr)
+                  f"directory {d.root}", file=sys.stderr)
             return 2
 
     spark = get_session("logs-to-kinesis-spark")

@@ -136,7 +136,7 @@ EVENT_TYPE_PAYLOAD = {
 }
 
 # ---------------------------------------------------------------------------
-# Fixture tables (driver-generated; /root/repo/FIXTURES.md)
+# Fixture tables (driver-generated; FIXTURES.md at the repo root)
 # ---------------------------------------------------------------------------
 
 FIXTURE_TABLES = (

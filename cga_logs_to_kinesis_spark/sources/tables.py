@@ -1,7 +1,7 @@
 """Fixture-table readers.
 
 All relational inputs come from driver-generated parquet at
-``{sf_dir}/{name}.parquet`` (see /root/repo/TESTDATA.md).  Readers are
+``{sf_dir}/{name}.parquet`` (see TESTDATA.md at the repo root).  Readers are
 plain ``spark.read.parquet`` so Catalyst keeps predicate pushdown,
 column pruning, and partition pruning; the only special case is
 ``events``, whose ``ts`` column has shipped in two physical forms

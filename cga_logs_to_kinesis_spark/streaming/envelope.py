@@ -9,9 +9,11 @@ and ``source_instance=<file path>`` — which doubles as the Kinesis
 partition key (``main.go:346``).
 
 Spark-first realization: a narrow ``select`` over the ``text`` file
-source — ``input_file_name()`` supplies the path, and the whole
-projection stays in whole-stage codegen.  Works identically on a batch
-read and on ``readStream`` (the streaming pipeline in pipeline.py).
+source — ``input_file_name()`` supplies the path, or, on the tailed
+pipeline, the ``path`` column decoded from each spool line — and the
+whole projection stays in whole-stage codegen.  Works identically on a
+batch read and on ``readStream`` (the streaming pipeline in
+pipeline.py).
 """
 
 from __future__ import annotations
@@ -37,8 +39,8 @@ def envelope_projection(lines: DataFrame, origin: str) -> DataFrame:
     processing wall clock, not anything parsed from the line.
     ``source_instance`` and ``partition_key`` are the line's file path:
     the frame's `path` column if it has one (the tailed pipeline reads
-    spool chunks and puts the watched file's path there), else
-    ``input_file_name()``.
+    spool files, whose every line carries the watched file's path, and
+    puts that path there), else ``input_file_name()``.
     """
     path = (F.col("path") if "path" in lines.columns
             else F.input_file_name())

@@ -21,7 +21,7 @@ TailFollower` bridge (§7.4.1 option b) in front of this same pipeline.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -44,7 +44,7 @@ class PipelineConfig:
     """Engine config ≈ the reference's env-var surface
     (main.go:375-407, ctl.erb:17-27)."""
     watch_dir: str                       # DIRS_TO_WATCH root
-    glob: str = "*.log"                  # the /**/ glob part
+    glob: str = "*.log"                  # relative to watch_dir
     origin: str = "spark-engine"         # $INSTANCE
     checkpoint_dir: str | None = None
     flush_interval_s: int = FLUSH_INTERVAL_S
@@ -56,13 +56,8 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig,
                    sink_cfg: SinkConfig | None = None,
                    ) -> tuple[StreamingQuery, DeliveryStats]:
     """Assemble and start the streaming query. Returns (query, stats)."""
-    return _start(cfg, _read_lines(spark, cfg), transport, sink_cfg)
-
-
-def _read_lines(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    return (spark.readStream.format("text")
-            .option("pathGlobFilter", cfg.glob)
-            .load(cfg.watch_dir))
+    lines = spark.readStream.text(cfg.watch_dir, pathGlobFilter=cfg.glob)
+    return _start(cfg, lines, transport, sink_cfg)
 
 
 def _start(cfg: PipelineConfig, lines: DataFrame, transport: Transport,
@@ -90,7 +85,6 @@ def build_tailed_pipeline(spark: SparkSession, cfg: PipelineConfig,
                           transport: Transport,
                           spool_dir: str,
                           sink_cfg: SinkConfig | None = None,
-                          poll_interval_s: float = 0.2,
                           ):
     """Append-following variant (reference ``tail --follow=name
     --retry``, main.go:214-250): a driver-side TailFollower converts
@@ -98,7 +92,7 @@ def build_tailed_pipeline(spark: SparkSession, cfg: PipelineConfig,
     standard pipeline streams the spool directory.  Appends become
     visible within one poll + one trigger, no rotation needed.  Each
     record is keyed by the path of the watched file it came from,
-    decoded from its spool file's name — not by the spool file.
+    which its spool line carries — not by the spool file.
 
     With ``cfg.available_now`` the tailer drains in this thread
     (:meth:`TailFollower.drain`) and runs no thread of its own: the
@@ -109,19 +103,17 @@ def build_tailed_pipeline(spark: SparkSession, cfg: PipelineConfig,
     """
     from cga_logs_to_kinesis_spark.streaming.tailer import (
         TailFollower,
-        spooled_source_path,
+        read_spool,
     )
 
     tailer = TailFollower(watch_dir=cfg.watch_dir, spool_dir=spool_dir,
-                          glob=cfg.glob, poll_interval_s=poll_interval_s)
+                          glob=cfg.glob)
     if cfg.available_now:
         # a started thread's first poll would race this drain and
         # could spool the same lines twice
         tailer.load().drain()
     else:
         tailer.start()
-    spool_cfg = replace(cfg, watch_dir=spool_dir, glob="*.log")
-    lines = _read_lines(spark, spool_cfg).withColumn(
-        "path", spooled_source_path(cfg.watch_dir))
-    query, stats = _start(spool_cfg, lines, transport, sink_cfg)
+    query, stats = _start(cfg, read_spool(spark, spool_dir, cfg.watch_dir),
+                          transport, sink_cfg)
     return query, stats, tailer

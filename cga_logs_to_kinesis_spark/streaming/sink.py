@@ -173,10 +173,8 @@ class DeliveryStats:
     records_sent: int = 0
     records_dropped: int = 0
     request_errors: int = 0
-    batches: int = 0
 
     def update(self, batch_rows: list[dict]) -> None:
-        self.batches += 1
         for r in batch_rows:
             self.records_sent += r["records_sent"]
             self.records_dropped += r["records_dropped"]

@@ -1,4 +1,4 @@
-"""Append-tail bridge: follow open files, spool appends for Spark.
+r"""Append-tail bridge: follow open files, spool appends for Spark.
 
 The reference delegates file-following to ``tail --follow=name
 --retry`` (``main.go:214-250`` — follow by *name* so rotation swaps in
@@ -9,12 +9,13 @@ would see nothing until rotation (SURVEY §7.4.1).
 
 This module is option (b) from that survey section: a small
 driver-side tailer thread that converts *appends* into *spool files*.
-Each poll, every watched file's newly-appended complete lines are
-written as one atomic spool file (tmp + rename, so the Spark file
-source never observes a partial file); the unmodified pipeline then
-streams the spool directory.  The Spark side stays distributed and
-checkpointed — the tailer is deliberately tiny driver-side glue, the
-same division of labor as the reference shelling out to ``tail``.
+Each poll writes one atomic spool file (tmp + rename, so the Spark
+file source never observes a partial file) holding the newly-appended
+complete lines of every watched file; the unmodified pipeline then
+streams the spool directory (:func:`read_spool`).  The Spark side
+stays distributed and checkpointed — the tailer is deliberately tiny
+driver-side glue, the same division of labor as the reference
+shelling out to ``tail``.
 
 Follow-by-name semantics reproduced:
 
@@ -45,17 +46,18 @@ poll, so a daemon restart re-ships nothing (stronger than the
 reference, whose restarted ``tail`` re-emits nothing but also loses
 anything appended while down unless rotation is pending).
 
-Each spool file's name carries the path of the watched file it came
-from, so the pipeline keys every record by that path
-(:func:`spooled_source_path`) and not by the spool chunk — the
-reference's partition key (main.go:346), which keeps one file's
-records in one delivery task, in order.
+A spool line is ``<hex of the watched file's path relative to
+watch_dir>\t<line>\n``, so the pipeline keys each record by the
+watched file (the reference's partition key, main.go:346), not by the
+spool file.  Every piece shipped ends in ``\n`` (an EOF flush or
+oversized segment gets one), so pieces of two files never merge; only
+``\n`` ends a line, so a lone ``\r`` stays inside it and a CRLF line
+keeps its ``\r`` (``ReadBytes('\n')``, main.go:229-249).
 """
 
 from __future__ import annotations
 
 import glob as globmod
-import hashlib
 import json
 import os
 import threading
@@ -63,12 +65,9 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-# Spool file name: <ns:020d>-<uuid hex>-<source>.log, where <source>
-# is the hex of the watched file's path relative to the watch dir.
-SPOOL_NAME_RE = r"\d{20}-[0-9a-f]{32}-([0-9a-f]*)\.log$"
-# Longest <source> that keeps the name, and the ".<name>.tmp" it is
-# first written as, within NAME_MAX (255 bytes).
-_MAX_SOURCE_HEX = 255 - len(f".{0:020d}-{0:032x}-.log.tmp")
+# Bounds append-to-visibility latency at poll + trigger; the reference
+# has tail's inotify (effectively 0) + the 5 s flush interval.
+POLL_INTERVAL_S = 0.2
 
 
 @dataclass
@@ -82,15 +81,13 @@ class _FileState:
 class TailFollower:
     """Follow appends to ``watch_dir/glob``; stage them into spool files.
 
-    ``poll_interval_s`` bounds append-to-visibility latency at
-    poll + trigger; the reference's equivalent knob is tail's inotify
-    (effectively 0) + the 5 s flush interval.
+    ``glob`` is relative to ``watch_dir``; ``**/`` recurses only where
+    it is written.
     """
 
     watch_dir: str
     spool_dir: str
     glob: str = "*.log"
-    poll_interval_s: float = 0.2
     max_chunk_bytes: int = 64 * 1024 * 1024   # bound one spool file
     _states: dict[str, _FileState] = field(default_factory=dict)
     # Open handle per watched path, pinned to the inode recorded in
@@ -104,6 +101,9 @@ class TailFollower:
     # set by a poll whose read of some file stopped at max_chunk_bytes:
     # that file had more on disk than the poll shipped
     _capped: bool = field(default=False, init=False)
+    # this poll's spool lines, and the spool files it wrote so far
+    _buf: bytearray = field(default_factory=bytearray, init=False)
+    _spooled: int = field(default=0, init=False)
 
     # -- state persistence -------------------------------------------------
 
@@ -130,32 +130,34 @@ class TailFollower:
     def poll_once(self) -> int:
         """Scan watched files once; spool new complete lines.
 
-        Returns the number of spool files written.  Public so tests
+        Returns the number of spool files written: one, or more if
+        the poll's lines reach ``max_chunk_bytes``.  Public so tests
         (and availableNow backfills) can drive the tailer
         deterministically without the thread.
         """
-        spooled = 0
+        self._spooled = 0
         self._capped = False
-        pattern = os.path.join(self.watch_dir, "**", self.glob)
+        pattern = os.path.join(self.watch_dir, self.glob)
         seen: set[str] = set()
         for path in globmod.glob(pattern, recursive=True):
             if not os.path.isfile(path):      # S4: regular files only
                 continue
             seen.add(path)
-            spooled += self._poll_file(path)
+            self._poll_file(path)
         # Paths with a retained handle that the glob no longer matches
         # (deleted / renamed away): drain their remaining bytes through
         # the old fd, then release it.
         for path in [p for p in self._handles if p not in seen]:
-            spooled += self._poll_file(path)
+            self._poll_file(path)
         # A vanished file keeps its state (retry semantics: it may come
         # back under the same name via rotation); state for files gone
         # >1 poll is harmless — offset is keyed by (ino, dev) identity.
-        if spooled:
+        self._write_spool(1)
+        if self._spooled:
             self._save_state()
-        return spooled
+        return self._spooled
 
-    def _poll_file(self, path: str) -> int:
+    def _poll_file(self, path: str) -> None:
         st = self._states.setdefault(path, _FileState())
         try:
             stat = os.stat(path)
@@ -164,38 +166,37 @@ class TailFollower:
             # see, then close it.  State is kept (retry semantics — the
             # name may come back; a new inode then takes the rotation
             # branch below and starts from 0).
-            return self._drain_and_close(path, st)
-        rotated = (stat.st_ino, stat.st_dev) != (st.ino, st.dev)
-        spooled = 0
-        if rotated:
+            self._drain_and_close(path, st)
+            return
+        if (stat.st_ino, stat.st_dev) != (st.ino, st.dev):    # rotated
             # Drain the old inode to EOF (complete lines AND the final
             # partial — tail's EOF flush) before adopting the new file.
-            spooled += self._drain_and_close(path, st)
+            self._drain_and_close(path, st)
             st.ino, st.dev, st.offset = stat.st_ino, stat.st_dev, 0
         elif stat.st_size < st.offset:         # truncated in place
             st.offset = 0
         if stat.st_size <= st.offset:
-            return spooled
+            return
         fh = self._handles.get(path)
         if fh is None:
             try:
                 fh = open(path, "rb")
             except OSError:
-                return spooled                 # vanished mid-poll: retry
+                return                         # vanished mid-poll: retry
             fst = os.fstat(fh.fileno())
             if (fst.st_ino, fst.st_dev) != (st.ino, st.dev):
                 fh.close()                     # rotated between stat and
-                return spooled                 # open; next poll adopts it
+                return                         # open; next poll adopts it
             self._handles[path] = fh
         try:
             fh.seek(st.offset)
             chunk = fh.read(min(stat.st_size - st.offset,
                                 self.max_chunk_bytes))
         except OSError:
-            return spooled
+            return
         self._capped |= len(chunk) == self.max_chunk_bytes
         if not chunk:
-            return spooled
+            return
         # Ship only complete lines; keep a trailing partial buffered in
         # the source file by not advancing the offset past it — UNLESS
         # a full max_chunk read found no newline at all, where waiting
@@ -203,23 +204,21 @@ class TailFollower:
         cut = chunk.rfind(b"\n")
         if cut < 0:
             if len(chunk) < self.max_chunk_bytes:
-                return spooled
+                return
             body = chunk
         else:
             body = chunk[:cut + 1]
         st.offset += len(body)
-        self._write_spool(path, body)
-        return spooled + 1
+        self._ship(path, body)
 
-    def _drain_and_close(self, path: str, st: _FileState) -> int:
+    def _drain_and_close(self, path: str, st: _FileState) -> None:
         """Read the retained handle (the inode recorded in ``st``) to
         EOF, shipping everything including a final unterminated line,
-        then close it.  Returns spool files written (0 if no handle —
-        e.g. first poll, or a restart that lost the fd)."""
+        then close it.  Ships nothing if there is no handle — e.g.
+        first poll, or a restart that lost the fd."""
         fh = self._handles.pop(path, None)
         if fh is None:
-            return 0
-        spooled = 0
+            return
         try:
             fst = os.fstat(fh.fileno())
             if (fst.st_ino, fst.st_dev) == (st.ino, st.dev):
@@ -230,7 +229,7 @@ class TailFollower:
                         break
                     if len(chunk) == self.max_chunk_bytes:
                         # More may follow: cut at the last newline so an
-                        # ordinary line never splits across spool files
+                        # ordinary line never splits into two records
                         # (the oversized-line exception applies only to
                         # a single newline-free max_chunk run); the
                         # remainder is re-read from the new offset on
@@ -241,34 +240,38 @@ class TailFollower:
                         if cut >= 0:
                             chunk = chunk[:cut + 1]
                     st.offset += len(chunk)
-                    self._write_spool(path, chunk)
-                    spooled += 1
+                    self._ship(path, chunk)
         except OSError:
             pass                               # old fd unreadable: give up
         finally:
             fh.close()
-        return spooled
 
-    def _write_spool(self, src_path: str, body: bytes) -> None:
-        # One spool file per (file, poll) chunk, named as SPOOL_NAME_RE
-        # says.  The zero-padded nanosecond timestamp makes name order
-        # chunk order (readers that sort by name replay appends in
-        # sequence); the uuid keeps two tailer instances (or a restart
-        # racing an old thread) from colliding on a name the Spark
-        # source has already committed to its file log; the source
-        # path is relative to the watch dir, which every glob result
-        # starts with.
-        rel = os.fsencode(src_path[len(os.path.join(self.watch_dir, "")):])
-        source = rel.hex()
-        if len(source) > _MAX_SOURCE_HEX:
-            # too long for a file name: key by a digest of the path
-            digest = "#" + hashlib.sha256(rel).hexdigest()
-            source = digest.encode().hex()
-        name = f"{time.time_ns():020d}-{uuid.uuid4().hex}-{source}.log"
+    def _ship(self, src_path: str, body: bytes) -> None:
+        """Buffer ``body`` as spool lines, each prefixed by the path of
+        ``src_path`` relative to the watch dir (every glob result starts
+        with it); a body without a final newline gets one."""
+        rel = src_path[len(os.path.join(self.watch_dir, "")):]
+        prefix = os.fsencode(rel).hex().encode() + b"\t"
+        self._buf += prefix + body.removesuffix(b"\n").replace(
+            b"\n", b"\n" + prefix) + b"\n"
+        self._write_spool(self.max_chunk_bytes)   # bound the buffer
+
+    def _write_spool(self, min_bytes: int) -> None:
+        # Write the buffer once it holds min_bytes: at the end of each
+        # poll, or early at max_chunk_bytes.  The zero-padded nanosecond
+        # timestamp makes name order poll order (readers that sort by
+        # name replay appends in sequence); the uuid keeps two tailer
+        # instances (or a restart racing an old thread) from colliding
+        # on a name the Spark source has already committed to its log.
+        if len(self._buf) < min_bytes:
+            return
+        name = f"{time.time_ns():020d}-{uuid.uuid4().hex}.log"
         tmp = os.path.join(self.spool_dir, f".{name}.tmp")
         with open(tmp, "wb") as f:
-            f.write(body)
+            f.write(self._buf)
         os.replace(tmp, os.path.join(self.spool_dir, name))
+        self._buf.clear()
+        self._spooled += 1
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -300,7 +303,7 @@ class TailFollower:
     def _run(self) -> None:
         while not self._stop.is_set():
             self.poll_once()
-            self._stop.wait(self.poll_interval_s)
+            self._stop.wait(POLL_INTERVAL_S)
 
     def stop(self) -> None:
         self._stop.set()
@@ -352,12 +355,14 @@ def prune_spool(checkpoint_dir: str, spool_dir: str, after: int) -> int:
     return upto
 
 
-def spooled_source_path(watch_dir: str):
-    """Column: the path of the watched file that the spool chunk being
-    read came from, decoded from the chunk's name (``_write_spool``).
-    It equals the path the tailer globbed for that file."""
+def read_spool(spark, spool_dir: str, watch_dir: str):
+    """Stream the spool dir as ``value`` (the line) and ``path`` (the
+    watched file it was appended to, as the tailer globbed it)."""
     from pyspark.sql import functions as F
 
-    source = F.regexp_extract(F.input_file_name(), SPOOL_NAME_RE, 1)
-    return F.concat(F.lit(os.path.join(watch_dir, "")),
-                    F.decode(F.unhex(source), "UTF-8"))
+    lines = spark.readStream.text(spool_dir, lineSep="\n",
+                                  pathGlobFilter="*.log")
+    parts = F.split("value", "\t", 2)
+    return lines.select(parts[1].alias("value"), F.concat(
+        F.lit(os.path.join(watch_dir, "")),
+        F.decode(F.unhex(parts[0]), "UTF-8")).alias("path"))

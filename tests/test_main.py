@@ -64,6 +64,42 @@ def test_daemon_drain_mode(tmp_path):
     assert drain() == ["four", "one", "three", "two"]
 
 
+def test_files_to_watch_tails_exactly_the_named_file(tmp_path):
+    """A FILES_TO_WATCH entry names one path, as tail does (reference
+    main.go:214-250): a same-named file in a subdirectory, or a name
+    that the entry would match as a glob, is not tailed."""
+    import os
+    watch = tmp_path / "logs"
+    (watch / "nested").mkdir(parents=True)
+    (watch / "app[1].log").write_text("named\n")
+    (watch / "nested" / "app[1].log").write_text("nested\n")
+    (watch / "app1.log").write_text("glob-match\n")
+    out = tmp_path / "delivered"
+    env = dict(os.environ)
+    env.update({
+        "FILES_TO_WATCH": str(watch / "app[1].log"),
+        "TRANSPORT": "file",
+        "DELIVERY_DIR": str(out),
+        "CHECKPOINT_DIR": str(tmp_path / "ckpt"),
+        "PYSPARK_PYTHON": sys.executable,
+        "PYSPARK_DRIVER_PYTHON": sys.executable,
+    })
+    env.pop("DIRS_TO_WATCH", None)
+    proc = subprocess.run(
+        [sys.executable, "-m", "cga_logs_to_kinesis_spark.main",
+         "--drain"],
+        cwd=REPO, env=env, capture_output=True, text=True,
+        timeout=420)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    import base64
+    delivered = [
+        (base64.b64decode(d["log_message"]["message"]).decode(),
+         d["log_message"]["source_instance"])
+        for f in out.glob("*.jsonl")
+        for d in map(json.loads, f.read_text().splitlines())]
+    assert delivered == [("named", str(watch / "app[1].log"))]
+
+
 def test_daemon_requires_watch_config(tmp_path):
     import os
     env = dict(os.environ)

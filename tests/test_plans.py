@@ -765,9 +765,10 @@ def test_flagship_entry_plan_shape(spark):
     integer-division bucketing inside codegen, partial+final hash
     aggregation around exactly ONE exchange, no join, no sort."""
     import importlib
+    import pathlib
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
     m = importlib.import_module("__spark_entry__")
     df = m.entry(spark)
     assert len(df.collect()) > 0          # the driver's smoke check —

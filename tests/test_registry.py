@@ -8,7 +8,11 @@ accident of import order (the round-1 failure mode).
 
 from __future__ import annotations
 
+import pathlib
+
 from cga_logs_to_kinesis_spark.registry import DRIVER_WINDOW, all_queries
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
 
 DRIVER_CAP = 50
 
@@ -44,13 +48,12 @@ def test_queries_md_is_current():
     import io
     import contextlib
     import importlib.util
-    import pathlib
 
     spec = importlib.util.spec_from_file_location(
-        "gen_queries_md", "/root/repo/tools/gen_queries_md.py")
+        "gen_queries_md", REPO / "tools" / "gen_queries_md.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    committed = pathlib.Path("/root/repo/QUERIES.md").read_text()
+    committed = (REPO / "QUERIES.md").read_text()
     regenerated = mod.render()
     assert regenerated == committed, \
         "QUERIES.md is stale — run: python tools/gen_queries_md.py"
@@ -61,10 +64,9 @@ def test_readme_counts_are_current():
     drift-tested but the README line was not, and shipped stale in r13
     (179/173 vs actual 180/174 — judge nit).  Parse the counts line and
     assert it against the live registry."""
-    import pathlib
     import re
 
-    text = pathlib.Path("/root/repo/README.md").read_text()
+    text = (REPO / "README.md").read_text()
     m = re.search(r"(\d+) registered queries, (\d+) oracle-checked",
                   text)
     assert m, "README.md no longer states registry counts"
@@ -83,7 +85,7 @@ def test_bench_headline_names_resolve():
     crash at driver time (KeyError in the warm loop)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO))
     from bench import HEADLINE
 
     specs = all_queries()

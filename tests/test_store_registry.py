@@ -10,6 +10,8 @@ import pathlib
 
 from cga_logs_to_kinesis_spark.streaming import corpus
 
+REPO = pathlib.Path(__file__).resolve().parents[1]
+
 
 def test_every_registry_reference_exists():
     for fam in corpus.STORE_FAMILIES:
@@ -36,8 +38,7 @@ def test_every_family_has_a_work_envelope_test():
     """The r11+ bar: no store family ships without a measured
     per-batch work envelope.  Each family must have at least one of
     its sinks driven by a test_incremental_stress.py envelope test."""
-    text = pathlib.Path(
-        "/root/repo/tests/test_incremental_stress.py").read_text()
+    text = (REPO / "tests" / "test_incremental_stress.py").read_text()
     for fam in corpus.STORE_FAMILIES:
         assert any(s in text for s in fam.sinks), (
             f"{fam.name}: no sink of {fam.sinks} appears in "
@@ -46,9 +47,9 @@ def test_every_family_has_a_work_envelope_test():
 
 def test_stores_md_is_current():
     spec = importlib.util.spec_from_file_location(
-        "gen_stores_md", "/root/repo/tools/gen_stores_md.py")
+        "gen_stores_md", REPO / "tools" / "gen_stores_md.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    committed = pathlib.Path("/root/repo/docs/STORES.md").read_text()
+    committed = (REPO / "docs" / "STORES.md").read_text()
     assert mod.render() == committed, \
         "docs/STORES.md is stale — run: python tools/gen_stores_md.py"

@@ -29,11 +29,22 @@ def mk(tmp_path):
     return watch, spool, t
 
 
-def spooled_lines(spool):
+def spooled(spool):
+    """(source path relative to the watch dir, line) of every spooled
+    line, in spool order; every spool file ends on a line boundary."""
     out = []
     for f in sorted(spool.glob("*.log")):
-        out.extend(f.read_text().splitlines())
+        body = f.read_bytes()
+        assert body.endswith(b"\n")
+        for rec in body[:-1].split(b"\n"):
+            source, line = rec.split(b"\t", 1)
+            out.append((bytes.fromhex(source.decode()).decode(),
+                        line.decode()))
     return out
+
+
+def spooled_lines(spool):
+    return [line for _, line in spooled(spool)]
 
 
 def test_appends_spool_as_complete_lines(tmp_path):
@@ -119,22 +130,21 @@ def test_oversized_line_no_livelock(tmp_path):
     assert t.poll_once() == 1                 # bytes 8-15, no newline
     assert t.poll_once() == 1                 # final "\n"
     assert t.poll_once() == 0                 # fully consumed: no loop
-    joined = "".join(
-        fp.read_text() for fp in sorted(spool.glob("*.log")))
-    assert joined == "0123456789abcdef\n"
+    # each segment is one record, and every byte ships once
+    assert spooled_lines(spool) == ["01234567", "89abcdef", ""]
     # normal short lines still work afterwards
     with f.open("a") as fh:
         fh.write("ok\n")
     t.poll_once()
-    assert joined + "ok\n" == "".join(
-        fp.read_text() for fp in sorted(spool.glob("*.log")))
+    assert spooled_lines(spool) == ["01234567", "89abcdef", "", "ok"]
 
 
 def test_drain_cuts_chunks_at_newlines(tmp_path):
     """A rotation drain bigger than max_chunk_bytes must not split
     ordinary lines at arbitrary byte boundaries: every non-final drain
     chunk is cut at its last newline (the remainder carries into the
-    next read), and only the true EOF flush ships a partial line."""
+    next read), and only the true EOF flush ships a partial line —
+    each as one record."""
     watch, spool, t = mk(tmp_path)
     t.max_chunk_bytes = 8
     f = watch / "rot.log"
@@ -148,10 +158,6 @@ def test_drain_cuts_chunks_at_newlines(tmp_path):
     t.poll_once()
     assert spooled_lines(spool) == ["x", "aaaa", "bbbb", "cccc", "dd",
                                     "new"]
-    # every spool file but the EOF flush ends on a line boundary
-    bodies = [fp.read_bytes() for fp in sorted(spool.glob("*.log"))]
-    partials = [b for b in bodies if not b.endswith(b"\n")]
-    assert partials == [b"cccc\ndd"]
 
 
 def test_prune_spool_keeps_uncommitted_batches(tmp_path):
@@ -221,7 +227,8 @@ def delivered_messages(out):
 
 def test_tailed_pipeline_ships_appends_live(spark, tmp_path):
     """The full bridge: append to a watched open file while the query
-    runs; rows are delivered without any rotation."""
+    runs; rows are delivered without any rotation.  Only a newline ends
+    a line: a lone carriage return stays inside its message."""
     watch = tmp_path / "logs"
     watch.mkdir()
     f = watch / "app.log"
@@ -234,22 +241,23 @@ def test_tailed_pipeline_ships_appends_live(spark, tmp_path):
                          flush_interval_s=1)
     query, stats, tailer = build_tailed_pipeline(
         spark, cfg, JsonDirTransport(str(out)),
-        spool_dir=str(tmp_path / "spool"), poll_interval_s=0.1)
+        spool_dir=str(tmp_path / "spool"))
     try:
         deadline = time.time() + 60
         while stats.records_sent < 1 and time.time() < deadline:
             time.sleep(0.2)
         assert stats.records_sent >= 1, "initial content never delivered"
 
-        with f.open("a") as fh:                 # append — no rotation
-            fh.write("second\nthird\n")
-        while stats.records_sent < 3 and time.time() < deadline:
+        with f.open("ab") as fh:                # append — no rotation
+            fh.write(b"second\nthird\nfo\rur\n")
+        while stats.records_sent < 4 and time.time() < deadline:
             time.sleep(0.2)
-        assert stats.records_sent == 3, "appends not delivered"
+        assert stats.records_sent == 4, "appends not delivered as sent"
     finally:
         query.stop()
         tailer.stop()
-    assert sorted(delivered_messages(out)) == ["first", "second", "third"]
+    assert sorted(delivered_messages(out)) == ["first", "fo\rur", "second",
+                                               "third"]
 
 
 def test_tailed_pipeline_survives_rotation_live(spark, tmp_path):
@@ -268,7 +276,7 @@ def test_tailed_pipeline_survives_rotation_live(spark, tmp_path):
                          flush_interval_s=1)
     query, stats, tailer = build_tailed_pipeline(
         spark, cfg, JsonDirTransport(str(out)),
-        spool_dir=str(tmp_path / "spool"), poll_interval_s=0.2)
+        spool_dir=str(tmp_path / "spool"))
     try:
         deadline = time.time() + 60
         while stats.records_sent < 1 and time.time() < deadline:
@@ -340,13 +348,13 @@ def test_tailed_pipeline_keys_records_by_watched_file(spark, tmp_path):
         p.write_text(f"{name}-0\n")
     out = tmp_path / "delivered"
 
-    cfg = PipelineConfig(watch_dir=str(watch), glob="*.log",
+    cfg = PipelineConfig(watch_dir=str(watch), glob="**/*.log",
                          origin="inst-k",
                          checkpoint_dir=str(tmp_path / "ckpt"),
                          flush_interval_s=1)
     query, stats, tailer = build_tailed_pipeline(
         spark, cfg, JsonDirTransport(str(out)),
-        spool_dir=str(tmp_path / "spool"), poll_interval_s=0.1)
+        spool_dir=str(tmp_path / "spool"))
     try:
         deadline = time.time() + 90
 
@@ -386,29 +394,18 @@ def test_tailed_pipeline_keys_records_by_watched_file(spark, tmp_path):
     assert keys == {name: {str(p)} for name, p in paths.items()}
 
 
-def test_spool_name_carries_source_path(tmp_path):
-    """The spool file name encodes the watched file's path relative to
-    the watch dir.  A path too long for that is encoded as a digest
-    instead, so the poll never fails on it (the tmp name written first
-    is the longest name involved)."""
-    import hashlib
-    import re
-
-    from cga_logs_to_kinesis_spark.streaming.tailer import (
-        _MAX_SOURCE_HEX,
-        SPOOL_NAME_RE,
-    )
-
+def test_one_spool_file_per_poll_keys_lines_by_path(tmp_path):
+    """One poll writes one spool file for every watched file, and each
+    line in it carries the path, relative to the watch dir, of the
+    file it came from — however long that path is."""
     watch, spool, t = mk(tmp_path)
-    n = _MAX_SOURCE_HEX // 2 - len("/a.log")
-    longest, too_long = "d" * n + "/a.log", "e" * (n + 1) + "/a.log"
-    for i, rel in enumerate(["a.log", longest, too_long]):
-        (watch / rel).parent.mkdir(exist_ok=True)
-        (watch / rel).write_text(f"{i}\n")
-    assert t.poll_once() == 3
-    sources = {}
-    for f in spool.glob("*.log"):
-        hexed = re.search(SPOOL_NAME_RE, f.name).group(1)
-        sources[f.read_text()] = bytes.fromhex(hexed).decode()
-    digest = "#" + hashlib.sha256(too_long.encode()).hexdigest()
-    assert sources == {"0\n": "a.log", "1\n": longest, "2\n": digest}
+    t.glob = "**/*.log"
+    rels = ["a.log", "d" * 60 + "/" + "e" * 60 + "/b.log",
+            "d" * 60 + "/" + "f" * 90 + "/c.log"]
+    for i, rel in enumerate(rels):
+        (watch / rel).parent.mkdir(parents=True, exist_ok=True)
+        (watch / rel).write_text(f"{i}\n{i}{i}\n")
+    assert t.poll_once() == 1
+    assert len(list(spool.glob("*.log"))) == 1
+    assert sorted(spooled(spool)) == sorted(
+        (rel, f"{i}" * n) for i, rel in enumerate(rels) for n in (1, 2))

@@ -23,6 +23,7 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -30,7 +31,8 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 from cga_logs_to_kinesis_spark.registry import all_queries  # noqa: E402
 from cga_logs_to_kinesis_spark.schema import FIXTURE_TABLES  # noqa: E402

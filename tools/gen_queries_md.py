@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from cga_logs_to_kinesis_spark.registry import all_queries  # noqa: E402
 
@@ -43,7 +45,7 @@ def render() -> str:
 
 def main() -> None:
     content = render()
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
         f.write(content)
     n = sum(1 for ln in content.splitlines() if ln.startswith("| `"))
     print(f"wrote QUERIES.md ({n} queries)")
