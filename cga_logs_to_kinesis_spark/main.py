@@ -131,7 +131,7 @@ def run(env: dict[str, str] | None = None,
     server = None
     if env.get("PORT"):
         server = serve_metrics(
-            lambda: render_all_metrics(metrics, stats_list),
+            lambda: render_all_metrics(metrics, stats_list, tailers),
             int(env["PORT"]))
 
     def shutdown(_sig, _frm):
@@ -142,9 +142,15 @@ def run(env: dict[str, str] | None = None,
     signal.signal(signal.SIGTERM, shutdown)
     # delete committed spool files once per trigger, so the spool the
     # file source lists on every trigger stays small
+    rc = 0
     while all(q.isActive for q in queries):
         time.sleep(FLUSH_INTERVAL_S)
         prune()
+        if not all(t.is_alive() for t in tailers):
+            print("a tailer thread died: no further lines would ship",
+                  file=sys.stderr)
+            rc = 1
+            break
     shutdown(None, None)                # one ended: stop the others
     for t in tailers:
         t.stop()
@@ -154,27 +160,31 @@ def run(env: dict[str, str] | None = None,
     metrics_path = env.get("METRICS_PATH")
     if metrics_path:
         with open(metrics_path, "w") as f:
-            f.write(render_all_metrics(metrics, stats_list))
+            f.write(render_all_metrics(metrics, stats_list, tailers))
     if server is not None:
         server.shutdown()
     spark.stop()
-    return 0
+    return rc
 
 
-def render_all_metrics(metrics, stats_list) -> str:
+def render_all_metrics(metrics, stats_list, tailers) -> str:
     """Engine (A3) + delivery (A2) counters in one exposition page —
     the reference's records_sent/records_dropped/request_errors family
-    (main.go:28-47) alongside the streaming-progress metrics."""
+    (main.go:28-47) alongside the streaming-progress metrics and the
+    tailers' failed polls."""
     sent = sum(s.records_sent for s in stats_list)
     dropped = sum(s.records_dropped for s in stats_list)
     errors = sum(s.request_errors for s in stats_list)
+    tailer_errors = sum(t.errors for t in tailers)
     return metrics.render_prometheus() + (
         "# TYPE engine_records_sent_total counter\n"
         f"engine_records_sent_total {sent}\n"
         "# TYPE engine_records_dropped_total counter\n"
         f"engine_records_dropped_total {dropped}\n"
         "# TYPE engine_request_errors_total counter\n"
-        f"engine_request_errors_total {errors}\n")
+        f"engine_request_errors_total {errors}\n"
+        "# TYPE engine_tailer_errors_total counter\n"
+        f"engine_tailer_errors_total {tailer_errors}\n")
 
 
 if __name__ == "__main__":

@@ -447,8 +447,7 @@ register(QuerySpec(
 
 def char_diversity_frame(docs: DataFrame) -> DataFrame:
     """Pure row-local projection (no shuffle, no state) — composes
-    unchanged over batch and streaming inputs; the streaming twin in
-    streaming/corpus.py is literally this function."""
+    unchanged over batch and streaming inputs."""
     # per-row: chars -> sorted -> group equal runs via aggregate over
     # the distinct set; sum of squared counts stays in int64
     chars = F.expr("filter(split(lower(text), ''), c -> c != '')")

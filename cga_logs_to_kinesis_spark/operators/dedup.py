@@ -928,8 +928,8 @@ def minhash_incremental(seen_sh: DataFrame,
     exact Jaccard, candidate count, and the near-dup verdict.  Both
     inputs are pre-shingled (shingle_docs) frames."""
     # checkpoint: the computed bucket table feeds the cap's count fold
-    # AND its probe (the streaming twin passes a store read instead,
-    # which just re-scans)
+    # AND its probe (a persisted index passed in instead just
+    # re-scans)
     return minhash_incremental_from_index(
         banded_buckets(seen_sh).localCheckpoint(), seen_sh, batch_sh)
 
@@ -938,8 +938,8 @@ def minhash_incremental_from_index(seen_b: DataFrame,
                                    seen_sh: DataFrame,
                                    batch_sh: DataFrame) -> DataFrame:
     """Index-level form: ``seen_b`` is the PERSISTED (doc_id, band2,
-    sig2) bucket table — what the streaming twin stores between
-    crawl drops so the seen corpus is never re-banded."""
+    sig2) bucket table, kept between crawl drops so the seen corpus
+    is never re-banded."""
     from cga_logs_to_kinesis_spark.functions.buckets import (
         bucket_bounded,
     )
@@ -955,9 +955,8 @@ def minhash_incremental_from_index(seen_b: DataFrame,
         F.col("doc_id").alias("batch_doc"), "band2", "sig2")
     # batch_doc != seen_doc: a doc can never be its own near-dup.  In
     # the batch operator the sides are disjoint so this never fires;
-    # it exists for the streaming twin, where an at-least-once replay
-    # may present an index that already contains the batch's own docs
-    # (belt to the sink's batch_id < current read filter).
+    # it guards a persisted index that already contains the batch's
+    # own docs (an at-least-once replay).
     cand = (batch_b.join(seen_idx, ["band2", "sig2"])
             .filter(F.col("batch_doc") != F.col("seen_doc"))
             .groupBy("batch_doc", "seen_doc")

@@ -1299,9 +1299,7 @@ _POISON_CYR = "аеорсху"
 
 def confusable_scrub_columns(text) -> tuple:
     """(n_confusables, scrubbed) over the given text column — the
-    row-local confusable repair, shared by the batch query and
-    ``streaming/corpus.py::streaming_homoglyph_scrub`` so the
-    homoglyph map cannot drift between the two."""
+    row-local confusable repair."""
     scrubbed = F.translate(text, HOMOGLYPH_CYR, HOMOGLYPH_LAT)
     n = F.coalesce(F.regexp_count(text,
                                   F.lit(f"[{HOMOGLYPH_CYR}]")),

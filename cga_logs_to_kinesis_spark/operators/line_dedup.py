@@ -19,7 +19,7 @@ The drop list is bounded by corpus_lines / threshold — which is tiny
 (and the anti-join broadcastable) only when the threshold SCALES WITH
 THE CORPUS: the absolute default ``BOILER_DF = 5`` bounds it at 20%
 of all line occurrences, so at 100 TB use the corpus-relative
-``df_share`` form (the ``fit_stop_tokens`` convention), which bounds
+``df_share`` form, which bounds
 the list at 1/df_share entries regardless of corpus size.  Either
 way the apply is a LEFT ANTI join on a uniform md5 fp key: AQE
 broadcasts a small list and otherwise degrades to a shuffled
@@ -113,8 +113,7 @@ def line_flat(docs: DataFrame, *extra_cols: str) -> DataFrame:
 
 def relative_min_df(n_docs: int, share_num: int = 2,
                     share_den: int = 100) -> int:
-    """The corpus-RELATIVE boilerplate threshold (the
-    ``fit_stop_tokens`` convention, r14 verdict #2): a line is
+    """The corpus-RELATIVE boilerplate threshold: a line is
     boilerplate when it appears in >= ceil(n_docs * share) distinct
     documents, floored at BOILER_DF so tiny corpora don't flag
     everything.  This is the 100 TB form — it bounds the drop list at
@@ -340,8 +339,7 @@ def q_line_dedup_scrub_rel(spark: SparkSession,
     documents (floored at BOILER_DF), which bounds the drop list at
     <= 50 line-shares regardless of corpus size and keeps the
     anti-join build side broadcastable at any scale.  ``n_docs`` is
-    one bounded scalar count — the model-fitting convention
-    (fit_stop_tokens); everything else is the shared scrub tail."""
+    one bounded scalar count; everything else is the shared scrub tail."""
     from cga_logs_to_kinesis_spark.sources import load_table
 
     tune_session(spark)
@@ -553,10 +551,8 @@ def q_line_dedup_intra(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def line_profile_columns() -> dict[str, Column]:
-    """The profile columns over a ``text`` column, shared by the
-    batch query and the streaming twin
-    (``streaming/corpus.py::streaming_doc_line_profile``) so the
-    semantics cannot drift.  avg_line_chars uses the algebraic
+    """The profile columns over a ``text`` column.  avg_line_chars
+    uses the algebraic
     identity sum(len(line)) = len(text) - (n_lines - 1): one integer
     subtraction instead of a per-line fold, and a SINGLE int/int
     double division is IEEE-identical across engines."""

@@ -1477,9 +1477,8 @@ CHUNK_STRIDE = 48              # 16-token overlap between neighbors
 
 def chunk_windows(docs: DataFrame) -> DataFrame:
     """The row-local chunking core — pure projections + a bounded
-    explode, so it composes unchanged over batch AND streaming inputs
-    (streaming twin: ``streaming/corpus.py::streaming_chunk_overlap``,
-    parity bit-for-bit by construction)."""
+    explode, so it composes unchanged over batch AND streaming
+    inputs."""
     W, S = CHUNK_WIDTH, CHUNK_STRIDE
     toks = F.split(F.trim("text"), r"[ \t\n\x0B\f\r]+")
     # integer ceil((n-W)/S)+1; the greatest(1, _) also absorbs the
@@ -1606,8 +1605,7 @@ def blocklist_hit_grams_col(terms: tuple[str, ...] = BLOCKLIST
     """Array of MATCHING blocklist grams over a prebuilt ``toks``
     column — the row-local matcher shared by the batch hits frame
     (which explodes it), the gate report (which sizes it), the apply
-    (which keeps size = 0), and the streaming twin.  One matcher,
-    every face.
+    (which keeps size = 0).  One matcher, every face.
 
     Per n-gram order the blocklist contains: probe each position's
     FIRST token against the set of term-initial tokens (the trie's

@@ -807,8 +807,8 @@ def image_incremental_from_index(band_index: DataFrame,
     never re-hashing the corpus.  The seen side is hot-band capped
     (bucket_bounded hi, the ann_incremental_from_index convention —
     partial-agg counts, never a Window over the degenerate band);
-    the batch_doc != seen_doc guard covers the streaming twin's
-    at-least-once replay window."""
+    the batch_doc != seen_doc guard covers an index that already
+    holds the batch's own images (an at-least-once replay)."""
     from cga_logs_to_kinesis_spark.functions.buckets import (
         bucket_bounded,
     )

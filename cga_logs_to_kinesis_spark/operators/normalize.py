@@ -117,8 +117,7 @@ def md5_keep(salt: str, p: F.Column) -> F.Column:
     doc_id compared against p rendered as a hex cap — a pure string
     compare, so the draw is cluster-layout independent and identical
     in both engines.  ONE definition, shared by every sampling apply
-    (quality_weighted_sample, mixture_apply, their streaming twins)
-    so the cap rendering cannot drift between them."""
+    (quality_weighted_sample, mixture_apply) so the cap rendering cannot drift between them."""
     cap_hex = F.lower(F.lpad(
         F.hex(F.floor(p * F.lit(float(_MAX32))).cast("bigint")),
         8, "0"))
@@ -129,8 +128,7 @@ def md5_keep(salt: str, p: F.Column) -> F.Column:
 
 
 def weighted_sample_columns() -> dict[str, F.Column]:
-    """The weight and keep-decision Columns, shared by the batch query
-    and the streaming twin (row-local, so parity is by construction)."""
+    """The weight and keep-decision Columns (row-local)."""
     w = F.least(F.lit(1.0), F.col("n_chars").cast("double") / 2000.0)
     return {"weight": w, "kept": md5_keep("wsample", w)}
 

@@ -400,8 +400,7 @@ def setjoin_incremental_from_index(seen_idx: DataFrame,
                                    seen_sets: DataFrame,
                                    batch_sets: DataFrame) -> DataFrame:
     """Index-level form: ``seen_idx`` is the PERSISTED (doc_id, n, fp)
-    prefix-entry table — what the streaming twin stores between crawl
-    drops so the seen corpus is never re-shingled or re-indexed.
+    prefix-entry table, kept between crawl drops so the seen corpus is never re-shingled or re-indexed.
     Returns every (batch_doc, seen_doc) pair with exact Jaccard >= T:
     (batch_doc, seen_doc, n_inter, n_union, jaccard)."""
     # Versioned store migration (r19): indexes persisted before the
@@ -420,9 +419,8 @@ def setjoin_incremental_from_index(seen_idx: DataFrame,
                   F.col("n").alias("n_b"),
                   F.col("pos").alias("pos_b"), "fp"))
     # batch_doc != seen_doc: disjoint sides in the batch operator;
-    # the guard exists for the streaming twin, where an at-least-once
-    # replay may present an index already containing the batch's own
-    # docs (belt to the sink's batch_id < current read filter).
+    # the guard covers a persisted index already containing the
+    # batch's own docs (an at-least-once replay).
     # Positional filter (PPJoin, Xiao et al., WWW 2008 — the batch
     # self-join's r18 filter carried into the incremental index): a
     # match at 1-based positions (pos_b, pos_s) of the SHARED

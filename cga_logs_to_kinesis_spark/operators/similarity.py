@@ -734,9 +734,8 @@ def semdedup_assign_with_cents(emb: DataFrame,
     centroid from a GIVEN centroid frame (ties → lowest centroid id),
     keeping the cosine to that centroid.  Row-local given the
     centroids — a vector's assignment never depends on any other
-    vector, which is what lets the streaming twin append per-batch
-    assignment partials (streaming/corpus.py::semdedup_assign_sink)
-    that stay valid forever under the fixed artifact.
+    vector, so per-batch assignments stay valid forever under the
+    fixed artifact.
 
     The arg-max is a groupBy of ``max(struct(ccos, -centroid_id))``
     rather than a row_number window (optimization r18, guide §2.3):
@@ -1543,8 +1542,7 @@ _gate_oracles("ann_truncation_recall")
 # 2^4 buckets the candidate fan-out is corpus/16 per table; at real
 # scale raise N_PLANES so bucket size stays bounded (same knob
 # discussion as cosine_topk_lsh).  batch != seen filtering is replay
-# defense for the streaming twin (ann_index_sink), exactly like
-# minhash_incremental_from_index.
+# defense, exactly like minhash_incremental_from_index.
 
 ANN_INCR_K = 3
 
@@ -1685,10 +1683,7 @@ _gate_oracles("ann_incremental")
 # pairs form ONLY across batch x store WITHIN a cluster (the SemDeDup
 # blocking, never all-pairs), and the exact Arrow cosine scores those
 # candidates alone.  Per-batch work is O(|batch| + |store|/K x
-# |batch|-per-cluster) — linear in the store, pinned by
-# tests/test_incremental_stress.py; the streaming twin is
-# streaming/corpus.py::semdedup_assign_sink (three batch_id-keyed
-# writes, crash-replay parity pinned in test_corpus_stream.py).
+# |batch|-per-cluster) — linear in the store.
 
 def semdedup_incremental_from_assign(seen_assign: DataFrame,
                                      seen_vecs: DataFrame,
@@ -1699,10 +1694,9 @@ def semdedup_incremental_from_assign(seen_assign: DataFrame,
     ``batch_vecs``: the arriving batch, assigned under the SAME fixed
     centroids.  Returns every batch x seen semantic near-dup pair
     (cluster, batch_vec, seen_vec, cosine >= SEMDEDUP_THRESHOLD).
-    The batch_vec != seen_vec guard covers the streaming twin's
-    at-least-once replay window, where the store may already contain
-    the batch's own vectors (belt to the sink's batch_id < current
-    read filter, the setjoin_incremental_from_index convention)."""
+    The batch_vec != seen_vec guard covers a store that already
+    contains the batch's own vectors (an at-least-once replay; the
+    setjoin_incremental_from_index convention)."""
     b = batch_assign.select(F.col("vec_id").alias("batch_vec"),
                             "cluster")
     s = seen_assign.select(F.col("vec_id").alias("seen_vec"),
@@ -1999,9 +1993,7 @@ def cosine_topk_from_ivf_index(assign: DataFrame, codes: DataFrame,
     (``cand_id, cluster``), SQ8 codes (``cand_id, codes, scale``), and
     exact vectors (``cand_id, ce``) for the re-rank.  This is the ONE
     definition shared by the batch query (which builds the index
-    inline) and the persisted-index serving path
-    (streaming/corpus.py::ivf_index_sink + cosine_topk_from_ivf_store),
-    so batch/served parity holds by construction."""
+    inline) and any persisted-index serving path."""
     probes = _nearest_clusters(queries, cents, "query_id", IVF_NPROBE)
     # Prune BEFORE scoring: candidate ids = corpus rows whose cluster
     # is probed by the query.  This equi-join is the inverted-file

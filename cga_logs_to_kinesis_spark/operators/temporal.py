@@ -359,10 +359,7 @@ FUNNEL_GAP_US = 3 * 86_400 * 1_000_000     # 3 days between stages
 
 def funnel_feed(events: DataFrame) -> DataFrame:
     """The funnel's event projection — (user_id, stage event_type,
-    exact µs) pruned to the funnel's event types before any shuffle.
-    ONE definition shared by the batch query and the streaming state
-    sink (streaming/corpus.py::funnel_state_sink) so the stage
-    semantics cannot drift."""
+    exact µs) pruned to the funnel's event types before any shuffle."""
     return (events
             .filter(F.col("event_type").isin(*FUNNEL_STAGES))
             .select("user_id", "event_type",

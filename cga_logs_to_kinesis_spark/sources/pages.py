@@ -7,10 +7,6 @@ output is a reader over delivered pages: JSON-lines/JSON-page files
 written by FileTransport / JsonDirTransport (or downloaded from a real
 stream by any fetcher), decoded back into Envelope rows with
 ``from_json`` against the declared schema.
-
-The *streaming* variant lives in ``sources/consumer.py``: a
-GetShardIterator/GetRecords paging client feeding a ``readStream``
-spool; it reuses :func:`decode_envelopes` below for the payload.
 """
 
 from __future__ import annotations

@@ -1,24 +1,15 @@
-"""Streaming corpus preparation: the batch operators, as a stream.
+"""Incremental corpus stores: batch reports folded from micro-batches.
 
 A training-data pipeline at 100 TB doesn't re-scan the corpus per run
-— new documents arrive continuously (crawl drops, upload batches) and
-flow through the same filters incrementally.  This module composes the
-batch corpus operators (``operators/text.py``,
-``operators/llm_pipeline.py``) over a Structured Streaming source:
+— new documents arrive continuously (crawl drops, upload batches).
+Each store family here pairs a ``foreachBatch`` sink that writes
+per-batch mergeable partials (batch_id-keyed, so a replay overwrites
+its own partition) with readers that fold them into the batch
+operator's exact report, and compactors that fold old partitions into
+a watermark base.  ``STORE_FAMILIES`` at the end indexes them.
 
-* quality filtering is the *same Column expressions* as the batch
-  report (``quality_feature_columns``) applied inline — narrow, zero
-  state, so batch/stream parity holds by construction and
-  ``tests/test_corpus_stream.py`` asserts it row-for-row;
-* exact dedup becomes ``dropDuplicates`` on the 16-byte text digest —
-  Spark keeps first-seen digests as streaming state (the streaming
-  twin of ``dedup_exact_survivors``).  State grows with distinct docs;
-  for bounded state on true infinite streams, bound it with an
-  event-time watermark (``dropDuplicatesWithinWatermark``,
-  demonstrated in ``tests/test_watermark.py``) — the fixture documents
-  carry no event time, so the backfill form here is the honest one;
-* per-language running stats use update/complete-mode aggregation, the
-  streaming twin of the batch ``corpus_stats`` report.
+No registered query, daemon path or benchmark reaches this module;
+only its tests do.
 """
 
 from __future__ import annotations
@@ -26,41 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cga_logs_to_kinesis_spark.operators.text import (
-    quality_feature_columns,
-)
-
-# One definition of "keep" (the thresholds of
-# operators/text.py::quality_filter_survivors), shared by the batch
-# and streaming paths.
-def keep_predicate() -> F.Column:
-    c = quality_feature_columns()
-    return ((c["n_tokens"] >= 10)
-            & (c["punct_ratio"] <= 0.10)
-            & (c["digit_ratio"] <= 0.20)
-            & (c["mean_token_len"] >= 3.0)
-            & (c["mean_token_len"] <= 12.0))
-
-
 def stream_documents(spark: SparkSession, src_dir: str,
                      schema: str | None = None) -> DataFrame:
     """File stream over a documents-shaped parquet directory."""
     schema = schema or ("doc_id long, text string, lang string, "
                         "source string, n_chars long")
     return spark.readStream.schema(schema).parquet(src_dir)
-
-
-def corpus_keep_filter(docs: DataFrame) -> DataFrame:
-    """Quality-filtered survivors — identical semantics on batch and
-    streaming inputs (a per-row predicate, no join, no state)."""
-    return docs.filter(keep_predicate())
-
-
-def streaming_dedup_exact(docs: DataFrame) -> DataFrame:
-    """First-seen exact dedup on the text digest (streaming state =
-    16-byte digests, never the text)."""
-    return (docs.withColumn("digest", F.md5("text"))
-            .dropDuplicates(["digest"]))
 
 
 def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
@@ -77,10 +39,8 @@ def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
 
     Any other read failure PROPAGATES: a transient filesystem/object-
     store error or a corrupt footer mistaken for "first batch" would
-    make the sink recompute from empty state — and for the label store
-    (``components_incremental_sink``), whose newest version is
-    authoritative forever, that silently and permanently discards
-    every cluster learned so far.  Crash-and-replay is the correct
+    make the sink recompute from empty state and silently discard
+    every partial folded so far.  Crash-and-replay is the correct
     behavior; state amnesia is not.  (The no-data-file probe below
     uses a local glob — swap for the Hadoop FS listing when the store
     lives on an object store.)"""
@@ -130,450 +90,6 @@ def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
      .partitionBy("batch_id").parquet(path))
 
 
-def incremental_dedup_sink(store_dir: str, out_dir: str):
-    """foreachBatch twin of ``operators/dedup.py::dedup_incremental``:
-    each arriving micro-batch is digested, anti-joined against the
-    PERSISTED digest store (a parquet table that outlives the query —
-    the cross-run state dropDuplicates can't give), deduped keep-first
-    within the batch via the SAME ``incremental_dedup`` core as the
-    batch operator (parity by construction), then survivors land in
-    ``out_dir`` and their digests merge into the store.
-
-    Only digests (16 B/doc) ever hit the store or the anti-join —
-    text never leaves the batch scan.  At 100 TB the store is a
-    digest-bucketed table and the anti-join shuffles digests only.
-
-    EXACTLY-ONCE output: both writes are keyed by ``batch_id`` with
-    dynamic partition overwrite, so a replayed batch overwrites its
-    own partition instead of appending a duplicate.  A crash BETWEEN
-    the two writes is safe — the replay recomputes the anti-join
-    against pre-batch store state and overwrites identically — and so
-    is a crash AFTER the last write but BEFORE the checkpoint commit
-    (foreachBatch's at-least-once window): the store read filters
-    ``batch_id < current``, so a replay can never anti-join the
-    batch's own digests (which would wrongly drop every batch doc as
-    already-seen).  Pinned by tests/test_corpus_stream.py::
-    test_incremental_dedup_crash_between_writes_is_exactly_once and
-    ..._crash_after_last_write_is_exactly_once.
-
-    Those tests inject the crash with ``streaming/faults.py::
-    crash_after``, which raises after the sink returns; the
-    between-writes case then deletes the batch's store partition,
-    which leaves the on-disk state of a crash before the store merge.
-    """
-    from cga_logs_to_kinesis_spark.operators.dedup import (
-        incremental_dedup,
-        normalized_text,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        digests = batch_df.select(
-            "doc_id", F.md5(normalized_text()).alias("text_digest"))
-        # batch_id < current: a replayed batch (crash after the
-        # store write, before the checkpoint commit) must see
-        # PRE-batch state, never its own digests — partition
-        # pruning makes the filter a directory skip, not a scan.
-        store = _read_store(spark, store_dir)
-        if store is None:       # first batch: store not created yet
-            seen = spark.createDataFrame([], "text_digest string")
-        else:
-            seen = (store
-                    .filter(F.col("batch_id") < F.lit(batch_id))
-                    .select("text_digest"))
-        # localCheckpoint: the survivor set feeds TWO writes (output +
-        # store merge); without the cut the second write would
-        # recompute the anti-join.
-        survivors = incremental_dedup(seen, digests).localCheckpoint()
-        _write_batch(survivors, out_dir, batch_id)
-        _write_batch(survivors.select("text_digest"), store_dir, batch_id)
-
-    return process
-
-
-def minhash_incremental_sink(index_dir: str, shingle_dir: str,
-                             out_dir: str):
-    """foreachBatch twin of ``dedup_minhash_incremental``: each crawl
-    drop is shingled ONCE, scored against the PERSISTED band-bucket
-    index (never re-banding the seen corpus — the property that makes
-    per-drop near-dedup feasible at 100 TB), then merged into the
-    index and the shingle store.  All three writes are batch_id-keyed
-    dynamic-overwrite partitions, so replays are exactly-once: a crash
-    between writes replays against pre-batch store state and
-    overwrites identically, and a crash AFTER the last write but
-    BEFORE the checkpoint commit (foreachBatch's at-least-once window)
-    is covered by the ``batch_id < current`` read filter — without it
-    a replay would score the batch against an index containing its own
-    docs and flag the entire drop as self-duplicate (8 common bands,
-    jaccard 1.0).  ``minhash_incremental_from_index`` additionally
-    drops ``batch_doc == seen_doc`` pairs as defense in depth.  Pinned
-    by tests/test_corpus_stream.py::
-    test_minhash_incremental_crash_after_last_write_is_exactly_once.
-
-    Store sizing: the band index is 8 rows x ~50 B per doc; the
-    shingle store is ~1x the text volume (needed only for the exact
-    Jaccard verify — drop it and accept band-level candidates if
-    verify-free operation is acceptable)."""
-    from cga_logs_to_kinesis_spark.operators.dedup import (
-        banded_buckets,
-        minhash_incremental_from_index,
-        shingle_docs,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sh = shingle_docs(batch_df).localCheckpoint()
-        idx_store = _read_store(spark, index_dir)
-        sh_store = _read_store(spark, shingle_dir)
-        if idx_store is None or sh_store is None:
-            # first batch: stores not created yet
-            idx = spark.createDataFrame(
-                [], "doc_id long, band2 int, sig2 string")
-            seen_sh = spark.createDataFrame(
-                [], "doc_id long, shingles array<string>")
-        else:
-            idx = (idx_store
-                   .filter(F.col("batch_id") < F.lit(batch_id))
-                   .select("doc_id", "band2", "sig2"))
-            seen_sh = (sh_store
-                       .filter(F.col("batch_id") < F.lit(batch_id))
-                       .select("doc_id", "shingles"))
-        report = minhash_incremental_from_index(idx, seen_sh, sh) \
-            .localCheckpoint()
-        _write_batch(report, out_dir, batch_id)
-        _write_batch(banded_buckets(sh), index_dir, batch_id)
-        _write_batch(sh, shingle_dir, batch_id)
-
-    return process
-
-
-def setjoin_index_sink(index_dir: str, sets_dir: str, out_dir: str):
-    """foreachBatch twin of ``setjoin_incremental``: each crawl drop
-    is fingerprinted ONCE, exact-joined against the PERSISTED prefix
-    index (never re-shingling the seen corpus), then merged into the
-    index and the fp-set store — ``minhash_incremental_sink``'s
-    three-write exactly-once discipline, with the EXACT operator:
-    zero false negatives against everything already seen.  The index
-    stays valid as batches accumulate because prefixes are cut under
-    the fixed fp order (operators/setjoin.py::prefix_entries — a
-    df-ordered prefix would be invalidated by every shift in document
-    frequencies).  All three writes are batch_id-keyed
-    dynamic-overwrite partitions; the ``batch_id < current`` read
-    filter plus the operator's batch_doc != seen_doc guard cover the
-    at-least-once replay window exactly as in the minhash sink.
-
-    Store sizing: index entries per doc = n - ceil(T*n) + 1 ≈ half
-    its distinct shingles (8 B fps); the fp-set store is ~1x the
-    fingerprint volume (needed only for the exact verify)."""
-    from cga_logs_to_kinesis_spark.operators.setjoin import (
-        prefix_entries,
-        setjoin_incremental_from_index,
-        shingle_fp_sets,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sets = shingle_fp_sets(batch_df).localCheckpoint()
-        idx_store = _read_store(spark, index_dir)
-        set_store = _read_store(spark, sets_dir)
-        if idx_store is None or set_store is None:
-            idx = spark.createDataFrame(
-                [], "doc_id long, n int, pos int, fp long")
-            seen_sets = spark.createDataFrame(
-                [], "doc_id long, fps array<bigint>")
-        else:
-            # pre-r19 index partitions carry no pos column; the
-            # operator reads them as pos=1 (loosest sound bound) —
-            # see setjoin.py::prefix_entries' migration note.
-            idx_cols = (["doc_id", "n", "pos", "fp"]
-                        if "pos" in idx_store.columns
-                        else ["doc_id", "n", "fp"])
-            idx = (idx_store
-                   .filter(F.col("batch_id") < F.lit(batch_id))
-                   .select(*idx_cols))
-            seen_sets = (set_store
-                         .filter(F.col("batch_id") < F.lit(batch_id))
-                         .select("doc_id", "fps"))
-        report = setjoin_incremental_from_index(idx, seen_sets, sets) \
-            .localCheckpoint()
-        _write_batch(report, out_dir, batch_id)
-        _write_batch(prefix_entries(sets), index_dir, batch_id)
-        _write_batch(sets, sets_dir, batch_id)
-
-    return process
-
-
-def streaming_corpus_stats(docs: DataFrame) -> DataFrame:
-    """Per-language running totals — streaming twin of the batch
-    ``corpus_stats`` report (works in update/complete output modes)."""
-    return (docs
-            .withColumn("ntok", F.size(F.split(F.trim("text"), r"[ \t\n\x0B\f\r]+")))
-            .groupBy("lang")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("ntok").alias("total_tokens"),
-                 F.sum("n_chars").alias("total_chars")))
-
-
-def streaming_winnow(docs: DataFrame) -> DataFrame:
-    """Winnowing fingerprints over a document stream.
-
-    The batch operator (``operators/corpus_quality.py::winnow``) is a
-    pure row-local projection, so it composes with a streaming input
-    unchanged — parity holds by construction, and the streaming plan
-    stays stateless (no watermark, no state store)."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import winnow
-    return winnow(docs)
-
-
-def streaming_prune_frequent_tokens(docs: DataFrame,
-                                    stop_df: DataFrame) -> DataFrame:
-    """Boilerplate pruning over a document stream.
-
-    The document-frequency stop set is corpus-level state that a
-    stream cannot derive from itself (it would change retroactively);
-    the honest streaming decomposition is the one production pipelines
-    use — fit the stop set on the existing corpus (the batch
-    ``prune_frequent_tokens`` front half), then apply it to arriving
-    documents as a stream-static broadcast join + the same row-local
-    rewrite.  ``stop_df`` is a 1-row static DataFrame with a
-    ``stop_list`` array column."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import (
-        norm_tokens,
-    )
-    kept = F.expr("filter(_toks, t -> NOT array_contains(stop_list, t))")
-    return (docs.withColumn("_toks", norm_tokens())
-            .crossJoin(F.broadcast(stop_df))
-            .withColumn("_kept", kept)
-            .select(
-                "doc_id",
-                F.size("_kept").cast("long").alias("n_kept"),
-                (F.size("_toks") - F.size("_kept")).cast("long")
-                .alias("n_removed"),
-                F.concat_ws(" ", "_kept").alias("pruned_text")))
-
-
-def fit_stop_tokens(docs: DataFrame, df_share: float = 0.5) -> DataFrame:
-    """Batch front half for :func:`streaming_prune_frequent_tokens`:
-    the 1-row stop-set DataFrame fitted on a static corpus."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import (
-        norm_tokens,
-    )
-    n_docs = docs.count()
-    dtoks = docs.select(
-        "doc_id", F.explode(F.array_distinct(norm_tokens())).alias("tok"))
-    return (dtoks.groupBy("tok").agg(F.count("*").alias("nd"))
-            .filter(F.col("nd") > df_share * n_docs)
-            .agg(F.sort_array(F.collect_list("tok")).alias("stop_list")))
-
-
-def streaming_doc_line_profile(docs: DataFrame) -> DataFrame:
-    """Per-document line-structure profile over a document stream —
-    the batch operator's columns are pure row-local projections
-    (``operators/line_dedup.py::line_profile_columns``), so the twin
-    composes unchanged (stateless, no watermark) and parity is
-    bit-for-bit by construction.  The stream profiles the text AS IT
-    ARRIVES (no poison — poison is the batch query's clean-fixture
-    proof device, not part of the operator)."""
-    from cga_logs_to_kinesis_spark.operators.line_dedup import (
-        line_profile_columns,
-    )
-
-    return docs.select("doc_id", *line_profile_columns().values())
-
-
-def streaming_char_diversity(docs: DataFrame) -> DataFrame:
-    """Gini–Simpson character diversity over a document stream — the
-    batch operator is a pure row-local projection, so it composes
-    unchanged (stateless, no watermark)."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import (
-        char_diversity_frame,
-    )
-    return char_diversity_frame(docs)
-
-
-def streaming_gopher_quality(docs: DataFrame) -> DataFrame:
-    """Gopher rule battery over a document stream — the batch operator
-    (``operators/lm_quality.py::gopher_quality_columns``) is a pure
-    row-local projection, so it composes unchanged (stateless, no
-    watermark) and parity is bit-for-bit by construction."""
-    from cga_logs_to_kinesis_spark.operators.lm_quality import (
-        gopher_quality_columns,
-    )
-    cols = gopher_quality_columns()
-    return docs.select("doc_id", "lang", *cols.values())
-
-
-def streaming_quality_classifier(docs: DataFrame) -> DataFrame:
-    """The hashing-trick linear quality scorer over a document stream
-    — the batch operator (``operators/lm_quality.py::
-    classifier_scores``) is a pure row-local tokenize/hash/fold, so
-    it composes unchanged (stateless, no watermark): the keep/drop
-    gate runs AT INGEST, before anything hits the corpus store."""
-    from cga_logs_to_kinesis_spark.operators.lm_quality import (
-        classifier_scores,
-    )
-    return classifier_scores(docs)
-
-
-def fit_bm25_model(spark, docs: DataFrame) -> DataFrame:
-    """Batch front half for :func:`streaming_bm25_score`: the 1-row
-    retrieval model fitted on the existing corpus — corpus scalars
-    (n_docs, avgdl) plus per-query-term document frequencies.  This is
-    the decomposition production retrieval uses: statistics fitted
-    offline, applied to arriving documents online (a stream cannot
-    derive corpus-level df/avgdl from itself without its scores
-    changing retroactively — same honesty note as the stop-set fit)."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import (
-        BM25_QUERY_TERMS,
-        norm_tokens,
-    )
-    toks = docs.select(
-        "doc_id", F.explode(norm_tokens()).alias("tok"))
-    qterms = spark.createDataFrame(
-        [(t,) for t in BM25_QUERY_TERMS], "tok string")
-    tf = (toks.join(F.broadcast(qterms), "tok")
-          .groupBy("doc_id", "tok").agg(F.count("*").alias("tf")))
-    dfs = (tf.groupBy("tok").agg(F.count("*").alias("df"))
-           .agg(F.sort_array(F.collect_list(F.struct("tok", "df")))
-                .alias("terms")))
-    stats = (toks.agg(F.count("*").cast("double").alias("_total"))
-             .crossJoin(docs.agg(
-                 F.count("*").cast("double").alias("n_docs")))
-             .select("n_docs",
-                     (F.col("_total") / F.col("n_docs")).alias("avgdl")))
-    return stats.crossJoin(dfs)
-
-
-def streaming_bm25_score(docs: DataFrame, model_df: DataFrame) -> DataFrame:
-    """BM25 scoring over a document stream: stream-static broadcast of
-    the fitted model, then an entirely row-local score — per-term tf
-    from the token array, the same rational-core formula, and the same
-    decimal-exact accumulation as the batch operator, so batch/stream
-    parity is bit-for-bit (pinned in tests/test_corpus_stream.py).
-    Emits every arriving doc; ``n_terms_hit = 0`` rows score NULL."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import (
-        BM25_B,
-        BM25_K1,
-        norm_tokens,
-    )
-    # Literal-folded constants, matching the batch Column arithmetic
-    # ((1.0 - B) folds first there too, so rounding is identical).
-    one_minus_b = repr(1.0 - BM25_B)
-    parts = F.expr(f"""
-        transform(terms, t -> named_struct(
-            'tf', cast(size(filter(_toks, x -> x = t.tok)) as bigint),
-            'df', t.df))
-    """)
-    # part(tf=0) = 0 exactly, so summing over all terms equals the
-    # batch sum over matching postings; hits counts tf>0 only.
-    score_sum = F.expr(f"""
-        cast(aggregate(_tfs, cast(0 as decimal(38,6)), (acc, p) ->
-            acc + cast(
-                (((n_docs - p.df) + 0.5) / (p.df + 0.5))
-                * ((p.tf * {repr(BM25_K1 + 1.0)})
-                   / (p.tf + {repr(BM25_K1)} * ({one_minus_b}
-                      + ({repr(BM25_B)} * size(_toks)) / avgdl)))
-                as decimal(38,6))) as double)
-    """)
-    hits = F.expr("size(filter(_tfs, p -> p.tf > 0))").cast("long")
-    return (docs
-            .withColumn("_toks", norm_tokens())
-            .crossJoin(F.broadcast(model_df))
-            .withColumn("_tfs", parts)
-            .withColumn("n_terms_hit", hits)
-            .withColumn("_sum", score_sum)
-            # replicate the batch davg-then-multiply exactly:
-            # score = (decimal_sum -> double / hits) * hits
-            .withColumn(
-                "score",
-                F.when(F.col("n_terms_hit") > 0,
-                       F.col("_sum") / F.col("n_terms_hit")
-                       * F.col("n_terms_hit")))
-            .select("doc_id", "n_terms_hit", "score"))
-
-
-def streaming_text_normalize(docs: DataFrame) -> DataFrame:
-    """Text canonicalization over a document stream — the batch
-    operator (``operators/normalize.py::normalize_text``) is a pure
-    row-local projection, so it composes unchanged (stateless) and
-    parity is bit-for-bit by construction."""
-    from cga_logs_to_kinesis_spark.operators.normalize import (
-        normalize_text,
-    )
-    norm = normalize_text(F.col("text"))
-    return docs.select(
-        "doc_id",
-        norm.alias("norm_text"),
-        F.length("text").cast("long").alias("n_chars_raw"),
-        F.length(norm).cast("long").alias("n_chars_norm"))
-
-
-def streaming_homoglyph_scrub(docs: DataFrame) -> DataFrame:
-    """Confusable-homoglyph repair over a document stream — the APPLY
-    half of the script-mixing gate running continuously next to
-    ``script_mixing_sink``'s report half.  The batch operator
-    (``operators/ingest_audit.py::confusable_scrub_columns``) is a
-    row-local 1:1 translate + count, so it composes unchanged
-    (stateless) and parity is bit-for-bit by construction."""
-    from cga_logs_to_kinesis_spark.operators.ingest_audit import (
-        confusable_scrub_columns,
-    )
-    n_conf, scrubbed = confusable_scrub_columns(F.col("text"))
-    return docs.select(
-        "doc_id",
-        n_conf.alias("n_confusables"),
-        scrubbed.alias("scrubbed_text"))
-
-
-def streaming_markup_scrub(docs: DataFrame) -> DataFrame:
-    """HTML-to-text over a document stream — the ingest-time position
-    this scrub actually occupies in a crawl pipeline (extract BEFORE
-    any dedup/quality state is built, so every downstream store sees
-    clean text).  The batch operator
-    (``operators/ingest_audit.py::markup_scrub_columns``) is a
-    row-local regexp + literal replace chain, so it composes unchanged
-    (stateless) and parity is bit-for-bit by construction."""
-    from cga_logs_to_kinesis_spark.operators.ingest_audit import (
-        markup_scrub_columns,
-    )
-    n_tags, n_entities, clean = markup_scrub_columns(F.col("text"))
-    return docs.select(
-        "doc_id",
-        n_tags.alias("n_tags"),
-        n_entities.alias("n_entities"),
-        clean.alias("clean_text"),
-        F.try_divide(
-            (F.length("text") - F.length(clean)).cast("double"),
-            F.length("text").cast("double")).alias("markup_ratio"))
-
-
-def streaming_blocklist(docs: DataFrame) -> DataFrame:
-    """C4-style blocklist gate over a document stream — the ingest
-    position a badwords list actually occupies in a crawl pipeline
-    (drop BEFORE anything hits the corpus stores), next to
-    ``streaming_quality_classifier`` / ``streaming_markup_scrub``.
-    Stateless: the batch matcher's shared front
-    (``operators/llm_pipeline.py::blocklist_hit_grams_col`` over
-    ``norm_tokens``) probes each row's token positions row-locally
-    against the term set (first-token prefilter, then exact-string
-    gram confirm — the SAME column expression the batch gate sizes
-    and explodes, so parity is row-for-row by construction, pinned in
-    tests/test_corpus_stream.py).  Emits every arriving document with
-    its occurrence count; the gate keeps ``n_hits == 0``."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import (
-        norm_tokens,
-    )
-    from cga_logs_to_kinesis_spark.operators.llm_pipeline import (
-        blocklist_hit_grams_col,
-    )
-    n_hits = F.size(blocklist_hit_grams_col())
-    return (docs
-            .withColumn("toks", norm_tokens())
-            .select("doc_id", "source", "lang", "n_chars",
-                    n_hits.cast("long").alias("n_hits"))
-            .withColumn("kept", F.col("n_hits") == 0))
-
-
 def streaming_line_dedup_intra(docs: DataFrame) -> DataFrame:
     """Within-document repeated-line removal over a document stream —
     stateless, because the computation needs only the document's own
@@ -593,275 +109,14 @@ def streaming_line_dedup_intra(docs: DataFrame) -> DataFrame:
         scrubbed.alias("scrubbed_text"))
 
 
-def streaming_weighted_sample(docs: DataFrame) -> DataFrame:
-    """Quality-weighted sampling over a document stream — the keep
-    decision is a salted-md5 draw (row-local, no RNG state), so the
-    same document keeps or drops identically in batch and streaming
-    runs, across retries, and on any cluster layout."""
-    from cga_logs_to_kinesis_spark.operators.normalize import (
-        weighted_sample_columns,
-    )
-    c = weighted_sample_columns()
-    return docs.select(
-        "doc_id", "source",
-        c["weight"].alias("weight"),
-        c["kept"].alias("kept"))
-
-
-def streaming_chunk_overlap(docs: DataFrame) -> DataFrame:
-    """RAG sliding-window chunking over a document stream — the batch
-    core (``operators/llm_pipeline.py::chunk_windows``) is pure
-    projections plus a bounded explode, so it composes unchanged
-    (stateless, no watermark) and parity is bit-for-bit by
-    construction: a retrieval index can be built incrementally as
-    documents arrive."""
-    from cga_logs_to_kinesis_spark.operators.llm_pipeline import (
-        chunk_windows,
-    )
-    return chunk_windows(docs)
-
-
-def stream_embeddings(spark: SparkSession, src_dir: str) -> DataFrame:
-    """File stream over an embeddings-shaped parquet directory."""
-    return spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int").parquet(src_dir)
-
-
-def ann_index_sink(index_dir: str, vector_dir: str, out_dir: str):
-    """foreachBatch twin of ``ann_incremental``: each arriving vector
-    batch is bucketed ONCE, its top neighbors scored against the
-    PERSISTED LSH bucket index + vector store (never re-bucketing the
-    corpus), then merged into both stores.  Same exactly-once
-    discipline as the dedup sinks: all three writes are
-    batch_id-keyed dynamic-overwrite partitions, store reads filter
-    ``batch_id < current`` so a replay after the last write sees
-    pre-batch state (and ``ann_incremental_from_index`` drops
-    self-pairs as defense in depth).  Pinned by
-    tests/test_corpus_stream.py::
-    test_ann_index_crash_after_last_write_is_exactly_once.
-
-    Store sizing: the bucket index is N_TABLES rows x ~12 B per
-    vector; the vector store is the embedding column itself (needed
-    for the exact-cosine scoring — a product quantization stage would
-    shrink it, see embedding_quantize)."""
-    from cga_logs_to_kinesis_spark.operators.similarity import (
-        ann_incremental_from_index,
-        lsh_table_buckets_vec,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select("vec_id", "embedding").localCheckpoint()
-        idx_store = _read_store(spark, index_dir)
-        vec_store = _read_store(spark, vector_dir)
-        if idx_store is None or vec_store is None:
-            # first batch: stores not created yet
-            idx = spark.createDataFrame([], "vec_id long, bucket int")
-            vecs = spark.createDataFrame(
-                [], "vec_id long, embedding array<float>")
-        else:
-            idx = (idx_store
-                   .filter(F.col("batch_id") < F.lit(batch_id))
-                   .select("vec_id", "bucket"))
-            vecs = (vec_store
-                    .filter(F.col("batch_id") < F.lit(batch_id))
-                    .select("vec_id", "embedding"))
-        report = ann_incremental_from_index(idx, vecs, batch) \
-            .localCheckpoint()
-        _write_batch(report, out_dir, batch_id)
-        buckets = batch.select(
-            "vec_id",
-            F.explode(lsh_table_buckets_vec("embedding")).alias("bucket"))
-        _write_batch(buckets, index_dir, batch_id)
-        _write_batch(batch, vector_dir, batch_id)
-
-    return process
-
-
-def stream_media(spark: SparkSession, src_dir: str) -> DataFrame:
-    """File stream over a media-shaped parquet directory: opaque
-    binary payloads keyed by doc_id (the multimodal column model)."""
-    return spark.readStream.schema(
-        "doc_id long, payload binary").parquet(src_dir)
-
-
-def image_index_sink(index_dir: str, fps_dir: str, out_dir: str):
-    """foreachBatch twin of ``image_dedup_incremental``: each arriving
-    media batch is decoded + dHashed ONCE (the expensive Python stage
-    runs on exactly the new images), banded against the PERSISTED band
-    index, Hamming-verified against the persisted fingerprint store,
-    then merged into both stores — never re-hashing the corpus.  Same
-    exactly-once discipline as the ann/setjoin sinks: all three writes
-    are batch_id-keyed dynamic-overwrite partitions, store reads
-    filter ``batch_id < current`` so a replay after the last write
-    sees pre-batch state (and the operator's batch_doc != seen_doc
-    guard is defense in depth).  Pinned by tests/test_corpus_stream.py
-    ::test_image_index_sink_matches_batch_and_survives_replay.
-
-    Store sizing: 4 band rows (~12 B) + one 4-long fps row per image
-    — the stores hold fingerprints only, never pixels, so state is
-    independent of image size."""
-    from cga_logs_to_kinesis_spark.operators.multimodal import (
-        image_band_entries,
-        image_dhash,
-        image_incremental_from_index,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fps = image_dhash(batch_df.select("doc_id", "payload")) \
-            .localCheckpoint()
-        idx_store = _read_store(spark, index_dir)
-        fps_store = _read_store(spark, fps_dir)
-        if idx_store is None or fps_store is None:
-            idx = spark.createDataFrame(
-                [], "doc_id long, band_id int, band_val long")
-            seen_fps = spark.createDataFrame(
-                [], "doc_id long, band0 long, band1 long, "
-                    "band2 long, band3 long")
-        else:
-            idx = (idx_store
-                   .filter(F.col("batch_id") < F.lit(batch_id))
-                   .select("doc_id", "band_id", "band_val"))
-            seen_fps = (fps_store
-                        .filter(F.col("batch_id") < F.lit(batch_id))
-                        .select("doc_id", "band0", "band1",
-                                "band2", "band3"))
-        report = image_incremental_from_index(idx, seen_fps, fps) \
-            .localCheckpoint()
-        _write_batch(report, out_dir, batch_id)
-        _write_batch(image_band_entries(fps), index_dir, batch_id)
-        _write_batch(fps, fps_dir, batch_id)
-
-    return process
-
-
-def seed_semdedup_centroids(emb: DataFrame, cents_dir: str) -> int:
-    """Persist the fixed SemDeDup centroid artifact ONCE, before the
-    assignment stream starts — the fit-once/apply-forever discipline
-    of ``fit_bpe_store``, with a single parquet dir instead of a
-    manifest-swapped pair (one artifact, so there is no torn-pair
-    window to close).  Here the centroids are the registry's
-    oracle-checkable convention (the first SEMDEDUP_K vectors by id,
-    operators/similarity.py::semdedup_centroids); production seeds
-    this directory from trained k-means output
-    (operators/clustering.py:103) — the sink never cares which, it
-    only requires that the artifact stays FIXED, because fixed
-    centroids are what make per-vector assignment row-local and the
-    appended partials valid forever.  Returns the centroid count."""
-    from cga_logs_to_kinesis_spark.operators.similarity import (
-        semdedup_centroids,
-    )
-    cents = semdedup_centroids(emb)
-    cents.coalesce(1).write.mode("overwrite").parquet(cents_dir)
-    return cents.count()
-
-
-def semdedup_assign_sink(cents_dir: str, assign_dir: str,
-                         vector_dir: str, out_dir: str):
-    """foreachBatch twin of ``semdedup_incremental``: each arriving
-    vector batch is assigned ONCE under the persisted centroid
-    artifact (``seed_semdedup_centroids`` — read fresh per batch, K
-    rows, broadcast by the assigner), scored against ONLY same-cluster
-    members of the PERSISTED assignment + vector stores (the SemDeDup
-    blocking — never all-pairs, never re-assigning the corpus), then
-    appended into both stores.  Assignment under fixed centroids is
-    row-local — a vector's (cluster, ccos) never depends on any other
-    vector — so the partials this sink appends stay correct as batches
-    accumulate, with no refit and no corpus re-scan: the embedding-
-    space member of the incremental-dedup family
-    (``minhash_incremental_sink`` / ``setjoin_index_sink`` /
-    ``ann_index_sink``).
-
-    Exactly-once: all three writes are batch_id-keyed
-    dynamic-overwrite partitions; store reads filter ``batch_id <
-    current`` so a replay after the last write sees pre-batch state,
-    and ``semdedup_incremental_from_assign``'s batch_vec != seen_vec
-    guard is defense in depth.  Pinned by tests/test_corpus_stream.py
-    ::test_semdedup_assign_sink_matches_batch_and_survives_replay.
-
-    Store sizing: the assignment store is 3 scalars per vector (~20 B
-    — negligible next to the vector store, which is the embedding
-    column itself, needed for the exact-cosine pair scoring).
-    Per-batch work is O(|batch| x K) assignment + O(|batch| x
-    |store| / K) blocked pairs — linear in the store, pinned by
-    tests/test_incremental_stress.py."""
-    from cga_logs_to_kinesis_spark.operators.similarity import (
-        semdedup_assign_with_cents,
-        semdedup_incremental_from_assign,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # missing artifact fails loudly here (AnalysisException) —
-        # assigning under ad-hoc centroids would poison every
-        # partial already in the store
-        cents = spark.read.parquet(cents_dir)
-        batch = batch_df.select("vec_id", "embedding").localCheckpoint()
-        batch_assign = semdedup_assign_with_cents(batch, cents) \
-            .localCheckpoint()   # two consumers: pair scoring + store
-        assign_store = _read_store(spark, assign_dir)
-        vec_store = _read_store(spark, vector_dir)
-        if assign_store is None or vec_store is None:
-            seen_assign = spark.createDataFrame(
-                [], "vec_id long, cluster long, ccos double")
-            seen_vecs = spark.createDataFrame(
-                [], "vec_id long, embedding array<float>")
-        else:
-            seen_assign = (assign_store
-                           .filter(F.col("batch_id") < F.lit(batch_id))
-                           .select("vec_id", "cluster", "ccos"))
-            seen_vecs = (vec_store
-                         .filter(F.col("batch_id") < F.lit(batch_id))
-                         .select("vec_id", "embedding"))
-        report = semdedup_incremental_from_assign(
-            seen_assign, seen_vecs, batch_assign, batch) \
-            .localCheckpoint()
-        _write_batch(report, out_dir, batch_id)
-        _write_batch(batch_assign, assign_dir, batch_id)
-        _write_batch(batch, vector_dir, batch_id)
-
-    return process
-
-
-def compact_digest_store(spark: SparkSession, store_dir: str,
-                         upto_batch_id: int) -> int:
-    """Fold the digest store's per-batch partitions at or below
-    ``upto_batch_id`` into one distinct base partition (batch_id =
-    -1), returning the number of batch partitions folded.
-
-    After thousands of crawl drops the store is thousands of tiny
-    batch_id directories — the small-files problem.  Compaction is
-    SAFE here specifically because of the exact-dedup algebra:
-
-    * ``-1 < current`` always, so the base partition passes every
-      sink read's ``batch_id < current`` replay filter;
-    * the consumer is a left-anti join on ``text_digest``, which is
-      idempotent under duplicates — a crash BETWEEN the base write
-      and the old-partition cleanup leaves digests present twice, and
-      the anti-join result is unchanged (re-run compaction to finish
-      the cleanup).
-
-    The band-bucket/shingle stores of the minhash sink do NOT get this
-    helper: their consumer counts rows per key (n_common_bands), so
-    duplicate rows change results — compacting those safely needs a
-    transactional table format (or a full-store rewrite into a fresh
-    directory swapped in while the stream is stopped).
-    """
-    return _compact_distinct_store(spark, store_dir, upto_batch_id,
-                                   ["text_digest"])
-
-
 def compact_profile_values(spark: SparkSession, values_dir: str,
                            upto_batch_id: int) -> int:
     """Compact the table-profile DISTINCT-VALUES store (see
-    :func:`table_profile_sink`) — same algebra as the digest store:
-    the consumer is ``count_distinct`` per column, idempotent under
+    :func:`table_profile_sink`): the consumer is ``count_distinct`` per column, idempotent under
     duplicate rows, so a crash between the base write and the cleanup
     only leaves harmless duplicates.  The PARTIALS store does NOT get
     a compactor: its consumer SUMS null counts, which double-counts
-    under duplicates — the same reason the minhash band stores stay
-    uncompacted (needs a transactional swap); its per-batch partitions
+    under duplicates (it needs a transactional swap); its per-batch partitions
     are 1 row per profiled column, so the pressure is bounded anyway.
     Run with the stream stopped."""
     return _compact_distinct_store(spark, values_dir, upto_batch_id,
@@ -871,7 +126,7 @@ def compact_profile_values(spark: SparkSession, values_dir: str,
 def _compact_distinct_store(spark: SparkSession, store_dir: str,
                             upto_batch_id: int, cols: list[str]) -> int:
     """Fold per-batch partitions of a DISTINCT-consumed store into the
-    batch_id=-1 base — shared by the digest and profile-values
+    batch_id=-1 base — shared by the bloom and profile-values
     compactors (both consumers are idempotent under duplicate rows,
     the property that makes the crash window harmless)."""
     import shutil
@@ -994,96 +249,6 @@ def ingest_audit_report_from_store(spark: SparkSession,
                  F.max("max_doc_id").alias("max_doc_id"),
                  F.sum("total_chars").alias("total_chars"))
             .orderBy("shard"))
-
-
-def components_incremental_sink(labels_dir: str):
-    """foreachBatch twin of ``operators/dedup.py::connected_components``
-    — near-dup clusters maintained INCREMENTALLY as edge batches arrive
-    (each crawl drop's verified LSH pairs), completing the incremental
-    quartet: exact dedup, near-dup, ANN, and now components.
-
-    The persisted state is the LABEL STAR, not the edge history: a
-    component labeled ``comp`` (its min doc id) is stored as one
-    (doc, comp) row per member, and replaying those rows as doc—comp
-    edges reconstructs exactly the same connectivity as every past
-    edge would (labels are themselves node ids, so the star is a
-    connectivity-preserving contraction).  Each batch therefore runs
-    pointer-doubling over |batch edges| + |known nodes| star edges —
-    state O(nodes) while edge history is unbounded, which is the
-    difference between feasible and not at 100 TB (a year of crawl
-    drops has orders of magnitude more pair observations than docs).
-
-    EXACTLY-ONCE: the full post-batch label table lands under its
-    ``batch_id`` partition (dynamic overwrite); reads take the newest
-    partition strictly BELOW the current batch id, so a replayed batch
-    (crash after the write, before the checkpoint commit) recomputes
-    from pre-batch state and overwrites identically.  The store keeps
-    one label-table version per batch — each version is a complete
-    state, so production compacts by dropping all but the two newest
-    (:func:`compact_label_store`).  TWO, not one: the newest version
-    may be an UNCOMMITTED write (crash after the label write, before
-    the checkpoint commit), in which case the replayed batch's
-    ``batch_id < current`` read needs the second-newest version to
-    recompute from — compacting it away would send the replay down the
-    first-batch path and permanently discard every learned cluster.
-    Correctness never depends on versions older than that window.
-    Pinned by tests/test_corpus_stream.py::
-    test_components_incremental_* (batch parity + crash replay) and
-    test_compact_label_store_survives_uncommitted_newest.
-    """
-    from cga_logs_to_kinesis_spark.operators.dedup import (
-        connected_components,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        edges = batch_df.select("doc_a", "doc_b")
-        # _read_store, NOT a bare try/except: mistaking a transient
-        # read error for "first batch" here would write a labels-only-
-        # from-this-batch table as the newest version — authoritative
-        # forever, silently discarding every cluster learned so far.
-        label_store = _read_store(spark, labels_dir)
-        prev_max = None
-        if label_store is not None:
-            store = label_store.filter(
-                F.col("batch_id") < F.lit(batch_id))
-            prev_max = store.agg(F.max("batch_id")).first()[0]
-        if prev_max is not None:
-            star = (store.filter(F.col("batch_id") == prev_max)
-                    .select(F.col("comp").alias("doc_a"),
-                            F.col("doc").alias("doc_b")))
-            edges = edges.unionByName(star)
-        labels = connected_components(edges)
-        _write_batch(labels, labels_dir, batch_id)
-
-    return process
-
-
-def compact_label_store(labels_dir: str) -> int:
-    """Drop every label-table version except the TWO newest (each
-    version is a complete state — see
-    :func:`components_incremental_sink`).  The second-newest survives
-    because the newest may be an uncommitted write: a stream that
-    crashed after the label write but before the checkpoint commit is
-    "stopped", so the run-with-the-stream-stopped precondition does not
-    rule the window out — on restart the replayed batch reads
-    ``batch_id < current`` and must find its pre-batch state, not the
-    first-batch path.  Run with the stream stopped.  Returns versions
-    removed."""
-    import os
-    import shutil
-
-    bids = []
-    for name in os.listdir(labels_dir):
-        if name.startswith("batch_id="):
-            bids.append(int(name.split("=", 1)[1]))
-    keep = set(sorted(bids)[-2:])
-    removed = 0
-    for bid in bids:
-        if bid not in keep:
-            shutil.rmtree(os.path.join(labels_dir, f"batch_id={bid}"))
-            removed += 1
-    return removed
 
 
 # ---------------------------------------------------------------------------
@@ -1214,7 +379,7 @@ def _effective_mg_summaries(s: DataFrame) -> DataFrame:
     partition (most-negative ``batch_id``; ``-(upto+2)`` encodes that
     it folds every batch partition ``<= upto``) plus batch partitions
     ABOVE its fold watermark.  Encoding the watermark in the
-    partition id — instead of the digest stores' plain ``-1`` base —
+    partition id — instead of the distinct stores' plain ``-1`` base —
     is what makes compaction crash-safe for a SUMMING consumer: a
     crash between the base write and the old-partition cleanup leaves
     stale dirs behind, and a reader that summed base + stale batches
@@ -1367,7 +532,7 @@ def bloom_positions_sink(store_dir: str):
     (tests/test_corpus_stream.py::test_bloom_sink_*).
 
     The store is DISTINCT-consumed — the bitmap is the union of
-    positions and OR is idempotent — so it shares the digest-store
+    positions and OR is idempotent — so it shares the distinct-store
     algebra exactly: replays overwrite their own partition, duplicate
     rows can never change the bitmap, and
     :func:`compact_bloom_store` is the shared base-fold compactor.
@@ -1446,264 +611,6 @@ def bloom_decontaminate_from_store(spark: SparkSession, store_dir: str,
                  F.sum(F.col("hit").cast("bigint")).alias("n_dropped"),
                  F.sum((~F.col("hit")).cast("bigint")).alias("n_kept"))
             .orderBy("source"))
-
-
-# ---------------------------------------------------------------------------
-# Streaming event funnel: per-user stage state (10th store family)
-# ---------------------------------------------------------------------------
-# The streaming twin of operators/temporal.py::q_event_funnel.  A
-# greedy per-user stage machine (advance when the next stage's event
-# arrives) is NOT the batch semantics: batch anchors are MINIMA
-# (t1 = min stage-1 time; t_i = min stage-i time in
-# [t_{i-1}, t_{i-1}+GAP]), so a LATE-arriving earlier stage-1 event
-# moves every window left and can disqualify a previously-qualifying
-# stage-2 event — reached stage can go DOWN with more data.  Exactness
-# under arbitrary micro-batch splits therefore needs, per user and
-# stage, the CANDIDATE event times that could still anchor the chain:
-#
-#   - stage 1: just the min (anchors only ever decrease);
-#   - stage i>=2: every distinct time u <= t_{i-1} + GAP.  Safe to
-#     prune above that: anchors are non-increasing while defined and
-#     never rebound above a prior defined value, so a pruned u can
-#     never re-qualify.  While t_{i-1} is undefined the stage keeps
-#     all candidates (any future anchor might admit them).
-#
-# State is O(distinct candidate times within the reachable gap
-# windows) per user — the funnel feed is pruned to the funnel's
-# event types before any shuffle, and the gap bound caps each
-# reached stage's list by the user's event rate x GAP, the same
-# watermark-shaped envelope as any event-time stream state.  Merge is
-# a SET UNION + anchor recompute — idempotent, which is what makes
-# crash replay trivially exactly-once on top of the established
-# batch_id-versioned store discipline (each version a complete
-# state, reads strictly below the current batch id, keep-two
-# compaction — see components_incremental_sink).
-
-FUNNEL_STATE_SCHEMA = ("user_id long, stage int, times array<long>, "
-                       "reached int")
-
-
-def _funnel_fold_user(pdf):
-    """Fold one user's state rows + batch partials: set-union the
-    per-stage candidate times, replay the batch anchor chain
-    (min / min-qualifying-in-window), prune, and emit the new state
-    rows carrying the reached stage."""
-    import pandas as pd
-
-    from cga_logs_to_kinesis_spark.operators.temporal import (
-        FUNNEL_GAP_US,
-        FUNNEL_STAGES,
-    )
-
-    uid_raw = pdf["user_id"].iloc[0]
-    uid = None if pd.isna(uid_raw) else int(uid_raw)
-    by_stage: dict[int, set[int]] = {}
-    for stage, times in zip(pdf["stage"], pdf["times"]):
-        by_stage.setdefault(int(stage), set()).update(
-            int(u) for u in times)
-    out = {"user_id": [], "stage": [], "times": [], "reached": []}
-    if uid is None:
-        # Batch parity: the NULL-user group survives the stage-1
-        # groupBy (counted once at stage 1) but can never pass an
-        # inner join on user_id, so stages >= 2 are unreachable and
-        # their candidates are dead state.
-        if 1 in by_stage:
-            out["user_id"].append(None)
-            out["stage"].append(1)
-            out["times"].append(sorted(by_stage[1])[:1])
-            out["reached"].append(1)
-        return pd.DataFrame(out)
-    pruned: dict[int, list[int]] = {}
-    t_prev = None
-    reached = 0
-    chain_alive = True
-    for i in range(1, len(FUNNEL_STAGES) + 1):
-        cand = sorted(by_stage.get(i, ()))
-        if i == 1:
-            t = cand[0] if cand else None
-            pruned[i] = cand[:1]
-        else:
-            if t_prev is not None:
-                cand = [u for u in cand if u <= t_prev + FUNNEL_GAP_US]
-            pruned[i] = cand
-            t = None
-            if t_prev is not None:
-                q = [u for u in cand if u >= t_prev]
-                if q:
-                    t = q[0]
-        if chain_alive and t is not None:
-            reached = i
-        else:
-            chain_alive = False
-        t_prev = t
-    # Batch parity on NULL timestamps: a user whose stage-1 events all
-    # have NULL us still gets a (t=NULL) row from the batch groupBy —
-    # counted at stage 1, unable to anchor stage 2.  The sink's
-    # collect_set drops NULLs, so stage-1 PRESENCE (an empty times
-    # row) must itself carry the stage-1 membership.
-    if 1 in by_stage and reached == 0:
-        reached = 1
-    for i, times in pruned.items():
-        if times or (i == 1 and 1 in by_stage):
-            out["user_id"].append(uid)
-            out["stage"].append(i)
-            out["times"].append(times)
-            out["reached"].append(reached)
-    return pd.DataFrame(out)
-
-
-def funnel_state_sink(store_dir: str):
-    """foreachBatch sink over the projected funnel feed
-    (``funnel_feed`` columns: user_id, event_type, us): maintain the
-    per-user candidate/anchor state and persist each post-batch state
-    as a complete ``batch_id``-keyed version (the label-store
-    discipline; replay reads strictly below the current id, so a
-    crash after the write and before the checkpoint commit replays
-    to an identical version — set-union state is idempotent)."""
-    from cga_logs_to_kinesis_spark.operators.temporal import (
-        FUNNEL_STAGES,
-    )
-
-    stage_idx = F.lit(None).cast("int")
-    for i, s in enumerate(reversed(FUNNEL_STAGES),
-                          start=0):
-        stage_idx = F.when(
-            F.col("event_type") == s,
-            F.lit(len(FUNNEL_STAGES) - i)).otherwise(stage_idx)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # NULL us rows are kept: collect_set drops the NULLs but the
-        # (user, stage) group row survives, carrying the stage-1
-        # membership the batch groupBy would count (see fold).
-        partial = (batch_df
-                   .filter(F.col("event_type").isin(*FUNNEL_STAGES))
-                   .select("user_id", stage_idx.alias("stage"), "us")
-                   .groupBy("user_id", "stage")
-                   .agg(F.collect_set("us").alias("times"))
-                   .withColumn("reached", F.lit(0)))
-        store = _read_store(spark, store_dir)
-        merged = partial
-        if store is not None:
-            below = store.filter(F.col("batch_id") < F.lit(batch_id))
-            prev_max = below.agg(F.max("batch_id")).first()[0]
-            if prev_max is not None:
-                prev = (below.filter(F.col("batch_id") == prev_max)
-                        .select("user_id", "stage", "times", "reached"))
-                merged = partial.select(prev.columns).unionByName(prev)
-        state = (merged.groupBy("user_id")
-                 .applyInPandas(_funnel_fold_user, FUNNEL_STATE_SCHEMA))
-        _write_batch(state, store_dir, batch_id)
-
-    return process
-
-
-def compact_funnel_state_store(store_dir: str) -> int:
-    """Keep-two compaction — identical discipline and crash argument
-    to :func:`compact_label_store` (each version is a complete
-    state; the newest may be an uncommitted write)."""
-    return compact_label_store(store_dir)
-
-
-def event_funnel_from_store(spark: SparkSession,
-                            store_dir: str) -> DataFrame:
-    """Fold the persisted per-user funnel state into the SAME report
-    as the batch ``event_funnel`` query: one row per stage with the
-    count of users whose anchor chain reaches it."""
-    from cga_logs_to_kinesis_spark.operators.temporal import (
-        FUNNEL_STAGES,
-    )
-
-    empty = spark.createDataFrame(
-        [(i, s, 0) for i, s in enumerate(FUNNEL_STAGES, start=1)],
-        "stage_idx int, stage string, n_users long")
-    s = _read_store(spark, store_dir)
-    if s is None:
-        return empty
-    latest = s.agg(F.max("batch_id")).first()[0]
-    users = (s.filter(F.col("batch_id") == latest)
-             .select("user_id", "reached").distinct()
-             .localCheckpoint())        # one read feeds k counts
-    frames = []
-    for i, stage in enumerate(FUNNEL_STAGES, start=1):
-        frames.append(
-            users.filter(F.col("reached") >= i)
-            .agg(F.count("*").alias("n_users"))
-            .select(F.lit(i).cast("int").alias("stage_idx"),
-                    F.lit(stage).alias("stage"), "n_users"))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.orderBy("stage_idx")
-
-
-# ---------------------------------------------------------------------------
-# IVF serving twin: the persisted inverted-file + SQ8 index
-# ---------------------------------------------------------------------------
-# cosine_topk_ivf_sq builds its index inline per run; a serving story
-# needs the index PERSISTED so arriving queries pay only the probe.
-# Three batch_id-keyed stores, the ann_index_sink discipline: the
-# centroid ASSIGNMENTS (the inverted file: vec -> cluster), the SQ8
-# CODES (tinyint codes + scale, 4x smaller than float32 — what the
-# coarse pass streams), and the exact VECTORS (what the final re-rank
-# touches, shortlist-sized reads only).  Centroids are a fixed model
-# artifact supplied at sink construction (IVF centroids are trained
-# offline; re-clustering is a rebuild, not a fold).
-#
-# Exactly-once is structural: the sink reads NOTHING — each batch's
-# assignments/codes are a pure function of that batch + the fixed
-# centroids, so a replayed batch overwrites its own partitions with
-# identical bytes.  Per-batch work is O(|batch| x n_centroids),
-# independent of index size (measured by
-# tests/test_incremental_stress.py::test_ivf_sink_work_is_flat).
-# Serving reads the whole store: an uncommitted crash-window
-# partition is identical to what the replay will write, so readers
-# are never wrong, merely early.
-
-def ivf_index_sink(assign_dir: str, code_dir: str, vector_dir: str,
-                   cents: DataFrame):
-    """foreachBatch sink persisting the IVF+SQ8 index for
-    :func:`cosine_topk_from_ivf_store`.  ``cents`` is the fixed
-    centroid table (centroid_id, cent)."""
-    from cga_logs_to_kinesis_spark.operators.similarity import (
-        _nearest_clusters,
-        sq8_encode,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select("vec_id", "embedding").localCheckpoint()
-        _write_batch(_nearest_clusters(batch, cents, "cand_id", 1),
-                     assign_dir, batch_id)
-        _write_batch(sq8_encode(batch, "cand_id"), code_dir, batch_id)
-        _write_batch(batch, vector_dir, batch_id)
-
-    return process
-
-
-def cosine_topk_from_ivf_store(spark: SparkSession, assign_dir: str,
-                               code_dir: str, vector_dir: str,
-                               queries: DataFrame,
-                               cents: DataFrame) -> DataFrame:
-    """Serve ANN queries against the PERSISTED IVF+SQ8 index — same
-    probe/coarse/re-rank composition as the batch query, through the
-    shared :func:`cosine_topk_from_ivf_index`, so served results are
-    bit-identical to a batch run over the same vectors."""
-    from cga_logs_to_kinesis_spark.operators.similarity import (
-        cosine_topk_from_ivf_index,
-    )
-
-    assign = _read_store(spark, assign_dir)
-    codes = _read_store(spark, code_dir)
-    vecs = _read_store(spark, vector_dir)
-    if assign is None or codes is None or vecs is None:
-        return spark.createDataFrame(
-            [], "query_id long, cand_id long, cosine double, rank int")
-    return cosine_topk_from_ivf_index(
-        assign=assign.select("cand_id", "cluster"),
-        codes=codes.select("cand_id", "codes", "scale"),
-        vecs=vecs.select(F.col("vec_id").alias("cand_id"),
-                         F.col("embedding").alias("ce")),
-        queries=queries, cents=cents)
 
 
 # ---------------------------------------------------------------------------
@@ -2128,8 +1035,7 @@ def line_df_sink(store_dir: str,
     which would drop legitimate content (r14 advice).  Pass
     ``seen_dir`` to ENFORCE the contract instead of assuming it: a
     tiny batch_id-keyed doc_id store, anti-joined (pre-batch state
-    only, ``batch_id < current`` — the ``incremental_dedup_sink``
-    replay discipline) so a re-arriving doc_id contributes nothing.
+    only, ``batch_id < current``, so replays stay exact) so a re-arriving doc_id contributes nothing.
     The guard state is 8 B/doc; the anti-join ships doc_ids only."""
     from cga_logs_to_kinesis_spark.operators.line_dedup import (
         LINE_MIN_CHARS,
@@ -2914,65 +1820,10 @@ class StoreFamily:
 
 STORE_FAMILIES: tuple[StoreFamily, ...] = (
     StoreFamily(
-        "exact-dedup digest", "distinct",
-        ("incremental_dedup_sink",), (), ("compact_digest_store",),
-        "first-seen survivors; the anti-join consumer is idempotent "
-        "under duplicate digests, which is what makes the crash "
-        "window of compaction harmless"),
-    StoreFamily(
-        "minhash band index", "append (count-consumed)",
-        ("minhash_incremental_sink",), (), (),
-        "NO compactor by design: the consumer counts rows per bucket "
-        "key (n_common_bands), so duplicate rows would change "
-        "results — see compact_digest_store's docstring"),
-    StoreFamily(
-        "exact-setjoin prefix index", "append (join-consumed)",
-        ("setjoin_index_sink",), (), (),
-        "the minhash band index's EXACT sibling: fp-order prefix "
-        "entries + fp-set store, consumed by "
-        "operators/setjoin.py::setjoin_incremental_from_index — "
-        "zero-false-negative incremental near-dup; NO compactor "
-        "(append-only index, batch_id < current read filter covers "
-        "replays)"),
-    StoreFamily(
-        "ANN bucket index", "append (distinct-consumed)",
-        ("ann_index_sink",), (), (),
-        "candidates are .distinct()ed by the reader "
-        "(similarity.ann_incremental_from_index), so replay "
-        "duplicates are harmless; hot buckets capped via "
-        "bucket_bounded's anti-join"),
-    StoreFamily(
-        "image band index", "append (distinct-consumed)",
-        ("image_index_sink",), (), (),
-        "dHash band rows + wide fingerprints per image (never "
-        "pixels): arriving media is decoded/hashed once, banded "
-        "against the persisted index, Hamming-verified against the "
-        "persisted fps store; candidates are .distinct()ed by the "
-        "operator so replay duplicates are harmless, hot bands "
-        "capped via bucket_bounded; NO compactor (append-only, "
-        "batch_id < current read filter covers replays)"),
-    StoreFamily(
-        "SemDeDup assignment", "append (join-consumed)",
-        ("semdedup_assign_sink",), (), (),
-        "per-batch (vec_id, cluster, ccos) partials + the vector "
-        "store, assigned under the FIXED centroid artifact "
-        "(seed_semdedup_centroids, fitted once; production seeds it "
-        "from trained k-means): assignment is row-local under fixed "
-        "centroids, so partials append forever with no refit; "
-        "arriving batches pair ONLY against same-cluster store "
-        "members (the SemDeDup blocking, never all-pairs); NO "
-        "compactor (append-only, batch_id < current read filter "
-        "covers replays)"),
-    StoreFamily(
         "ingest audit", "sum + min/max extrema",
         ("ingest_audit_sink",), ("ingest_audit_report_from_store",),
         ("compact_ingest_audit_store",),
         "per-shard JSONL-ingest health counters"),
-    StoreFamily(
-        "connected-components labels", "state (two versions kept)",
-        ("components_incremental_sink",), (), ("compact_label_store",),
-        "pointer-doubled labels; uncommitted-newest replay safety "
-        "keeps the previous version until the next batch commits"),
     StoreFamily(
         "table profile", "sum partials + distinct values",
         ("table_profile_sink",), ("table_profile_report_from_store",),
@@ -2991,17 +1842,6 @@ STORE_FAMILIES: tuple[StoreFamily, ...] = (
         ("bloom_bitmap_from_store", "bloom_decontaminate_from_store"),
         ("compact_bloom_store",),
         "set-bit positions; OR-fold is idempotent"),
-    StoreFamily(
-        "event-funnel state", "state (per-user candidate times)",
-        ("funnel_state_sink",), ("event_funnel_from_store",),
-        ("compact_funnel_state_store",),
-        "late earlier-stage events can DEMOTE a reached stage — "
-        "candidate times, not greedy stages, make the fold exact"),
-    StoreFamily(
-        "IVF index", "append (replay rewrites identical bytes)",
-        ("ivf_index_sink",), ("cosine_topk_from_ivf_store",), (),
-        "assignments + SQ8 codes + vectors; the sink reads nothing, "
-        "so a replay overwrites its own partition byte-identically"),
     StoreFamily(
         "encoding audit", "sum (watermark base)",
         ("encoding_anomaly_sink",),

@@ -102,60 +102,6 @@ class DieAfterPagesTransport(JsonDirTransport):
         return super().send(stream, page)
 
 
-class FirehoseFakeTransport(Transport):
-    """Local ``PutRecordBatch`` double for the K5 Firehose sink:
-    enforces the wire contract the real API would (<= 500 records
-    per request; records are DATA-ONLY — the partition key must not
-    influence delivery; the failure report is FailedPutCount +
-    per-record slots, same length as the request) and injects
-    per-record throttling failures for the first ``fail_attempts``
-    sends of any ``poison`` payload.  Delivered records append to
-    one JSONL file per send, mirroring a delivery stream's buffered
-    flush."""
-
-    def __init__(self, out_dir: str, fail_attempts: int = 0):
-        self.out_dir = out_dir
-        self.fail_attempts = fail_attempts
-        self.seen: dict[bytes, int] = {}
-
-    def send(self, stream, page):
-        import os
-        import uuid
-
-        if len(page) > 500:
-            raise ValueError(
-                f"PutRecordBatch accepts at most 500 records, "
-                f"got {len(page)}")
-        failed = []
-        delivered = []
-        for i, (data, _key_ignored) in enumerate(page):
-            # _key_ignored: Firehose records carry Data only — a
-            # transport that routed on the key would be exercising
-            # Kinesis semantics under a Firehose name.  str payloads
-            # utf-8-encode, matching the Transport contract elsewhere
-            # (DirStreamTransport.send, deliver_pages).
-            b = (data.encode() if isinstance(data, str)
-                 else bytes(data))
-            if b"poison" in b:
-                n = self.seen.get(b, 0)
-                self.seen[b] = n + 1
-                if n < self.fail_attempts:
-                    failed.append(i)
-                    continue
-            delivered.append(b)
-        failed_put_count = len(failed)
-        assert failed_put_count + len(delivered) == len(page)
-        if delivered:
-            os.makedirs(self.out_dir, exist_ok=True)
-            path = (f"{self.out_dir}/{stream}-"
-                    f"{uuid.uuid4().hex}.jsonl")
-            with open(path, "wb") as f:
-                for b in delivered:
-                    f.write(b)
-                    f.write(b"\n")
-        return failed
-
-
 def crash_after(process: Callable, batch_ids: Iterable[int]) -> Callable:
     """Wrap a ``foreachBatch`` function so that each id in
     ``batch_ids`` raises FatalDeliveryError ONCE, after ``process``

@@ -41,6 +41,9 @@ class EngineMetrics:
             "# TYPE engine_input_rate gauge",
             *[f'engine_input_rate{{query="{q}"}} {v}'
               for q, v in sorted(self.last_input_rate.items())],
+            "# TYPE engine_last_batch_duration_ms gauge",
+            *[f'engine_last_batch_duration_ms{{query="{q}"}} {v}'
+              for q, v in sorted(self.last_batch_duration_ms.items())],
         ]
         return "\n".join(lines) + "\n"
 

@@ -21,6 +21,14 @@ model:
 - per-record failures retried up to MaxAttemptsPerRecord=5 then
   dropped and counted (B5, reference ``batchproducer.go:426-444``,
   config ``main.go:89``)
+- no load shedding (B6): the reference drops its whole buffer after
+  5 consecutive request errors (``batchproducer.go:346-348``); here a
+  failing page is retried up to ``max_request_attempts`` times and
+  then counted as dropped, so one bad spell costs at most the pages
+  in flight, not the buffer
+- AccessDenied / ResourceNotFound are not retried: they fail the
+  micro-batch (:class:`FatalDeliveryError`), so the checkpoint
+  replays it
 - delivery stats (sent / errors / dropped) accumulated per batch
   (A1, reference ``batchproducer.go:446-458``)
 
@@ -65,6 +73,11 @@ PAGE_STATS = StructType([
 ])
 
 
+# PutRecords error codes that no retry can fix
+FATAL_ERROR_CODES = frozenset({"AccessDeniedException",
+                               "ResourceNotFoundException"})
+
+
 class FatalDeliveryError(Exception):
     """Non-retryable delivery failure — the AccessDenied /
     ResourceNotFound class of PutRecords errors, where retrying cannot
@@ -85,13 +98,6 @@ class Transport:
     def send(self, stream: str,
              page: list[tuple[bytes, str]]) -> list[int]:
         raise NotImplementedError
-
-
-class NullTransport(Transport):
-    """Accepts everything; the noop sink for benchmarks."""
-
-    def send(self, stream, page):
-        return []
 
 
 class ConsoleTransport(Transport):
@@ -123,15 +129,16 @@ class FileTransport(Transport):
 
 
 def boto3_transport(stream_region: str) -> Transport:
-    """Real Kinesis transport; raises NotImplementedError when boto3 is
-    not installed."""
+    """Real Kinesis ``PutRecords`` transport; botocore signs each
+    request and resolves credentials.  Raises NotImplementedError when
+    boto3 is not installed."""
     try:
         import boto3  # noqa: F401
-    except ImportError as e:  # pragma: no cover
+    except ImportError as e:
         raise NotImplementedError(
-            "boto3 not available; use FileTransport/NullTransport") from e
+            "boto3 not available; use FileTransport") from e
 
-    class Boto3Transport(Transport):  # pragma: no cover
+    class Boto3Transport(Transport):
         def __init__(self, region: str):
             self.region = region
             self._client = None
@@ -144,9 +151,17 @@ def boto3_transport(stream_region: str) -> Transport:
             return self._client
 
         def send(self, stream, page):
-            resp = self.client().put_records(
-                StreamName=stream,
-                Records=[{"Data": d, "PartitionKey": k} for d, k in page])
+            from botocore.exceptions import ClientError
+            try:
+                resp = self.client().put_records(
+                    StreamName=stream,
+                    Records=[{"Data": d, "PartitionKey": k}
+                             for d, k in page])
+            except ClientError as e:
+                code = e.response.get("Error", {}).get("Code")
+                if code in FATAL_ERROR_CODES:
+                    raise FatalDeliveryError(code) from e
+                raise                          # retried with backoff
             return [i for i, r in enumerate(resp["Records"])
                     if "ErrorCode" in r]
 
@@ -161,10 +176,6 @@ class SinkConfig:
     base_backoff_s: float = 0.050          # reference batchproducer.go:327
     max_backoff_s: float = 5.0             # cap on the doubling delay
     max_request_attempts: int = 20         # per page; 0 = retry forever
-    max_consecutive_errors_shed: int = 5   # B6, batchproducer.go:346-348
-    shed: bool = False                     # load-shedding off by default:
-    # Spark's checkpointed retry makes shedding a liveness choice, not a
-    # necessity; enable to reproduce reference behavior exactly.
 
 
 @dataclass
@@ -224,10 +235,6 @@ def deliver_pages(df: DataFrame, transport: Transport,
                 except Exception:
                     req_errors += 1
                     consecutive_errors += 1
-                    if (cfg.shed and consecutive_errors
-                            >= cfg.max_consecutive_errors_shed):
-                        dropped += len(work)   # B6 load-shed
-                        break
                     if (cfg.max_request_attempts
                             and attempts_this_page
                             >= cfg.max_request_attempts):
@@ -294,170 +301,3 @@ def foreach_batch_sink(transport: Transport, config: SinkConfig,
         stats.update(pdf.to_dict("records"))
 
     return process
-
-
-def firehose_boto3_transport(stream_region: str) -> Transport:
-    """Real Firehose ``PutRecordBatch`` transport, boto3-gated — the
-    K5 sink (reference firehose.go:78-90, the vendored client's
-    delivery-stream half).  Firehose records are Data-only (no
-    partition key — the delivery stream owns placement), and the
-    response reports FailedPutCount + per-record ErrorCode in
-    RequestResponses; both map directly onto the Transport contract
-    (failed indices), so ``deliver_pages``' page-cut/retry/backoff/
-    drop machinery is reused unchanged.  The 500-record page cap is
-    the same limit PutRecordBatch imposes."""
-    try:
-        import boto3  # noqa: F401
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "boto3 not available; use FirehoseFakeTransport "
-            "(streaming/faults.py) for local delivery") from e
-
-    class FirehoseBoto3Transport(Transport):  # pragma: no cover
-        def __init__(self, region: str):
-            self.region = region
-            self._client = None
-
-        def client(self):
-            import boto3
-            if self._client is None:
-                self._client = boto3.client("firehose",
-                                            region_name=self.region)
-            return self._client
-
-        def send(self, stream, page):
-            resp = self.client().put_record_batch(
-                DeliveryStreamName=stream,
-                Records=[{"Data": d} for d, _k in page])
-            failed = [i for i, r in enumerate(resp["RequestResponses"])
-                      if "ErrorCode" in r]
-            # the API's own failure count must agree with the
-            # per-record verdicts we return
-            assert resp.get("FailedPutCount", len(failed)) == len(failed)
-            return failed
-
-    return FirehoseBoto3Transport(stream_region)
-
-
-def build_api_request(*, target: str, body_obj: dict,
-                      region: str, access_key: str,
-                      secret_key: str, amz_date: str,
-                      session_token: str | None = None,
-                      service: str = "kinesis",
-                      endpoint_host: str | None = None,
-                      endpoint_url: str | None = None) -> dict:
-    """One signed x-amz-json-1.1 API call — the request shape the
-    reference's vendored client assembles for EVERY Kinesis/Firehose
-    action (kinesis.go:209-247 HTTP layer + sign.go): JSON body, the
-    ``<Service>_<version>.<Action>`` target header, and a SigV4
-    Authorization from functions/sigv4.py.  Pure function of its
-    inputs (the caller owns the clock), so every action's wire shape
-    is unit-testable without a network; ``sigv4_transport`` (sink)
-    and ``sigv4_consumer_client`` (source) POST these via urllib."""
-    import json as _json
-
-    from cga_logs_to_kinesis_spark.functions.sigv4 import sign_request
-
-    # endpoint_url (scheme included) wins — it is what lets the whole
-    # signed wire path run against a local http fake in tests; the
-    # Host header (and thus the signature) always matches the target.
-    if endpoint_url is not None:
-        import urllib.parse as _up
-        host = _up.urlparse(endpoint_url).netloc
-    else:
-        host = endpoint_host or f"{service}.{region}.amazonaws.com"
-    body = _json.dumps(body_obj).encode()
-    headers = {
-        "Host": host,
-        "Content-Type": "application/x-amz-json-1.1",
-        "X-Amz-Target": target,
-        "X-Amz-Date": amz_date,
-    }
-    signed = sign_request(access_key=access_key, secret_key=secret_key,
-                          region=region, service=service, method="POST",
-                          path="/", headers=headers, payload=body,
-                          session_token=session_token)
-    headers["Authorization"] = signed.authorization
-    if session_token is not None:
-        headers["X-Amz-Security-Token"] = session_token
-    url = (endpoint_url.rstrip("/") + "/" if endpoint_url is not None
-           else f"https://{host}/")
-    return {"url": url, "method": "POST",
-            "headers": headers, "body": body}
-
-
-def build_put_records_request(*, stream: str,
-                              page: list[tuple[bytes, str]],
-                              region: str, access_key: str,
-                              secret_key: str, amz_date: str,
-                              session_token: str | None = None,
-                              service: str = "kinesis",
-                              endpoint_host: str | None = None,
-                              endpoint_url: str | None = None) -> dict:
-    """The signed ``PutRecords`` call: base64 Data + PartitionKey
-    records under the ``Kinesis_20131202.PutRecords`` target (record
-    shape kinesis.go:477-489) — :func:`build_api_request` with the
-    PutRecords body."""
-    import base64
-
-    return build_api_request(
-        target="Kinesis_20131202.PutRecords",
-        body_obj={
-            "StreamName": stream,
-            "Records": [{"Data": base64.b64encode(
-                             d.encode() if isinstance(d, str)
-                             else bytes(d)).decode(),
-                         "PartitionKey": k} for d, k in page],
-        },
-        region=region, access_key=access_key, secret_key=secret_key,
-        amz_date=amz_date, session_token=session_token,
-        service=service, endpoint_host=endpoint_host,
-        endpoint_url=endpoint_url)
-
-
-def sigv4_transport(stream_region: str, provider=None,
-                    endpoint_host: str | None = None,
-                    endpoint_url: str | None = None,
-                    clock=None) -> Transport:
-    """Kinesis PutRecords over stdlib urllib with the repo's OWN
-    SigV4 signer and credential chain — the no-boto3 realization of
-    K1+K2+K3.  ``endpoint_url`` (scheme included) makes the whole
-    signed wire path runnable against a local http fake — the
-    tests/test_sink.py Kinesis double independently RE-SIGNS each
-    request and 403s a mismatch, so request shape, signature, and the
-    per-record ErrorCode retry loop are all exercised offline; the
-    default https endpoint is what production would use (boto3's
-    battle-tested client is still preferred there)."""
-    import time as _time
-
-    from cga_logs_to_kinesis_spark.functions.credentials import (
-        default_chain,
-    )
-
-    prov = provider or default_chain()
-    now = clock or _time.time
-
-    class SigV4Transport(Transport):
-        def send(self, stream, page):
-            import json as _json
-            import urllib.request
-
-            creds = prov.get()
-            amz_date = _time.strftime("%Y%m%dT%H%M%SZ",
-                                      _time.gmtime(now()))
-            req = build_put_records_request(
-                stream=stream, page=page, region=stream_region,
-                access_key=creds.access_key,
-                secret_key=creds.secret_key, amz_date=amz_date,
-                session_token=creds.session_token,
-                endpoint_host=endpoint_host,
-                endpoint_url=endpoint_url)
-            r = urllib.request.Request(
-                req["url"], data=req["body"], headers=req["headers"],
-                method=req["method"])
-            with urllib.request.urlopen(r, timeout=30) as resp:
-                out = _json.loads(resp.read())
-            return [i for i, rec in enumerate(out.get("Records", []))
-                    if "ErrorCode" in rec]
-
-    return SigV4Transport()

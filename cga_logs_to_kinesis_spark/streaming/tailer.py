@@ -57,9 +57,11 @@ keeps its ``\r`` (``ReadBytes('\n')``, main.go:229-249).
 
 from __future__ import annotations
 
+import contextlib
 import glob as globmod
 import json
 import os
+import sys
 import threading
 import time
 import uuid
@@ -68,6 +70,8 @@ from dataclasses import dataclass, field
 # Bounds append-to-visibility latency at poll + trigger; the reference
 # has tail's inotify (effectively 0) + the 5 s flush interval.
 POLL_INTERVAL_S = 0.2
+# Wait after a poll fails with an OSError before polling again.
+RETRY_AFTER_ERROR_S = 5.0
 
 
 @dataclass
@@ -104,6 +108,8 @@ class TailFollower:
     # this poll's spool lines, and the spool files it wrote so far
     _buf: bytearray = field(default_factory=bytearray, init=False)
     _spooled: int = field(default=0, init=False)
+    # polls of the tailer thread that failed with an OSError
+    errors: int = field(default=0, init=False)
 
     # -- state persistence -------------------------------------------------
 
@@ -267,9 +273,16 @@ class TailFollower:
             return
         name = f"{time.time_ns():020d}-{uuid.uuid4().hex}.log"
         tmp = os.path.join(self.spool_dir, f".{name}.tmp")
-        with open(tmp, "wb") as f:
-            f.write(self._buf)
-        os.replace(tmp, os.path.join(self.spool_dir, name))
+        try:
+            with open(tmp, "wb") as f:
+                f.write(self._buf)
+            os.replace(tmp, os.path.join(self.spool_dir, name))
+        except OSError:
+            # a full disk: free what the partial file took; the next
+            # poll writes the buffer under a new name
+            with contextlib.suppress(OSError):
+                os.remove(tmp)
+            raise
         self._buf.clear()
         self._spooled += 1
 
@@ -302,8 +315,22 @@ class TailFollower:
 
     def _run(self) -> None:
         while not self._stop.is_set():
-            self.poll_once()
-            self._stop.wait(POLL_INTERVAL_S)
+            try:
+                self.poll_once()
+                wait = POLL_INTERVAL_S
+            except OSError as e:
+                # e.g. ENOSPC on a spool write.  _buf keeps the lines
+                # not yet written, so the next poll ships them once;
+                # the reference re-launches a failed tail after 5 s
+                # (main.go:259-273).
+                self.errors += 1
+                print(f"tailer poll failed, retrying in "
+                      f"{RETRY_AFTER_ERROR_S:g} s: {e}", file=sys.stderr)
+                wait = RETRY_AFTER_ERROR_S
+            self._stop.wait(wait)
+
+    def is_alive(self) -> bool:
+        return self._thread is not None and self._thread.is_alive()
 
     def stop(self) -> None:
         self._stop.set()

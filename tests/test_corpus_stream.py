@@ -1,30 +1,14 @@
-"""Streaming corpus preparation: batch/stream parity for the quality
-filter, first-seen streaming dedup, and running stats."""
+"""Incremental corpus stores: each store family's fold matches the
+batch report, and survives crash replay and compaction."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from cga_logs_to_kinesis_spark.sources import load_table
-from cga_logs_to_kinesis_spark.streaming.corpus import (
-    corpus_keep_filter,
-    stream_documents,
-    streaming_corpus_stats,
-    streaming_dedup_exact,
-)
+from cga_logs_to_kinesis_spark.streaming.corpus import stream_documents
 from cga_logs_to_kinesis_spark.streaming.faults import crash_after
 from tests.conftest import SF_SMOKE
-
-
-def _staged_stream(spark, tmp_path):
-    """The fixture corpus split into two 'arrival batches' on disk."""
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    return docs, stream_documents(spark, str(src) + "/*")
 
 
 def _drain(stream_df, tmp_path, name, mode="append"):
@@ -34,573 +18,6 @@ def _drain(stream_df, tmp_path, name, mode="append"):
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
     return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
-
-
-def test_streaming_quality_filter_matches_batch(spark, tmp_path):
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = _drain(corpus_keep_filter(stream), tmp_path, "kept")
-    want = corpus_keep_filter(docs)
-    assert sorted(r.doc_id for r in got.collect()) == \
-        sorted(r.doc_id for r in want.collect())
-    assert got.count() > 0
-
-
-def test_streaming_dedup_first_seen(spark, tmp_path):
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = _drain(streaming_dedup_exact(stream), tmp_path, "deduped")
-    # one survivor per distinct text, across arrival batches
-    want_groups = docs.groupBy(F.md5("text")).count()
-    assert got.count() == want_groups.count()
-    assert got.select("digest").distinct().count() == got.count()
-
-
-def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
-    """The foreachBatch incremental-dedup twin must reproduce the
-    batch operator exactly: stage the corpus as two arrivals (75%
-    "already-ingested", then the 25% doc_id%4==3 batch the registry
-    query processes), drain each with the persisted digest store in
-    between, and compare the second arrival's survivors row-for-row
-    with q_dedup_incremental."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        incremental_dedup_sink,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    store = str(tmp_path / "digest_store")
-    out = str(tmp_path / "survivors")
-    sink = incremental_dedup_sink(store, out)
-
-    def drain(name):
-        q = (stream_documents(spark, str(src) + "/*")
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    docs.filter(F.col("doc_id") % 4 < 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain("first")
-    batch1_new = {r.text_digest for r in
-                  spark.read.parquet(out).collect()}
-
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    drain("second")
-
-    got = {r.text_digest: (r.doc_id, r.n_batch_dups)
-           for r in spark.read.parquet(out).collect()
-           if r.text_digest not in batch1_new}
-    want = {r.text_digest: (r.doc_id, r.n_batch_dups)
-            for r in all_queries()["dedup_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert got == want and len(want) > 0
-    # the store now holds every distinct digest exactly once per merge
-    n_store = spark.read.parquet(store).count()
-    assert n_store == len(batch1_new) + len(got)
-
-
-def test_incremental_dedup_crash_between_writes_is_exactly_once(
-        spark, tmp_path):
-    """The worst crash point: survivors written, digest-store merge
-    NOT — the replayed batch must overwrite its own output partition
-    (no duplicates) and converge to the same final state.  This is
-    the exactly-once upgrade over the delivery sink's documented
-    at-least-once replay.
-
-    The crash fires after both writes; deleting the batch's store
-    partition then leaves exactly the files of a crash between the
-    output write and the store merge, with batch 1 uncommitted."""
-    import os
-    import shutil
-
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        incremental_dedup_sink,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    store = str(tmp_path / "digest_store")
-    out = str(tmp_path / "survivors")
-
-    def drain(sink):
-        q = (stream_documents(spark, str(src) + "/*")
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    docs.filter(F.col("doc_id") % 4 < 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain(incremental_dedup_sink(store, out))
-
-    # batch 1 dies with its output written and its store merge not
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    crashing = crash_after(incremental_dedup_sink(store, out), (1,))
-    crashed = False
-    try:
-        drain(crashing)
-    except Exception:
-        crashed = True
-    assert crashed
-    shutil.rmtree(os.path.join(store, "batch_id=1"))   # merge undone
-    partial = spark.read.parquet(out).filter("batch_id = 1").count()
-    assert partial > 0          # real side effects before the crash
-
-    drain(incremental_dedup_sink(store, out))   # replay batch 1
-
-    got = spark.read.parquet(out).filter("batch_id = 1")
-    # exactly-once: the replay overwrote, never duplicated
-    assert got.count() == got.select("text_digest").distinct().count()
-    want = {r.text_digest: (r.doc_id, r.n_batch_dups)
-            for r in all_queries()["dedup_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert {r.text_digest: (r.doc_id, r.n_batch_dups)
-            for r in got.collect()} == want
-    # store converged: one partition per batch, digests exactly once
-    store_df = spark.read.parquet(store)
-    assert store_df.count() == store_df.distinct().count()
-
-
-def test_streaming_minhash_incremental_matches_batch(spark, tmp_path):
-    """The near-dup twin of the exact-dedup parity test: chunk A (the
-    75% 'already-crawled' corpus) builds the persisted band index +
-    shingle store; chunk B (the doc_id%4==3 drop) is scored against
-    it.  Batch-B report rows must equal the registry query
-    row-for-row — proving the persisted-index path computes exactly
-    what re-banding the whole corpus would."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        minhash_incremental_sink,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    sink = minhash_incremental_sink(str(tmp_path / "band_index"),
-                                    str(tmp_path / "shingle_store"),
-                                    str(tmp_path / "reports"))
-
-    def drain():
-        q = (stream_documents(spark, str(src) + "/*")
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    docs.filter(F.col("doc_id") % 4 < 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain()
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    drain()
-
-    got = {r.batch_doc: (r.nearest_seen, r.n_candidates,
-                         r.best_jaccard, r.is_near_dup)
-           for r in spark.read.parquet(str(tmp_path / "reports"))
-           .filter("batch_id = 1").collect()}
-    want = {r.batch_doc: (r.nearest_seen, r.n_candidates,
-                          r.best_jaccard, r.is_near_dup)
-            for r in all_queries()["dedup_minhash_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert got == want and len(want) > 0
-
-
-def test_streaming_stats_match_batch_totals(spark, tmp_path):
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = {r.lang: r for r in
-           _drain(streaming_corpus_stats(stream), tmp_path,
-                  "stats", mode="complete").collect()}
-    want = {r.lang: r for r in
-            docs.withColumn("ntok",
-                            F.size(F.split(F.trim("text"), r"\s+")))
-            .groupBy("lang")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("ntok").alias("total_tokens"),
-                 F.sum("n_chars").alias("total_chars")).collect()}
-    assert got.keys() == want.keys()
-    for lang in want:
-        assert (got[lang].n_docs, got[lang].total_tokens,
-                got[lang].total_chars) == \
-               (want[lang].n_docs, want[lang].total_tokens,
-                want[lang].total_chars)
-
-
-def test_streaming_winnow_matches_batch(spark, tmp_path):
-    """Winnowing is row-local, so the streaming fingerprints are
-    exactly the batch fingerprints regardless of arrival batching."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import winnow
-    from cga_logs_to_kinesis_spark.streaming.corpus import streaming_winnow
-
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = _drain(streaming_winnow(stream), tmp_path, "winnowed")
-    want = winnow(docs)
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, want.collect()))
-
-
-def test_streaming_prune_matches_batch(spark, tmp_path):
-    """Stop set fitted on the static corpus, applied to the stream:
-    every arriving doc gets the same rewrite the batch operator gives
-    it (stream-static broadcast join, stateless)."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        fit_stop_tokens,
-        streaming_prune_frequent_tokens,
-    )
-
-    docs, stream = _staged_stream(spark, tmp_path)
-    stop = fit_stop_tokens(docs)
-    got = _drain(streaming_prune_frequent_tokens(stream, stop),
-                 tmp_path, "pruned")
-    want = all_queries()["prune_frequent_tokens"].fn(spark, SF_SMOKE)
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, want.collect()))
-
-
-def test_streaming_doc_line_profile_matches_batch(spark, tmp_path):
-    """Row-local core -> parity is bit-for-bit, row-for-row (the
-    twin profiles arriving text as-is; the batch projection is
-    applied to the same static docs for the comparison)."""
-    from cga_logs_to_kinesis_spark.operators.line_dedup import (
-        line_profile_columns,
-    )
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        streaming_doc_line_profile,
-    )
-
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = {r.doc_id: tuple(r)[1:] for r in
-           _drain(streaming_doc_line_profile(stream), tmp_path,
-                  "lprof").collect()}
-    want = {r.doc_id: tuple(r)[1:] for r in docs.select(
-        "doc_id", *line_profile_columns().values()).collect()}
-    assert got == want and len(got) > 0
-
-
-def test_streaming_char_diversity_matches_batch(spark, tmp_path):
-    """Row-local core → parity is bit-for-bit, row-for-row."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import (
-        char_diversity_frame,
-    )
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        streaming_char_diversity,
-    )
-
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = {r.doc_id: r for r in
-           _drain(streaming_char_diversity(stream), tmp_path,
-                  "cdiv").collect()}
-    want = {r.doc_id: r for r in char_diversity_frame(docs).collect()}
-    assert set(got) == set(want) and len(got) > 0
-    for doc_id, w in want.items():
-        g = got[doc_id]
-        assert (g.n_chars_counted, g.diversity) == \
-            (w.n_chars_counted, w.diversity)
-
-
-def test_streaming_bm25_matches_batch_scores(spark, tmp_path):
-    """Model fitted on the corpus (batch front half), applied to the
-    arriving stream: every query-matching doc must score EXACTLY the
-    batch operator's value (decimal-exact accumulation on both sides),
-    and non-matching docs must flow through with NULL scores."""
-    from cga_logs_to_kinesis_spark.operators.corpus_quality import (
-        bm25_scored,
-    )
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        fit_bm25_model,
-        streaming_bm25_score,
-    )
-
-    docs, stream = _staged_stream(spark, tmp_path)
-    model = fit_bm25_model(spark, docs)
-    got = {r.doc_id: r for r in
-           _drain(streaming_bm25_score(stream, model), tmp_path,
-                  "bm25").collect()}
-    want = {r.doc_id: r for r in bm25_scored(spark, docs).collect()}
-    assert len(got) == docs.count()          # every arrival scored
-    assert want and set(want) <= set(got)
-    for doc_id, w in want.items():
-        g = got[doc_id]
-        assert g.n_terms_hit == w.n_terms_hit
-        assert g.score == w.score, doc_id
-    for doc_id, g in got.items():            # non-matching: NULL score
-        if doc_id not in want:
-            assert g.n_terms_hit == 0 and g.score is None
-
-
-def test_streaming_normalize_matches_batch(spark, tmp_path):
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        streaming_text_normalize,
-    )
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = _drain(streaming_text_normalize(stream), tmp_path, "norm")
-    want = streaming_text_normalize(docs)  # same fn, batch input
-    g = {r.doc_id: (r.norm_text, r.n_chars_raw, r.n_chars_norm)
-         for r in got.collect()}
-    w = {r.doc_id: (r.norm_text, r.n_chars_raw, r.n_chars_norm)
-         for r in want.collect()}
-    assert g == w and len(g) > 0
-
-
-def test_streaming_weighted_sample_matches_batch(spark, tmp_path):
-    """The keep decision must be identical batch vs stream — and must
-    not depend on arrival order (re-drain with chunks swapped)."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        streaming_weighted_sample,
-    )
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = _drain(streaming_weighted_sample(stream), tmp_path, "wsamp")
-    want = streaming_weighted_sample(docs)
-    g = {r.doc_id: (r.weight, r.kept) for r in got.collect()}
-    w = {r.doc_id: (r.weight, r.kept) for r in want.collect()}
-    assert g == w and len(g) > 0
-    assert any(v[1] for v in g.values()) != all(v[1] for v in g.values())
-
-
-def test_incremental_dedup_crash_after_last_write_is_exactly_once(
-        spark, tmp_path):
-    """The at-least-once window foreachBatch can't close: ALL writes
-    landed but the checkpoint never committed, so the batch replays
-    against a store that already contains its own digests.  The
-    `batch_id < current` read filter must make the replay see
-    pre-batch state — without it every batch doc anti-joins itself
-    and the replay overwrites the output with an EMPTY survivor set
-    (silent total data loss for the drop)."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        incremental_dedup_sink,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    store = str(tmp_path / "digest_store")
-    out = str(tmp_path / "survivors")
-
-    def drain(sink):
-        q = (stream_documents(spark, str(src) + "/*")
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    docs.filter(F.col("doc_id") % 4 < 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain(incremental_dedup_sink(store, out))
-
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    crashing = crash_after(incremental_dedup_sink(store, out), (1,))
-    crashed = False
-    try:
-        drain(crashing)
-    except Exception:
-        crashed = True
-    assert crashed
-    # both writes really landed before the crash
-    assert spark.read.parquet(out).filter("batch_id = 1").count() > 0
-    assert spark.read.parquet(store).filter("batch_id = 1").count() > 0
-
-    drain(incremental_dedup_sink(store, out))   # replay batch 1
-
-    got = spark.read.parquet(out).filter("batch_id = 1")
-    want = {r.text_digest: (r.doc_id, r.n_batch_dups)
-            for r in all_queries()["dedup_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert {r.text_digest: (r.doc_id, r.n_batch_dups)
-            for r in got.collect()} == want
-    store_df = spark.read.parquet(store)
-    assert store_df.count() == store_df.distinct().count()
-
-
-def test_minhash_incremental_crash_after_last_write_is_exactly_once(
-        spark, tmp_path):
-    """Same at-least-once window for the near-dup sink: after a crash
-    past all three writes, the replayed batch scores against an index
-    + shingle store already containing its own docs.  Un-filtered,
-    every batch doc would match ITSELF (8 common bands, jaccard 1.0)
-    and the whole drop would be flagged near-dup — the report must
-    instead converge to exactly the batch operator's output."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        minhash_incremental_sink,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    args = (str(tmp_path / "band_index"),
-            str(tmp_path / "shingle_store"),
-            str(tmp_path / "reports"))
-
-    def drain(sink):
-        q = (stream_documents(spark, str(src) + "/*")
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    docs.filter(F.col("doc_id") % 4 < 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain(minhash_incremental_sink(*args))
-
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    crashed = False
-    try:
-        drain(crash_after(minhash_incremental_sink(*args), (1,)))
-    except Exception:
-        crashed = True
-    assert crashed
-    assert spark.read.parquet(args[0]).filter("batch_id = 1").count() > 0
-    assert spark.read.parquet(args[1]).filter("batch_id = 1").count() > 0
-
-    drain(minhash_incremental_sink(*args))      # replay batch 1
-
-    got = {r.batch_doc: (r.nearest_seen, r.n_candidates,
-                         r.best_jaccard, r.is_near_dup)
-           for r in spark.read.parquet(args[2])
-           .filter("batch_id = 1").collect()}
-    want = {r.batch_doc: (r.nearest_seen, r.n_candidates,
-                          r.best_jaccard, r.is_near_dup)
-            for r in all_queries()["dedup_minhash_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert got == want and len(want) > 0
-    # and in particular: nothing matched itself
-    assert all(r[0] != doc for doc, r in got.items())
-
-
-def test_streaming_chunk_overlap_matches_batch(spark, tmp_path):
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        streaming_chunk_overlap,
-    )
-
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = {(r.doc_id, r.chunk_idx): (r.start_token, r.chunk_tokens,
-                                     r.chunk_digest)
-           for r in _drain(streaming_chunk_overlap(stream), tmp_path,
-                           "chunks").collect()}
-    from cga_logs_to_kinesis_spark.operators.llm_pipeline import (
-        chunk_windows,
-    )
-    want = {(r.doc_id, r.chunk_idx): (r.start_token, r.chunk_tokens,
-                                      r.chunk_digest)
-            for r in chunk_windows(docs).collect()}
-    assert got == want and len(want) > len(
-        {k[0] for k in want})  # real multi-chunk docs exist
-
-
-def test_ann_index_sink_matches_batch_and_survives_replay(spark, tmp_path):
-    """The ANN serving twin: chunk A (75%) builds the persisted LSH
-    bucket index + vector store; chunk B is scored against it, with an
-    injected crash AFTER all three writes (the at-least-once window).
-    After the replay the batch-1 report must equal the registry
-    query's output exactly — and in particular nothing may match
-    itself (the failure mode the batch_id < current read filter
-    prevents)."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.sources import load_embeddings
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        ann_index_sink,
-        stream_embeddings,
-    )
-
-    emb = load_embeddings(spark, SF_SMOKE)
-    src = tmp_path / "arrivals"
-    args = (str(tmp_path / "bucket_index"),
-            str(tmp_path / "vector_store"),
-            str(tmp_path / "reports"))
-
-    def drain(sink):
-        q = (stream_embeddings(spark, str(src) + "/*")
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    emb.filter(F.col("vec_id") % 4 < 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain(ann_index_sink(*args))
-
-    emb.filter(F.col("vec_id") % 4 == 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    crashed = False
-    try:
-        drain(crash_after(ann_index_sink(*args), (1,)))
-    except Exception:
-        crashed = True
-    assert crashed
-    assert spark.read.parquet(args[0]).filter("batch_id = 1").count() > 0
-    assert spark.read.parquet(args[1]).filter("batch_id = 1").count() > 0
-
-    drain(ann_index_sink(*args))                # replay batch 1
-
-    got = {(r.batch_vec, r.rank): (r.nearest_seen, r.cosine,
-                                   r.n_candidates)
-           for r in spark.read.parquet(args[2])
-           .filter("batch_id = 1").collect()}
-    want = {(r.batch_vec, r.rank): (r.nearest_seen, r.cosine,
-                                    r.n_candidates)
-            for r in all_queries()["ann_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert got == want and len(want) > 0
-    assert all(v[0] != k[0] for k, v in got.items())
-
-
-def test_digest_store_compaction_preserves_dedup(spark, tmp_path):
-    """Folding batch partitions into the -1 base partition must leave
-    the incremental dedup result identical (anti-join is idempotent
-    under the duplicates a mid-compaction crash can leave), and the
-    store must shrink to one base directory plus post-compaction
-    batches."""
-    import os
-
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        compact_digest_store,
-        incremental_dedup_sink,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    store = str(tmp_path / "digest_store")
-    out = str(tmp_path / "survivors")
-
-    def drain():
-        q = (stream_documents(spark, str(src) + "/*")
-             .writeStream.foreachBatch(incremental_dedup_sink(store, out))
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    # two pre-compaction drops, then compact, then the final drop
-    docs.filter(F.col("doc_id") % 4 == 0).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain()
-    docs.filter(F.col("doc_id") % 4 == 1).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    docs.filter(F.col("doc_id") % 4 == 2).coalesce(1) \
-        .write.parquet(str(src / "chunk=2"))
-    drain()
-
-    folded = compact_digest_store(spark, store, upto_batch_id=1)
-    assert folded == 2
-    dirs = sorted(d for d in os.listdir(store)
-                  if d.startswith("batch_id="))
-    assert dirs == ["batch_id=-1"]
-
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=3"))
-    drain()
-
-    got = {r.text_digest: (r.doc_id, r.n_batch_dups)
-           for r in spark.read.parquet(out)
-           .filter("batch_id = 2").collect()}
-    want = {r.text_digest: (r.doc_id, r.n_batch_dups)
-            for r in all_queries()["dedup_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert got == want and len(want) > 0
 
 
 def test_streaming_ingest_audit_matches_batch(spark, tmp_path):
@@ -673,157 +90,6 @@ def test_ingest_audit_crash_after_write_is_exactly_once(spark, tmp_path):
            ingest_audit_report_from_store(spark, store).collect()]
     want = [tuple(r) for r in
             q_jsonl_ingest_report(spark, base).collect()]
-    assert got == want and len(want) > 0
-
-
-def _edge_batches(spark, tmp_path):
-    """The sf0.001 verified near-dup edges staged as THREE arrival
-    batches, split so plenty of components straddle batch boundaries
-    (hash split on doc_a).  Three, not two: keep-two compaction must
-    have something to remove (`compact_label_store` keeps the two
-    newest versions, so a two-batch store compacts to a no-op)."""
-    from cga_logs_to_kinesis_spark.operators.dedup import (
-        JACCARD_EDGE_THRESHOLD,
-        minhash_candidates,
-    )
-    docs = load_table(spark, SF_SMOKE, "documents")
-    edges = (minhash_candidates(docs)
-             .filter(F.col("jaccard") >= JACCARD_EDGE_THRESHOLD)
-             .select("doc_a", "doc_b").localCheckpoint())
-    src = tmp_path / "edge_arrivals"
-    for k in range(3):
-        edges.filter(F.col("doc_a") % 3 == k).coalesce(1) \
-            .write.parquet(str(src / f"chunk={k}"))
-    return edges, str(src)
-
-
-def _drain_edges(spark, src, sink, ckpt):
-    q = (spark.readStream.schema("doc_a long, doc_b long")
-         .option("maxFilesPerTrigger", 1).parquet(src + "/*")
-         .writeStream.foreachBatch(sink)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    try:
-        q.awaitTermination(120)
-    except Exception:
-        pass                             # injected crash surfaces here
-
-
-def test_components_incremental_matches_batch(spark, tmp_path):
-    """The label-star contraction must converge to the same clusters
-    as one-shot connected components over ALL edges — including
-    components whose edges arrived in different batches."""
-    from cga_logs_to_kinesis_spark.operators.dedup import (
-        connected_components,
-    )
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        compact_label_store,
-        components_incremental_sink,
-    )
-
-    edges, src = _edge_batches(spark, tmp_path)
-    store = str(tmp_path / "labels")
-    _drain_edges(spark, src, components_incremental_sink(store),
-                 str(tmp_path / "ckpt"))
-    import pyspark.sql.functions as SF
-    latest = (spark.read.parquet(store)
-              .filter(SF.col("batch_id")
-                      == spark.read.parquet(store)
-                      .agg(SF.max("batch_id")).first()[0]))
-    got = {(r.doc, r.comp) for r in latest.collect()}
-    want = {(r.doc, r.comp)
-            for r in connected_components(edges).collect()}
-    assert got == want and len(want) > 0
-    # cross-batch merges actually happened: at least one component has
-    # members from more than one arrival third
-    comps = {}
-    for doc, comp in got:
-        comps.setdefault(comp, set()).add(doc % 3)
-    assert any(len(par) >= 2 for par in comps.values()), \
-        "fixture split produced no cross-batch component — weak test"
-    # keep-two compaction: 3 versions -> the oldest goes, and the
-    # NEWEST version is still the complete final state (the second-
-    # newest survives only as the crash-replay safety net, so the
-    # comparison reads the newest partition, not the whole store)
-    removed = compact_label_store(store)
-    assert removed == 1
-    remaining = spark.read.parquet(store)
-    newest = remaining.agg(SF.max("batch_id")).first()[0]
-    after = {(r.doc, r.comp)
-             for r in remaining.filter(SF.col("batch_id") == newest)
-             .select("doc", "comp").collect()}
-    assert after == want
-
-
-def test_components_incremental_crash_replay_is_exactly_once(
-        spark, tmp_path):
-    """Crash after the label write, before the checkpoint commit: the
-    replayed batch must recompute from PRE-batch state (newest
-    partition strictly below its id) and converge identically."""
-    from cga_logs_to_kinesis_spark.operators.dedup import (
-        connected_components,
-    )
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        components_incremental_sink,
-    )
-
-    edges, src = _edge_batches(spark, tmp_path)
-    store = str(tmp_path / "labels")
-    sink = crash_after(components_incremental_sink(store), (1,))
-    ckpt = str(tmp_path / "ckpt")
-    _drain_edges(spark, src, sink, ckpt)    # dies on batch 1 post-write
-    _drain_edges(spark, src, sink, ckpt)    # replay batch 1, finish 2
-    import pyspark.sql.functions as SF
-    latest = (spark.read.parquet(store)
-              .filter(SF.col("batch_id")
-                      == spark.read.parquet(store)
-                      .agg(SF.max("batch_id")).first()[0]))
-    got = {(r.doc, r.comp) for r in latest.collect()}
-    want = {(r.doc, r.comp)
-            for r in connected_components(edges).collect()}
-    assert got == want and len(want) > 0
-
-
-def test_compact_label_store_survives_uncommitted_newest(
-        spark, tmp_path):
-    """The reason compaction keeps TWO versions: crash after the final
-    batch's label write but before its checkpoint commit, then compact
-    (the stream is 'stopped' — it crashed), then restart.  The replayed
-    batch reads ``batch_id < current`` and must find its pre-batch
-    state.  Keep-ONE compaction would have deleted exactly that
-    version (the newest surviving partition IS the uncommitted write),
-    sending the replay down the first-batch path and permanently
-    discarding every cluster learned before the final batch."""
-    from cga_logs_to_kinesis_spark.operators.dedup import (
-        connected_components,
-    )
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        compact_label_store,
-        components_incremental_sink,
-    )
-
-    edges, src = _edge_batches(spark, tmp_path)
-    store = str(tmp_path / "labels")
-    sink = crash_after(components_incremental_sink(store), (2,))
-    ckpt = str(tmp_path / "ckpt")
-    _drain_edges(spark, src, sink, ckpt)   # dies on batch 2 post-write
-    # store now holds versions {0,1,2}; batch 2 is UNCOMMITTED.
-    # Operator compacts the crashed-stopped store: keep-two retains
-    # {1, 2} — version 1 is the state batch 2's replay needs.
-    removed = compact_label_store(store)
-    assert removed == 1
-    import pyspark.sql.functions as SF
-    kept = sorted(r.batch_id for r in spark.read.parquet(store)
-                  .select("batch_id").distinct().collect())
-    assert kept == [1, 2]
-    _drain_edges(spark, src, sink, ckpt)   # restart: replay batch 2
-    latest = (spark.read.parquet(store)
-              .filter(SF.col("batch_id")
-                      == spark.read.parquet(store)
-                      .agg(SF.max("batch_id")).first()[0]))
-    got = {(r.doc, r.comp) for r in latest.collect()}
-    want = {(r.doc, r.comp)
-            for r in connected_components(edges).collect()}
     assert got == want and len(want) > 0
 
 
@@ -984,43 +250,6 @@ def test_read_store_first_batch_vs_corrupt_store(spark, tmp_path):
         df.collect()
 
 
-def test_incremental_dedup_survives_empty_first_batch(spark, tmp_path):
-    """The regression the _read_store empty-store arm closes, end to
-    end: an EMPTY first micro-batch writes a footerless store; the
-    second batch must proceed with empty state instead of wedging on
-    schema inference forever."""
-    import time as _time
-
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        incremental_dedup_sink,
-    )
-
-    src = tmp_path / "src"
-    schema = ("doc_id long, text string, lang string, "
-              "source string, n_chars long")
-    spark.createDataFrame([], schema).coalesce(1) \
-        .write.mode("append").parquet(str(src))
-    _time.sleep(1.1)          # file-source orders batches by mod time
-    spark.createDataFrame(
-        [(1, "alpha beta", "en", "s", 10),
-         (2, "alpha beta", "en", "s", 10),
-         (3, "gamma delta", "en", "s", 11)], schema) \
-        .coalesce(1).write.mode("append").parquet(str(src))
-
-    store = str(tmp_path / "store")
-    out = str(tmp_path / "out")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    q = (stream.writeStream
-         .foreachBatch(incremental_dedup_sink(store, out))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    # 3 docs, one exact-dup pair -> 2 survivors
-    assert got.count() == 2
-
-
 def _blocklist_chunks(spark, tmp_path):
     """The fixture blocklist (doc_id % 13 == 0) staged as three
     arrival chunks — eval sets get published over time."""
@@ -1120,248 +349,9 @@ def test_bloom_sink_crash_replay_is_exactly_once(spark, tmp_path):
 # Streaming event funnel (10th store family)
 # ---------------------------------------------------------------------------
 
-def _funnel_batches(spark, tmp_path, n=3):
-    """The sf0.001 funnel feed staged as THREE arrival batches split
-    by a hash of (user_id, us) — deliberately NOT by time, so most
-    users' stage events arrive out of order across batches (the case
-    that breaks greedy stage machines)."""
-    from cga_logs_to_kinesis_spark.operators.temporal import funnel_feed
-    from cga_logs_to_kinesis_spark.sources import load_events
-
-    ev = funnel_feed(load_events(spark, SF_SMOKE)).localCheckpoint()
-    src = tmp_path / "ev_arrivals"
-    for k in range(n):
-        ev.filter(F.abs(F.hash("user_id", "us")) % n == k) \
-            .coalesce(1).write.parquet(str(src / f"chunk={k}"))
-    return ev, str(src)
-
-
-def _drain_funnel(spark, src, sink, ckpt):
-    q = (spark.readStream
-         .schema("user_id long, event_type string, us long")
-         .option("maxFilesPerTrigger", 1).parquet(src + "/*")
-         .writeStream.foreachBatch(sink)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    try:
-        q.awaitTermination(120)
-    except Exception:
-        pass                             # injected crash surfaces here
-
-
-def _funnel_report(spark, store):
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        event_funnel_from_store,
-    )
-    return sorted(map(tuple,
-                      event_funnel_from_store(spark, store).collect()))
-
-
-def test_funnel_state_sink_matches_batch(spark, tmp_path):
-    """Out-of-order arrival across three micro-batches must fold to
-    the EXACT batch funnel report — anchors are minima, so the state
-    keeps candidate times, not a greedy current-stage pointer."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        funnel_state_sink,
-    )
-
-    _, src = _funnel_batches(spark, tmp_path)
-    store = str(tmp_path / "funnel_state")
-    _drain_funnel(spark, src, funnel_state_sink(store),
-                  str(tmp_path / "ckpt"))
-    got = _funnel_report(spark, store)
-    want = sorted(map(tuple,
-                      all_queries()["event_funnel"]
-                      .fn(spark, SF_SMOKE).collect()))
-    assert got == want
-    assert got[0][2] > 0, "vacuous fixture: no stage-1 users"
-
-
-def test_funnel_late_stage1_event_demotes_user(spark, tmp_path):
-    """THE case a greedy stage machine gets wrong: a LATE-arriving
-    earlier stage-1 event moves the anchor window left and must
-    disqualify a previously-qualifying stage-2 event (reached stage
-    goes DOWN)."""
-    from cga_logs_to_kinesis_spark.operators.temporal import (
-        FUNNEL_GAP_US,
-    )
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        funnel_state_sink,
-    )
-
-    g = FUNNEL_GAP_US
-    sink = funnel_state_sink(str(tmp_path / "st"))
-    b0 = spark.createDataFrame(
-        [(1, "view", g), (1, "click", g + 1000)],
-        "user_id long, event_type string, us long")
-    sink(b0, 0)
-    store = str(tmp_path / "st")
-    assert _funnel_report(spark, store) == [
-        (1, "view", 1), (2, "click", 1), (3, "purchase", 0)]
-    # the late event: an EARLIER view at t=0 -> anchor drops to 0,
-    # click at g+1000 > 0+g falls out of the window
-    b1 = spark.createDataFrame(
-        [(1, "view", 0)], "user_id long, event_type string, us long")
-    sink(b1, 1)
-    assert _funnel_report(spark, store) == [
-        (1, "view", 1), (2, "click", 0), (3, "purchase", 0)]
-
-
-def test_funnel_state_crash_replay_is_exactly_once(spark, tmp_path):
-    """Crash after the state write, before the checkpoint commit: the
-    replayed batch recomputes from the newest version strictly below
-    its id and converges to the identical report (set-union state is
-    idempotent)."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        funnel_state_sink,
-    )
-
-    _, src = _funnel_batches(spark, tmp_path)
-    store = str(tmp_path / "funnel_state")
-    sink = crash_after(funnel_state_sink(store), (1,))
-    ckpt = str(tmp_path / "ckpt")
-    _drain_funnel(spark, src, sink, ckpt)   # dies on batch 1 post-write
-    _drain_funnel(spark, src, sink, ckpt)   # replay batch 1, finish 2
-    got = _funnel_report(spark, store)
-    want = sorted(map(tuple,
-                      all_queries()["event_funnel"]
-                      .fn(spark, SF_SMOKE).collect()))
-    assert got == want
-
-
-def test_compact_funnel_state_store_keeps_report(spark, tmp_path):
-    """Keep-two compaction drops old complete versions without
-    touching the folded report."""
-    import os
-
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        compact_funnel_state_store,
-        funnel_state_sink,
-    )
-
-    _, src = _funnel_batches(spark, tmp_path)
-    store = str(tmp_path / "funnel_state")
-    _drain_funnel(spark, src, funnel_state_sink(store),
-                  str(tmp_path / "ckpt"))
-    before = _funnel_report(spark, store)
-    assert compact_funnel_state_store(store) == 1   # 3 versions -> 2
-    assert sorted(os.listdir(store))[-2:] == [
-        "batch_id=1", "batch_id=2"]
-    assert _funnel_report(spark, store) == before
-
-
-def test_funnel_state_sink_null_semantics_match_batch(spark, tmp_path):
-    """Dirty feed: NULL-timestamp stage-1 events still count the user
-    at stage 1 (the batch groupBy emits a t=NULL row) but anchor
-    nothing; NULL-user events count once at stage 1 and can never
-    pass the stage-2 join.  Split across two batches so the NULL
-    state rows must round-trip the store."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        funnel_state_sink,
-    )
-
-    store = str(tmp_path / "st")
-    sink = funnel_state_sink(store)
-    schema = "user_id long, event_type string, us long"
-    sink(spark.createDataFrame(
-        [(5, "view", None), (None, "view", 10), (7, "view", 10)],
-        schema), 0)
-    sink(spark.createDataFrame(
-        [(None, "click", 20), (5, "click", 30), (7, "click", 20)],
-        schema), 1)
-    # stage 1: users {5, NULL, 7}; stage 2: only 7 (5's anchor is
-    # NULL, NULL-user can't join); stage 3: none
-    assert _funnel_report(spark, store) == [
-        (1, "view", 3), (2, "click", 1), (3, "purchase", 0)]
-
-
 # ---------------------------------------------------------------------------
 # IVF serving twin (persisted inverted-file + SQ8 index)
 # ---------------------------------------------------------------------------
-
-def _ivf_fixture(spark, tmp_path, n=3):
-    from cga_logs_to_kinesis_spark.operators.similarity import (
-        SEMDEDUP_K,
-    )
-    from cga_logs_to_kinesis_spark.sources import load_embeddings
-
-    emb = load_embeddings(spark, SF_SMOKE).localCheckpoint()
-    queries = emb.filter(F.col("vec_id") < SEMDEDUP_K)
-    cents = (emb.filter(F.col("vec_id") < SEMDEDUP_K)
-             .select(F.col("vec_id").alias("centroid_id"),
-                     F.col("embedding").alias("cent"))
-             .localCheckpoint())
-    src = tmp_path / "vec_arrivals"
-    for k in range(n):
-        emb.filter(F.col("vec_id") % n == k).coalesce(1) \
-            .write.parquet(str(src / f"chunk={k}"))
-    return emb, queries, cents, str(src)
-
-
-def _drain_vecs(spark, src, sink, ckpt):
-    q = (spark.readStream
-         .schema("vec_id long, embedding array<float>")
-         .option("maxFilesPerTrigger", 1).parquet(src + "/*")
-         .writeStream.foreachBatch(sink)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    try:
-        q.awaitTermination(120)
-    except Exception:
-        pass                             # injected crash surfaces here
-
-
-def test_ivf_store_serving_matches_batch(spark, tmp_path):
-    """Queries served against the persisted index must equal the
-    registered batch cosine_topk_ivf_sq bit-for-bit (same shared
-    search definition, same fixture vectors)."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        cosine_topk_from_ivf_store,
-        ivf_index_sink,
-    )
-
-    _, queries, cents, src = _ivf_fixture(spark, tmp_path)
-    dirs = [str(tmp_path / d) for d in ("assign", "codes", "vecs")]
-    _drain_vecs(spark, src, ivf_index_sink(*dirs, cents),
-                str(tmp_path / "ckpt"))
-    got = sorted(map(tuple, cosine_topk_from_ivf_store(
-        spark, *dirs, queries, cents).collect()))
-    want = sorted(map(tuple,
-                      all_queries()["cosine_topk_ivf_sq"]
-                      .fn(spark, SF_SMOKE).collect()))
-    assert got == want and len(want) > 0
-
-
-def test_ivf_sink_crash_replay_is_exactly_once(spark, tmp_path):
-    """Crash after the last store write, before the checkpoint
-    commit: the replayed batch rewrites identical partitions (the
-    sink reads nothing — pure function of batch + fixed centroids),
-    so the served result is unchanged."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        cosine_topk_from_ivf_store,
-        ivf_index_sink,
-    )
-
-    emb, queries, cents, src = _ivf_fixture(spark, tmp_path)
-    dirs = [str(tmp_path / d) for d in ("assign", "codes", "vecs")]
-    sink = crash_after(ivf_index_sink(*dirs, cents), (1,))
-    ckpt = str(tmp_path / "ckpt")
-    _drain_vecs(spark, src, sink, ckpt)   # dies on batch 1 post-write
-    _drain_vecs(spark, src, sink, ckpt)   # replay batch 1, finish 2
-    # the replay overwrote, not appended: no duplicate vectors
-    assert spark.read.parquet(str(tmp_path / "vecs")).count() \
-        == emb.count()
-    got = sorted(map(tuple, cosine_topk_from_ivf_store(
-        spark, *dirs, queries, cents).collect()))
-    want = sorted(map(tuple,
-                      all_queries()["cosine_topk_ivf_sq"]
-                      .fn(spark, SF_SMOKE).collect()))
-    assert got == want
-
 
 def _drain_doc_sink(spark, src, sink, ckpt):
     """Drive a documents-consuming foreachBatch sink ONE FILE PER
@@ -1884,42 +874,6 @@ def test_corpus_drift_store_compaction(spark, tmp_path):
     assert fold() == want
 
 
-def test_streaming_homoglyph_scrub_matches_batch(spark, tmp_path):
-    """The confusable repair runs continuously: a poisoned document
-    stream scrubs to the batch query's exact (n_confusables,
-    scrubbed_text) per doc — and the scrub restores the clean fixture
-    text byte-for-byte (the batch query's restoration proof, held
-    through the streaming path)."""
-    from cga_logs_to_kinesis_spark.operators.ingest_audit import (
-        _POISON_CYR,
-        _POISON_LAT,
-    )
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        streaming_homoglyph_scrub,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    poisoned = docs.withColumn(
-        "text", F.translate("text", _POISON_LAT, _POISON_CYR))
-    src = tmp_path / "poisoned"
-    for k in range(3):
-        poisoned.filter(F.abs(F.hash("doc_id")) % 3 == k).coalesce(1) \
-            .write.parquet(str(src / f"chunk={k}"))
-    stream = stream_documents(spark, str(src) + "/*")
-    got = _drain(streaming_homoglyph_scrub(stream), tmp_path, "scrub")
-    g = {r.doc_id: (r.n_confusables, r.scrubbed_text)
-         for r in got.collect()}
-    want = all_queries()["homoglyph_scrub"].fn(spark, SF_SMOKE)
-    w = {r.doc_id: (r.n_confusables, r.scrubbed_text)
-         for r in want.collect()}
-    assert g == w and len(g) > 0
-    assert any(n > 0 for n, _ in g.values())   # poison exercised
-    orig = {r.doc_id: r.text for r in docs.collect()}
-    assert all(orig[d] == t for d, (_, t) in g.items()
-               if orig[d] is not None)         # restored byte-for-byte
-
-
 # ---------------------------------------------------------------------------
 # Streaming line-frequency store (boilerplate mining as a SUM fold)
 # ---------------------------------------------------------------------------
@@ -2320,133 +1274,6 @@ def test_mixture_from_store_matches_batch_algebra(spark, tmp_path):
     assert fold() == want
 
 
-def test_streaming_markup_scrub_matches_batch(spark, tmp_path):
-    """The WARC-to-text scrub runs continuously at ingest: a
-    markup-poisoned document stream scrubs to the batch query's exact
-    (n_tags, n_entities, clean_text, markup_ratio) per doc — and the
-    clean text equals the fixture original byte-for-byte (the batch
-    restoration proof, held through the streaming path)."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        streaming_markup_scrub,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    # the batch query's exact poison (tag wrap + &nbsp;-encoded spaces)
-    poisoned = docs.withColumn(
-        "text",
-        F.concat(F.lit('<html><body class="c"><p id="'),
-                 F.col("doc_id").cast("string"), F.lit('">'),
-                 F.replace(F.col("text"), F.lit(" "), F.lit("&nbsp;")),
-                 F.lit("<br/></p></body></html>")))
-    src = tmp_path / "marked"
-    for k in range(3):
-        poisoned.filter(F.abs(F.hash("doc_id")) % 3 == k).coalesce(1) \
-            .write.parquet(str(src / f"chunk={k}"))
-    stream = stream_documents(spark, str(src) + "/*")
-    got = _drain(streaming_markup_scrub(stream), tmp_path, "mscrub")
-    g = {r.doc_id: (r.n_tags, r.n_entities, r.clean_text,
-                    r.markup_ratio)
-         for r in got.collect()}
-    want = all_queries()["markup_scrub"].fn(spark, SF_SMOKE)
-    w = {r.doc_id: (r.n_tags, r.n_entities, r.clean_text,
-                    r.markup_ratio)
-         for r in want.collect()}
-    assert g == w and len(g) > 0
-    assert all(nt >= 4 for nt, _, _, _ in g.values())  # poison seen
-    orig = {r.doc_id: r.text for r in docs.collect()}
-    assert all(orig[d] == c for d, (_, _, c, _) in g.items()
-               if orig[d] is not None)
-
-
-def test_streaming_blocklist_matches_batch(spark, tmp_path):
-    """The C4 blocklist gate runs continuously at ingest: over a
-    multi-batch document stream, the kept set equals blocklist_apply
-    row-for-row, per-doc occurrence counts equal the batch hits
-    front, and every arriving doc is emitted exactly once (one
-    matcher, two faces — shared BLOCKLIST + norm_tokens +
-    blocklist_hit_grams_col definitions)."""
-    from cga_logs_to_kinesis_spark.operators.llm_pipeline import (
-        blocklist_hits,
-    )
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        streaming_blocklist,
-    )
-
-    docs, stream = _staged_stream(spark, tmp_path)
-    got = _drain(streaming_blocklist(stream), tmp_path, "blgate")
-    rows = got.collect()
-    assert len(rows) == docs.count()          # every doc, exactly once
-    kept = sorted((r.doc_id, r.source, r.lang, r.n_chars)
-                  for r in rows if r.kept)
-    flagged = blocklist_hits(docs).select("doc_id").distinct()
-    want_kept = sorted(tuple(r) for r in
-                       docs.join(flagged, "doc_id", "left_anti")
-                       .select("doc_id", "source", "lang", "n_chars")
-                       .collect())
-    assert kept == want_kept
-    want_counts = {r.doc_id: r.n for r in
-                   blocklist_hits(docs).groupBy("doc_id")
-                   .agg(F.count("*").alias("n")).collect()}
-    got_counts = {r.doc_id: r.n_hits for r in rows if r.n_hits > 0}
-    assert got_counts == want_counts
-    assert got_counts and len(kept) > 0       # gate fires both ways
-    assert all(not r.kept for r in rows if r.n_hits > 0)
-
-
-def test_setjoin_index_sink_crash_is_exactly_once(spark, tmp_path):
-    """The EXACT incremental join's streaming twin holds the same
-    at-least-once window discipline as the minhash sink: after a
-    crash past all three writes, the replayed batch joins against an
-    index + set store already containing its own docs — un-filtered,
-    every batch doc would match itself at jaccard 1.0.  The report
-    must instead converge to exactly the batch operator's output
-    (which the DuckDB oracle pins as brute-force-exact)."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        setjoin_index_sink,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    args = (str(tmp_path / "prefix_index"),
-            str(tmp_path / "set_store"),
-            str(tmp_path / "reports"))
-
-    def drain(sink):
-        q = (stream_documents(spark, str(src) + "/*")
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    docs.filter(F.col("doc_id") % 4 < 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain(setjoin_index_sink(*args))
-
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    crashed = False
-    try:
-        drain(crash_after(setjoin_index_sink(*args), (1,)))
-    except Exception:
-        crashed = True
-    assert crashed
-    assert spark.read.parquet(args[0]).filter("batch_id = 1").count() > 0
-    assert spark.read.parquet(args[1]).filter("batch_id = 1").count() > 0
-
-    drain(setjoin_index_sink(*args))            # replay batch 1
-
-    got = {(r.batch_doc, r.seen_doc): (r.n_inter, r.n_union, r.jaccard)
-           for r in spark.read.parquet(args[2])
-           .filter("batch_id = 1").collect()}
-    want = {(r.batch_doc, r.seen_doc): (r.n_inter, r.n_union, r.jaccard)
-            for r in all_queries()["setjoin_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert got == want and len(want) > 0
-    assert all(b != s for b, s in got)          # nothing self-matched
-
-
 def test_perplexity_split_from_store_matches_batch(spark, tmp_path):
     """The bigram-count store folded through the batch query's exact
     algebra tail reproduces perplexity_split bit-for-bit — under a
@@ -2653,121 +1480,3 @@ def test_token_decon_store_scores_unseen_tranche(spark, tmp_path):
     assert rows[0].doc_id == 1 and rows[0].n_shared_grams > 0
 
 
-def test_semdedup_assign_sink_matches_batch_and_survives_replay(
-        spark, tmp_path):
-    """The incremental SemDeDup twin: the centroid artifact is seeded
-    ONCE from the full corpus (seed_semdedup_centroids), chunk A (75%)
-    streams in and builds the persisted assignment + vector stores,
-    chunk B is scored against them with an injected crash AFTER all
-    three writes (the at-least-once window).  After the replay the
-    batch-1 pair report must equal the registry query's output
-    bit-for-bit — and nothing may pair with itself (the failure mode
-    the batch_id < current read filter prevents)."""
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.sources import load_embeddings
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        seed_semdedup_centroids,
-        semdedup_assign_sink,
-        stream_embeddings,
-    )
-
-    emb = load_embeddings(spark, SF_SMOKE)
-    cents_dir = str(tmp_path / "cents")
-    assert seed_semdedup_centroids(emb, cents_dir) > 0
-    src = tmp_path / "arrivals"
-    args = (cents_dir,
-            str(tmp_path / "assign_store"),
-            str(tmp_path / "vector_store"),
-            str(tmp_path / "reports"))
-
-    def drain(sink):
-        q = (stream_embeddings(spark, str(src) + "/*")
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    emb.filter(F.col("vec_id") % 4 < 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain(semdedup_assign_sink(*args))
-
-    emb.filter(F.col("vec_id") % 4 == 3).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    crashed = False
-    try:
-        drain(crash_after(semdedup_assign_sink(*args), (1,)))
-    except Exception:
-        crashed = True
-    assert crashed
-    assert spark.read.parquet(args[1]).filter("batch_id = 1").count() > 0
-    assert spark.read.parquet(args[2]).filter("batch_id = 1").count() > 0
-
-    drain(semdedup_assign_sink(*args))          # replay batch 1
-
-    got = {(r.batch_vec, r.seen_vec): (r.cluster, r.cosine)
-           for r in spark.read.parquet(args[3])
-           .filter("batch_id = 1").collect()}
-    want = {(r.batch_vec, r.seen_vec): (r.cluster, r.cosine)
-            for r in all_queries()["semdedup_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert got == want and len(want) > 0
-    assert all(b != s for b, s in got)
-
-
-def test_image_index_sink_matches_batch_and_survives_replay(
-        spark, tmp_path):
-    """The image dedup serving twin: chunk A (80%) of the
-    planted-scene media builds the persisted band index + fingerprint
-    stores; chunk B is fingerprinted and scored against them with an
-    injected crash AFTER all three writes.  After the replay the
-    batch-1 pair report must equal the registry query's output
-    exactly — and nothing may pair with itself."""
-    from cga_logs_to_kinesis_spark.operators.multimodal import (
-        make_raw_media_scenes,
-    )
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.sources import load_table
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        image_index_sink,
-        stream_media,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    media = make_raw_media_scenes(docs).localCheckpoint()
-    src = tmp_path / "arrivals"
-    args = (str(tmp_path / "band_index"),
-            str(tmp_path / "fps_store"),
-            str(tmp_path / "reports"))
-
-    def drain(sink):
-        q = (stream_media(spark, str(src) + "/*")
-             .writeStream.foreachBatch(sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    media.filter(F.col("doc_id") % 5 < 4).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    drain(image_index_sink(*args))
-
-    media.filter(F.col("doc_id") % 5 == 4).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    crashed = False
-    try:
-        drain(crash_after(image_index_sink(*args), (1,)))
-    except Exception:
-        crashed = True
-    assert crashed
-    assert spark.read.parquet(args[0]).filter("batch_id = 1").count() > 0
-    assert spark.read.parquet(args[1]).filter("batch_id = 1").count() > 0
-
-    drain(image_index_sink(*args))              # replay batch 1
-
-    got = {(r.batch_doc, r.seen_doc): r.hamming
-           for r in spark.read.parquet(args[2])
-           .filter("batch_id = 1").collect()}
-    want = {(r.batch_doc, r.seen_doc): r.hamming
-            for r in all_queries()["image_dedup_incremental"]
-            .fn(spark, SF_SMOKE).collect()}
-    assert got == want and len(want) > 0
-    assert all(b != s for b, s in got)

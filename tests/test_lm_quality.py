@@ -144,38 +144,6 @@ def test_gopher_stop_hits_count_distinct_presence(spark, tmp_path):
     assert r.keep is False
 
 
-def test_streaming_gopher_matches_batch(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from cga_logs_to_kinesis_spark.sources import load_table
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        stream_documents,
-        streaming_gopher_quality,
-    )
-    from tests.conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    stream = streaming_gopher_quality(
-        stream_documents(spark, str(src) + "/*"))
-    q = (stream.writeStream.format("memory").queryName("gopherq")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.doc_id: r for r in
-           spark.sql("SELECT * FROM gopherq").collect()}
-    want = {r.doc_id: r
-            for r in q_gopher_quality(spark, SF_SMOKE).collect()}
-    assert got.keys() == want.keys()
-    for doc_id in want:
-        assert tuple(got[doc_id]) == tuple(want[doc_id])
-
-
 def test_perplexity_split_tertiles_per_lang(spark, tmp_path):
     """Bucket sizes are exact integer tertiles WITHIN each language,
     ordering follows the LM score ascending (head = most fluent), and

@@ -62,7 +62,7 @@ def test_metrics_http_endpoint():
     stats = DeliveryStats(records_sent=5, records_dropped=1,
                           request_errors=3)
     server = serve_metrics(
-        lambda: render_all_metrics(metrics, [stats]), port=0)
+        lambda: render_all_metrics(metrics, [stats], []), port=0)
     try:
         port = server.server_address[1]
         with urllib.request.urlopen(
@@ -88,3 +88,34 @@ def test_metrics_http_endpoint():
         assert exc.value.code == 404
     finally:
         server.shutdown()
+
+
+def test_metrics_scrape_shows_batch_duration_and_tailer_errors(tmp_path):
+    """The last trigger's duration per query, and the tailers' failed
+    polls, are on the scraped page."""
+    import urllib.request
+
+    from cga_logs_to_kinesis_spark.main import render_all_metrics
+    from cga_logs_to_kinesis_spark.streaming.metrics import (
+        EngineMetrics,
+        serve_metrics,
+    )
+    from cga_logs_to_kinesis_spark.streaming.tailer import TailFollower
+
+    metrics = EngineMetrics(last_batch_duration_ms={"q1": 840})
+    tailers = [TailFollower(watch_dir=str(tmp_path),
+                            spool_dir=str(tmp_path / "s"))
+               for _ in range(2)]
+    tailers[0].errors = 2
+    tailers[1].errors = 1
+    server = serve_metrics(
+        lambda: render_all_metrics(metrics, [], tailers), port=0)
+    try:
+        port = server.server_address[1]
+        with urllib.request.urlopen(
+                f"http://127.0.0.1:{port}/metrics", timeout=10) as resp:
+            vals = parse_prometheus(resp.read().decode())
+    finally:
+        server.shutdown()
+    assert vals['engine_last_batch_duration_ms{query="q1"}'] == 840
+    assert vals["engine_tailer_errors_total"] == 3

@@ -241,95 +241,6 @@ def test_pagerank_ranks_sum_to_one_ish(spark):
     assert abs(total - 1.0) < 1e-6
 
 
-# ---------------------------------------------------------------------------
-# Streaming funnel fold: incremental == batch under ANY batch split
-# ---------------------------------------------------------------------------
-
-def _brute_reached(events):
-    """Reference model — the batch q_event_funnel semantics: anchors
-    are minima, stage i qualifies in [t_{i-1}, t_{i-1}+GAP]."""
-    from cga_logs_to_kinesis_spark.operators.temporal import (
-        FUNNEL_GAP_US,
-        FUNNEL_STAGES,
-    )
-    t_prev, reached = None, 0
-    for i in range(1, len(FUNNEL_STAGES) + 1):
-        times = sorted(u for s, u in events if s == i)
-        if i == 1:
-            t = times[0] if times else None
-        else:
-            q = [u for u in times
-                 if t_prev is not None
-                 and t_prev <= u <= t_prev + FUNNEL_GAP_US]
-            t = q[0] if q else None
-        if t is None:
-            break
-        reached, t_prev = i, t
-    return reached
-
-
-def _fold_incrementally(batches):
-    """Replay the sink's per-batch flow for one user: distinct
-    (stage, time) partials merged with the carried state through
-    _funnel_fold_user."""
-    import pandas as pd
-
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        _funnel_fold_user,
-    )
-
-    state = None
-    for b in batches:
-        parts: dict[int, set] = {}
-        for s, u in b:
-            parts.setdefault(s, set()).add(u)
-        rows = {"user_id": [], "stage": [], "times": [], "reached": []}
-        for s, us in sorted(parts.items()):
-            rows["user_id"].append(1)
-            rows["stage"].append(s)
-            rows["times"].append(sorted(us))
-            rows["reached"].append(0)
-        pdf = pd.DataFrame(rows)
-        if state is not None and len(state):
-            pdf = pd.concat([state[pdf.columns], pdf],
-                            ignore_index=True)
-        if not len(pdf):
-            continue
-        state = _funnel_fold_user(pdf)
-    if state is None or not len(state):
-        return 0
-    return int(state["reached"].iloc[0])
-
-
-# times on a GAP/5 grid so the inter-stage window genuinely cuts;
-# stages 1..3 match FUNNEL_STAGES
-_FUNNEL_EVENTS = st.lists(
-    st.tuples(st.integers(1, 3), st.integers(0, 12)),
-    max_size=18)
-
-
-@settings(max_examples=300, deadline=None)
-@given(events=_FUNNEL_EVENTS,
-       batch_of=st.lists(st.integers(0, 3), min_size=18, max_size=18))
-def test_funnel_fold_matches_batch_for_any_split(events, batch_of):
-    """THE streaming-funnel invariant: however the event multiset is
-    split into micro-batches (including empty batches and
-    out-of-order, interleaved arrivals), the incrementally folded
-    per-user state reaches exactly the stage the batch semantics
-    computes — late earlier events demote, pruning never loses a
-    future qualifier."""
-    from cga_logs_to_kinesis_spark.operators.temporal import (
-        FUNNEL_GAP_US,
-    )
-    unit = FUNNEL_GAP_US // 5
-    scaled = [(s, u * unit) for s, u in events]
-    batches = [[] for _ in range(4)]
-    for ev, b in zip(scaled, batch_of):
-        batches[b].append(ev)
-    assert _fold_incrementally(batches) == _brute_reached(scaled), (
-        scaled, batches)
-
-
 def brute_force_line_scrub(docs, min_chars, boiler_df):
     """Reference model of line-level dedup: a line is boilerplate
     when len >= min_chars and it appears in >= boiler_df distinct

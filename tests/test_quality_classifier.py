@@ -76,39 +76,6 @@ def test_tokenless_docs_excluded(spark):
     assert [r.doc_id for r in out] == [2]
 
 
-def test_streaming_classifier_matches_batch(spark, tmp_path):
-    """The scorer is row-local, so the streaming twin is the batch
-    operator unchanged — parity bit-for-bit over a 2-chunk arrival."""
-    from pyspark.sql import functions as F
-
-    from cga_logs_to_kinesis_spark.registry import all_queries
-    from cga_logs_to_kinesis_spark.sources import load_table
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        stream_documents,
-        streaming_quality_classifier,
-    )
-    from tests.conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    src = tmp_path / "arrivals"
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1) \
-        .write.parquet(str(src / "chunk=0"))
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1) \
-        .write.parquet(str(src / "chunk=1"))
-    stream = streaming_quality_classifier(
-        stream_documents(spark, str(src) + "/*"))
-    q = (stream.writeStream.format("memory").queryName("qclfstream")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.doc_id: tuple(r) for r in
-           spark.sql("SELECT * FROM qclfstream").collect()}
-    want = {r.doc_id: tuple(r) for r in all_queries()[
-        "quality_classifier"].fn(spark, SF_SMOKE).collect()}
-    assert got == want and len(want) == 500
-
-
 def test_trained_probe_separates_separable_classes(spark, tmp_path):
     """On a corpus whose target class uses disjoint vocabulary the
     trained difference-of-means probe must reach a PERFECT

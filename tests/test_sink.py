@@ -94,16 +94,6 @@ def test_bounded_retry_drops_after_max_request_attempts(spark):
     assert stats["attempts"].max() == 3
 
 
-def test_load_shed_when_enabled(spark):
-    tp = CrashingTransport(crashes=99)
-    df = _records_df(spark, 10).coalesce(1)
-    cfg = SinkConfig(base_backoff_s=0, shed=True,
-                     max_consecutive_errors_shed=5)
-    stats = deliver_pages(df, tp, cfg)
-    assert stats["records_dropped"].sum() == 10   # B6 whole-batch shed
-    assert stats["records_sent"].sum() == 0
-
-
 def test_delivery_completeness_across_tasks(spark, tmp_path):
     """Every record delivered exactly once even when the input arrives
     pre-shuffled across many partitions."""
@@ -128,175 +118,56 @@ def test_empty_and_single(spark, tmp_path, n):
     assert stats["records_sent"].sum() == n
 
 
-def test_firehose_sink_delivery_and_retry(spark, tmp_path):
-    """K5: the Firehose PutRecordBatch sink is the same
-    page/retry/drop machinery over a Data-only transport — poisoned
-    records retry per-record then deliver, every record lands exactly
-    once, and no partition key leaks into the delivered payloads
-    (reference firehose.go:78-90)."""
-    import glob
+@pytest.fixture
+def kinesis(monkeypatch):
+    """The boto3 transport with a Stubber on its client: no request
+    leaves the process, and static credentials keep botocore from
+    looking any up."""
+    from botocore.stub import Stubber
 
-    from cga_logs_to_kinesis_spark.streaming.faults import (
-        FirehoseFakeTransport,
-    )
+    from cga_logs_to_kinesis_spark.streaming.sink import boto3_transport
 
-    out = str(tmp_path / "fh")
-    n = 700                                    # forces two pages
-    rows = [(f"rec-{i}" + ("-poison" if i % 97 == 0 else ""), f"k{i%5}")
-            for i in range(n)]
-    df = spark.createDataFrame(rows, "data string, partition_key string") \
-        .selectExpr("CAST(data AS BINARY) AS data", "partition_key") \
-        .coalesce(1)
-    tp = FirehoseFakeTransport(out, fail_attempts=2)
-    stats = deliver_pages(df, tp, SinkConfig(base_backoff_s=0))
-    assert int(stats["records_sent"].sum()) == n
-    assert int(stats["records_dropped"].sum()) == 0
-    got = []
-    for path in glob.glob(out + "/*.jsonl"):
-        with open(path, "rb") as f:
-            got += [ln for ln in f.read().split(b"\n") if ln]
-    assert sorted(got) == sorted(
-        d.encode() for d, _ in rows), "lost or duplicated records"
-    assert all(b"k0" not in g or b"rec" in g for g in got)
+    monkeypatch.setenv("AWS_ACCESS_KEY_ID", "AKTEST")
+    monkeypatch.setenv("AWS_SECRET_ACCESS_KEY", "SKTEST")
+    tp = boto3_transport("us-east-1")
+    stub = Stubber(tp.client())
+    with stub:
+        yield tp, stub
+    stub.assert_no_pending_responses()
 
 
-def test_firehose_fake_rejects_oversized_batch():
-    """The local double enforces the real API's 500-record cap, so a
-    page-cut regression cannot hide behind a permissive fake."""
-    import pytest as _pytest
-
-    from cga_logs_to_kinesis_spark.streaming.faults import (
-        FirehoseFakeTransport,
-    )
-
-    tp = FirehoseFakeTransport("/tmp/_unused")
-    with _pytest.raises(ValueError):
-        tp.send("s", [(b"x", "k")] * 501)
-
-
-def test_transports_accept_str_payloads(tmp_path):
-    """The Transport contract accepts str and utf-8-encodes it
-    (DirStreamTransport/deliver_pages do); the Firehose double and
-    the signed wire builder must match instead of crashing on
-    bytes(str)."""
-    import base64
-    import json
-
-    from cga_logs_to_kinesis_spark.streaming.faults import (
-        FirehoseFakeTransport,
-    )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        build_put_records_request,
-    )
-
-    t = FirehoseFakeTransport(str(tmp_path / "fh"))
-    assert t.send("s", [("héllo\n", "k"), (b"raw\n", "k")]) == []
-    req = build_put_records_request(
-        stream="s", page=[("héllo", "k"), (b"raw", "k")],
-        region="us-east-1", access_key="AK", secret_key="SK",
-        amz_date="20260815T000000Z")
-    records = json.loads(req["body"])["Records"]
-    assert base64.b64decode(records[0]["Data"]) == "héllo".encode()
-    assert base64.b64decode(records[1]["Data"]) == b"raw"
+def test_boto3_transport_returns_failed_record_indices(kinesis):
+    tp, stub = kinesis
+    stub.add_response(
+        "put_records",
+        {"FailedRecordCount": 1, "Records": [
+            {"SequenceNumber": "1", "ShardId": "shardId-0"},
+            {"ErrorCode": "ProvisionedThroughputExceededException",
+             "ErrorMessage": "slow down"}]},
+        {"StreamName": "s1", "Records": [
+            {"Data": b"a", "PartitionKey": "k1"},
+            {"Data": b"b", "PartitionKey": "k2"}]})
+    assert tp.send("s1", [(b"a", "k1"), (b"b", "k2")]) == [1]
 
 
-def test_sigv4_transport_end_to_end_against_local_kinesis_fake(spark,
-                                                               tmp_path):
-    """The full no-boto3 wire path, offline: deliver_pages pages the
-    batch, sigv4_transport signs and POSTs x-amz-json-1.1 PutRecords
-    to a local http.server whose handler independently RE-SIGNS the
-    request (403 on mismatch), throttles poison records once (per-
-    record ErrorCode slots), and persists delivered Data — so the
-    page/retry machinery, the SigV4 signature, and the response
-    decode are all exercised together."""
-    import base64
-    import contextlib
-    import http.server
-    import json as _json
-    import threading
+def test_boto3_transport_missing_stream_fails_the_batch(kinesis):
+    """A wrong stream name cannot be fixed by retrying: the send raises
+    FatalDeliveryError, so the micro-batch fails and is replayed."""
+    from cga_logs_to_kinesis_spark.streaming.sink import FatalDeliveryError
 
-    from cga_logs_to_kinesis_spark.functions.credentials import (
-        Credentials, Provider,
-    )
-    from cga_logs_to_kinesis_spark.functions.sigv4 import sign_request
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        sigv4_transport,
-    )
+    tp, stub = kinesis
+    stub.add_client_error("put_records", "ResourceNotFoundException")
+    with pytest.raises(FatalDeliveryError):
+        tp.send("missing", [(b"a", "k")])
 
-    creds = Credentials("AKTEST", "SKTEST", "TOKTEST")
 
-    class StaticProv(Provider):
-        def get(self):
-            return creds
+def test_boto3_transport_throttled_request_is_retried(kinesis):
+    """Throttling raises the plain ClientError, which deliver_pages
+    retries with backoff; only FatalDeliveryError fails the batch."""
+    from botocore.exceptions import ClientError
 
-    delivered: list[tuple[bytes, str]] = []
-    throttled: set[bytes] = set()
-    seen_targets: list[str] = []
-
-    class KinesisFake(http.server.BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
-        def do_POST(self):
-            body = self.rfile.read(int(self.headers["Content-Length"]))
-            expect = sign_request(
-                access_key=creds.access_key,
-                secret_key=creds.secret_key,
-                region="us-east-1", service="kinesis", method="POST",
-                path="/", query=[],
-                headers={
-                    "Host": self.headers["Host"],
-                    "Content-Type": self.headers["Content-Type"],
-                    "X-Amz-Target": self.headers["X-Amz-Target"],
-                    "X-Amz-Date": self.headers["X-Amz-Date"],
-                },
-                payload=body, session_token=creds.session_token)
-            if self.headers["Authorization"] != expect.authorization:
-                self.send_error(403, "signature mismatch")
-                return
-            seen_targets.append(self.headers["X-Amz-Target"])
-            req = _json.loads(body)
-            out = []
-            for rec in req["Records"]:
-                data = base64.b64decode(rec["Data"])
-                if b"poison" in data and data not in throttled:
-                    throttled.add(data)
-                    out.append({"ErrorCode":
-                                "ProvisionedThroughputExceededException"})
-                else:
-                    delivered.append((data, rec["PartitionKey"]))
-                    out.append({"SequenceNumber": str(len(delivered)),
-                                "ShardId": "shardId-000000000000"})
-            resp = _json.dumps({
-                "FailedRecordCount": sum(1 for r in out
-                                         if "ErrorCode" in r),
-                "Records": out}).encode()
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(resp)))
-            self.end_headers()
-            self.wfile.write(resp)
-
-    @contextlib.contextmanager
-    def serve():
-        srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0),
-                                              KinesisFake)
-        t = threading.Thread(target=srv.serve_forever, daemon=True)
-        t.start()
-        try:
-            yield f"http://127.0.0.1:{srv.server_address[1]}"
-        finally:
-            srv.shutdown()
-            t.join(timeout=5)
-
-    rows = [((f"rec-{i}" + ("-poison" if i % 7 == 0 else "")).encode(),
-             f"k{i % 3}") for i in range(30)]
-    df = spark.createDataFrame(
-        rows, "data binary, partition_key string").coalesce(1)
-    with serve() as url:
-        tp = sigv4_transport("us-east-1", provider=StaticProv(),
-                             endpoint_url=url)
-        stats = deliver_pages(df, tp, SinkConfig(base_backoff_s=0))
-    assert int(stats["records_sent"].sum()) == 30
-    assert int(stats["records_dropped"].sum()) == 0
-    assert sorted(delivered) == sorted(rows), "lost/duplicated records"
-    assert set(seen_targets) == {"Kinesis_20131202.PutRecords"}
+    tp, stub = kinesis
+    stub.add_client_error("put_records",
+                          "ProvisionedThroughputExceededException")
+    with pytest.raises(ClientError):
+        tp.send("s1", [(b"a", "k")])

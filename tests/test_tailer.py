@@ -260,6 +260,55 @@ def test_tailed_pipeline_ships_appends_live(spark, tmp_path):
                                                "third"]
 
 
+def test_tailer_survives_a_failed_spool_write(spark, tmp_path, monkeypatch):
+    """A spool write that fails (a full disk) must not end the tailer
+    thread: after its retry wait the tailer ships the lines it still
+    holds, once, and lines appended later ship too.  The partial file
+    of the failed write is removed."""
+    import errno
+
+    real_replace = os.replace
+    failed = []
+
+    def replace_failing_once(src, dst):
+        if not failed and str(dst).endswith(".log"):
+            failed.append(dst)
+            raise OSError(errno.ENOSPC, "No space left on device")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace_failing_once)
+    watch = tmp_path / "logs"
+    watch.mkdir()
+    f = watch / "app.log"
+    f.write_text("first\nsecond\n")
+    out = tmp_path / "delivered"
+
+    cfg = PipelineConfig(watch_dir=str(watch), glob="*.log",
+                         origin="inst-e",
+                         checkpoint_dir=str(tmp_path / "ckpt"),
+                         flush_interval_s=1)
+    query, stats, tailer = build_tailed_pipeline(
+        spark, cfg, JsonDirTransport(str(out)),
+        spool_dir=str(tmp_path / "spool"))
+    try:
+        deadline = time.time() + 90
+        while stats.records_sent < 2 and time.time() < deadline:
+            time.sleep(0.2)
+        assert stats.records_sent == 2, "lines lost to the failed write"
+        assert failed and tailer.errors == 1
+
+        with f.open("ab") as fh:
+            fh.write(b"third\n")
+        while stats.records_sent < 3 and time.time() < deadline:
+            time.sleep(0.2)
+        assert tailer.is_alive()
+    finally:
+        query.stop()
+        tailer.stop()
+    assert sorted(delivered_messages(out)) == ["first", "second", "third"]
+    assert not list((tmp_path / "spool").glob(".*.tmp"))
+
+
 def test_tailed_pipeline_survives_rotation_live(spark, tmp_path):
     """Logrotate under a RUNNING pipeline: lines appended to the old
     inode after the last poll must still be delivered (end-to-end
