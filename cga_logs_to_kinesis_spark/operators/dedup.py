@@ -466,7 +466,6 @@ register(QuerySpec(
 # standard (b, r) S-curve.
 CHAR_K = 5
 CHAR_BANDS = 4
-CHAR_ROWS_PER_BAND = 2
 # Char-grams are far less selective than word shingles, so the shared
 # MAX_BUCKET=1000 cap lets candidate volume go superlinear: at sf0.1
 # the b=4/r=2 buckets emitted 1.1M pairs (9% of all n² pairs — the
@@ -480,7 +479,7 @@ CHAR_MAX_BUCKET = 100
 
 # 60-bit md5-prefix shingle fingerprints, re-hashed per minhash row by
 # an affine map mod a 30-bit prime.  One md5 per shingle instead of one
-# per (shingle x row) — at CHAR_BANDS x CHAR_ROWS_PER_BAND = 8 rows
+# per (shingle x row) — at CHAR_BANDS bands x 2 rows = 8 rows
 # that removes 7/8 of the md5 work, which dominated this query's CPU
 # (md5 over ~n_chars shingles per doc, 8x).  The affine family
 # (A_r * h + B_r) mod P is the textbook universal hash: distinct 60-bit

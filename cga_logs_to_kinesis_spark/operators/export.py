@@ -140,7 +140,6 @@ register(QuerySpec(
 # bucket dominated by it.
 
 TRAIN_SEED = "epoch0"
-SCHED_BUCKETS = 16
 
 
 def training_order_key(seed: str = TRAIN_SEED) -> Column:

@@ -308,7 +308,7 @@ register(QuerySpec(
 
 def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType surface: build, extract, keys/size — the Envelope
-    `tags` map's operation set (schema.py ENVELOPE.tags)."""
+    `tags` map's operation set (reference envelope.pb.go:99-118)."""
     tune_session(spark)
     ev = load_events(spark, sf_dir)
     k = F.from_json("props", "k INT").getField("k")

@@ -26,10 +26,11 @@ SOURCE_TYPE = "bosh"
 MESSAGE_TYPE_OUT = "OUT"
 EVENT_TYPE_LOG = "LogMessage"
 MAX_BATCH_SIZE = 500          # Kinesis PutRecords page cap
-BUFFER_SIZE = MAX_BATCH_SIZE * 10
 FLUSH_INTERVAL_S = 5
 MAX_ATTEMPTS_PER_RECORD = 5
-STAT_INTERVAL_S = 5
+# Input bytes one micro-batch admits (the file source's
+# maxBytesPerTrigger): the sink collects each batch on the driver.
+MAX_BYTES_PER_TRIGGER = 16 * 1024 * 1024
 
 
 def envelope_projection(lines: DataFrame, origin: str) -> DataFrame:

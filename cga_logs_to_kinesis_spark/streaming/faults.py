@@ -4,10 +4,12 @@ The reference's only test affordance is the `logProducer` stub sink for
 manual runs (reference main.go:349-369); these transports are its
 systematic equivalent: deterministic fault schedules reproducing the
 PutRecords partial-failure and whole-request-error shapes
-(kinesis.go:463-474), plus a filesystem transport whose output the
-driver can inspect.  They live in the package (not tests/) so Spark
-workers can unpickle them.  :func:`crash_after` injects the matching
-fault into any ``foreachBatch`` store sink (streaming/corpus.py).
+(kinesis.go:463-474), plus a filesystem transport whose output
+outlives the run.  The sink calls its transport on the driver, so a
+test may also read a transport's own state after a batch.  They are
+shared by several test modules.  :func:`crash_after` injects the
+matching fault into any ``foreachBatch`` store sink
+(streaming/corpus.py).
 """
 
 from __future__ import annotations
@@ -57,8 +59,8 @@ class CrashingTransport(Transport):
 
 
 class JsonDirTransport(Transport):
-    """Writes each page as one JSON file of [data, key] pairs —
-    executor-safe, inspectable from the driver via shared filesystem."""
+    """Writes each page as one JSON file of [data, key] pairs, which
+    a test reads back after the run."""
 
     def __init__(self, out_dir: str):
         self.out_dir = out_dir
@@ -79,10 +81,10 @@ class DieAfterPagesTransport(JsonDirTransport):
     JsonDirTransport, but once ``pages_before_crash`` pages exist it
     raises FatalDeliveryError and drops a fuse file — so the FIRST run
     dies with real side effects already committed, and any restart
-    (fuse present) delivers everything.  This is the executor-process-
-    kill scenario the exactly-once restart test replays; state lives
-    on the shared filesystem because the transport is re-pickled per
-    task and per run."""
+    (fuse present) delivers everything.  This is the process-kill
+    scenario the exactly-once restart test replays; state lives
+    on the filesystem so that the restart, which builds a new
+    transport, sees the fuse."""
 
     def __init__(self, out_dir: str, pages_before_crash: int):
         super().__init__(out_dir)

@@ -28,6 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from cga_logs_to_kinesis_spark.streaming.envelope import (
     FLUSH_INTERVAL_S,
+    MAX_BYTES_PER_TRIGGER,
     envelope_projection,
     envelope_to_json,
 )
@@ -56,7 +57,9 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig,
                    sink_cfg: SinkConfig | None = None,
                    ) -> tuple[StreamingQuery, DeliveryStats]:
     """Assemble and start the streaming query. Returns (query, stats)."""
-    lines = spark.readStream.text(cfg.watch_dir, pathGlobFilter=cfg.glob)
+    lines = (spark.readStream
+             .option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
+             .text(cfg.watch_dir, pathGlobFilter=cfg.glob))
     return _start(cfg, lines, transport, sink_cfg)
 
 

@@ -106,7 +106,7 @@ def envelope_from_protobuf(data: Column,
     if descriptor_path is None:
         raise NotImplementedError(
             "no compiled events.proto descriptor available in this "
-            "environment; use from_json with schema.ENVELOPE")
+            "environment; use the JSON wire format (envelope_to_json)")
     _gate(descriptor_path)
     pb = _protobuf_fns()
     return pb.from_protobuf(data, MESSAGE_NAME,

@@ -67,6 +67,8 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+from cga_logs_to_kinesis_spark.streaming.envelope import MAX_BYTES_PER_TRIGGER
+
 # Bounds append-to-visibility latency at poll + trigger; the reference
 # has tail's inotify (effectively 0) + the 5 s flush interval.
 POLL_INTERVAL_S = 0.2
@@ -92,7 +94,10 @@ class TailFollower:
     watch_dir: str
     spool_dir: str
     glob: str = "*.log"
-    max_chunk_bytes: int = 64 * 1024 * 1024   # bound one spool file
+    # one read of one file; a spool file stays under twice this plus
+    # its line prefixes, and the source admits at least one spool file
+    # per micro-batch, so this also bounds a batch's size
+    max_chunk_bytes: int = MAX_BYTES_PER_TRIGGER
     _states: dict[str, _FileState] = field(default_factory=dict)
     # Open handle per watched path, pinned to the inode recorded in
     # _states — this is what lets rotation/deletion drain the old
@@ -387,8 +392,9 @@ def read_spool(spark, spool_dir: str, watch_dir: str):
     watched file it was appended to, as the tailer globbed it)."""
     from pyspark.sql import functions as F
 
-    lines = spark.readStream.text(spool_dir, lineSep="\n",
-                                  pathGlobFilter="*.log")
+    lines = (spark.readStream
+             .option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
+             .text(spool_dir, lineSep="\n", pathGlobFilter="*.log"))
     parts = F.split("value", "\t", 2)
     return lines.select(parts[1].alias("value"), F.concat(
         F.lit(os.path.join(watch_dir, "")),

@@ -33,7 +33,7 @@ UNREACHED = {
     f"{PKG}.streaming.archive": "next cut: only tests use it",
     f"{PKG}.streaming.protobuf_codec": "next cut: only tests use it",
     f"{PKG}.sources.pages": "next cut: only tests use it",
-    f"{PKG}.streaming.faults": "test fakes Spark workers must unpickle",
+    f"{PKG}.streaming.faults": "fake transports shared by test modules",
 }
 
 

@@ -2,9 +2,10 @@
 fault-injecting transports reproducing PutRecordsResp partial failures
 (reference kinesis.go:463-474, batchproducer.go:326-444).
 
-Transports run inside executor Python workers (mapInPandas), so tests
-assert via the returned per-page stats and via files written to the
-shared local filesystem — never via driver-side transport state.
+``deliver_pages`` collects each batch and calls its transport on the
+driver, so tests assert via the returned per-key stats, via files a
+transport wrote, and via the transport's own state (the boto3
+transport's stubbed client); a pin keeps each call at one Spark job.
 """
 
 from __future__ import annotations
@@ -13,6 +14,10 @@ import json
 
 import pytest
 
+from cga_logs_to_kinesis_spark.streaming.envelope import (
+    envelope_projection,
+    envelope_to_json,
+)
 from cga_logs_to_kinesis_spark.streaming.faults import (
     CrashingTransport,
     JsonDirTransport,
@@ -38,8 +43,8 @@ def test_page_cut_at_500(spark, tmp_path):
     assert sorted(len(p) for p in pages) == [200, 500, 500]
     assert sorted(d for p in pages for d, _k in p) == sorted(
         f"record-{i}" for i in range(1200))
-    # the stats fold those pages Spark-side: one row per partition
-    # key, O(keys) on the driver regardless of batch size
+    # the stats fold those pages into one row per first key, O(keys)
+    # whatever the batch size
     assert len(agg) == 1
     assert int(agg["pages"].iloc[0]) == 3
     assert int(agg["records_sent"].sum()) == 1200
@@ -130,7 +135,7 @@ def kinesis(monkeypatch):
     monkeypatch.setenv("AWS_ACCESS_KEY_ID", "AKTEST")
     monkeypatch.setenv("AWS_SECRET_ACCESS_KEY", "SKTEST")
     tp = boto3_transport("us-east-1")
-    stub = Stubber(tp.client())
+    stub = Stubber(tp.client)
     with stub:
         yield tp, stub
     stub.assert_no_pending_responses()
@@ -171,3 +176,83 @@ def test_boto3_transport_throttled_request_is_retried(kinesis):
                           "ProvisionedThroughputExceededException")
     with pytest.raises(ClientError):
         tp.send("s1", [(b"a", "k")])
+
+
+def test_deliver_pages_through_boto3_transport(spark, kinesis):
+    """The sink pages on the driver, so the transport it calls is the
+    one the test holds, stubbed client included.  1,200 records over
+    two keys go out as PutRecords calls of 500/500/200 in collect
+    order; the one record the last call refuses goes out alone in a
+    fourth call."""
+    tp, stub = kinesis
+    rows = [(f"record-{i}".encode(), "k1" if i < 600 else "k2")
+            for i in range(1200)]
+
+    def params(page):
+        return {"StreamName": "s1", "Records": [
+            {"Data": d, "PartitionKey": k} for d, k in page]}
+
+    def accepted(n):
+        return {"Records": [
+            {"SequenceNumber": str(i), "ShardId": "shardId-0"}
+            for i in range(n)]}
+
+    refused = accepted(200)
+    refused["FailedRecordCount"] = 1
+    refused["Records"][7] = {
+        "ErrorCode": "ProvisionedThroughputExceededException",
+        "ErrorMessage": "slow down"}
+    stub.add_response("put_records", accepted(500), params(rows[:500]))
+    stub.add_response("put_records", accepted(500), params(rows[500:1000]))
+    stub.add_response("put_records", refused, params(rows[1000:]))
+    stub.add_response("put_records", accepted(1), params([rows[1007]]))
+
+    df = spark.createDataFrame(
+        rows, "data binary, partition_key string").coalesce(1)
+    stats = deliver_pages(df, tp, SinkConfig(stream_name="s1"))
+    got = {r["first_key"]: r for r in stats.to_dict("records")}
+    assert {k: (r["pages"], r["records_sent"], r["attempts"])
+            for k, r in got.items()} == {"k1": (2, 1000, 1),
+                                          "k2": (1, 200, 2)}
+    assert int(stats["records_sent"].sum()) == 1200
+    assert int(stats["records_dropped"].sum()) == 0
+    assert int(stats["request_errors"].sum()) == 0
+
+
+_PYTHON_NODES = ("MapInPandas", "PythonMapInArrow", "BatchEvalPython",
+                 "ArrowEvalPython", "FlatMapGroupsInPandas")
+
+
+def test_deliver_pages_runs_one_spark_job(spark, tmp_path):
+    """One call runs one Spark job of one stage, and its plan has no
+    exchange and no Python node: a trigger pays for no shuffle and no
+    Python worker, only the scan, the projection and the collect."""
+    watch = tmp_path / "logs"
+    watch.mkdir()
+    for i in range(4):
+        (watch / f"f{i}.log").write_text(
+            "".join(f"f{i}-line-{j}\n" for j in range(300)))
+    df = envelope_to_json(envelope_projection(
+        spark.read.text(str(watch)), "inst-j"))
+    sc = spark.sparkContext
+    group = "deliver-pages-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        stats = deliver_pages(df, JsonDirTransport(str(tmp_path / "out")),
+                              SinkConfig())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert int(stats["records_sent"].sum()) == 1200
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    plans = [executions.apply(i).physicalPlanDescription()
+             for i in range(executions.size())
+             if executions.apply(i).description() == group]
+    assert len(plans) == 1
+    for node in ("Exchange", *_PYTHON_NODES):
+        assert node not in plans[0], plans[0]

@@ -4,15 +4,19 @@ ship without waiting for rotation."""
 
 from __future__ import annotations
 
+import base64
 import json
 import os
 import time
+from collections import Counter
 
+from cga_logs_to_kinesis_spark.streaming.envelope import MAX_BYTES_PER_TRIGGER
 from cga_logs_to_kinesis_spark.streaming.faults import JsonDirTransport
 from cga_logs_to_kinesis_spark.streaming.pipeline import (
     PipelineConfig,
     build_tailed_pipeline,
 )
+from cga_logs_to_kinesis_spark.streaming.sink import Transport
 from cga_logs_to_kinesis_spark.streaming.tailer import (
     TailFollower,
     prune_spool,
@@ -382,6 +386,49 @@ def test_tailed_drain_ships_files_bigger_than_one_chunk(spark, tmp_path,
     # every batch is committed, so every spool file can go
     prune_spool(str(ckpt), str(spool), -1)
     assert not list(spool.glob("*.log"))
+
+
+class _CountingTransport(Transport):
+    """Counts every accepted record's decoded message; the sink calls
+    it on the driver, so the test reads the counts directly."""
+
+    def __init__(self):
+        self.seen: Counter[str] = Counter()
+
+    def send(self, stream, page):
+        for data, _key in page:
+            raw = json.loads(data)["log_message"]["message"]
+            self.seen[base64.b64decode(raw).decode()] += 1
+        return []
+
+
+def test_tailed_drain_bounds_each_micro_batch(spark, tmp_path):
+    """The sink collects each micro-batch on the driver, so the file
+    source admits at most MAX_BYTES_PER_TRIGGER of spool per batch: a
+    drain whose spool is bigger runs as several batches, and every
+    line arrives exactly once."""
+    watch = tmp_path / "logs"
+    watch.mkdir()
+    n = MAX_BYTES_PER_TRIGGER // 100 + 12_000       # lines of 101 bytes
+    lines = [f"{i:07d}-" + "x" * 92 for i in range(n)]
+    (watch / "a.log").write_text("".join(f"{ln}\n" for ln in lines))
+    spool = tmp_path / "spool"
+    cfg = PipelineConfig(watch_dir=str(watch), glob="*.log",
+                         origin="inst-b",
+                         checkpoint_dir=str(tmp_path / "ckpt"),
+                         available_now=True)
+    tp = _CountingTransport()
+    query, stats, tailer = build_tailed_pipeline(spark, cfg, tp,
+                                                 spool_dir=str(spool))
+    query.awaitTermination(300)
+    tailer.stop()
+    assert sum(f.stat().st_size
+               for f in spool.glob("*.log")) > MAX_BYTES_PER_TRIGGER
+    batches = [p["numInputRows"] for p in query.recentProgress
+               if p["numInputRows"]]
+    assert len(batches) >= 2 and sum(batches) == n
+    assert stats.records_sent == n
+    assert tp.seen == Counter(lines)
 
 
 def test_tailed_pipeline_keys_records_by_watched_file(spark, tmp_path):
